@@ -23,35 +23,11 @@ from bravewebcrawler_spark.operators import packing as PK
 from bravewebcrawler_spark.operators import ranking as RK
 from bravewebcrawler_spark.operators import sampling as SP
 from bravewebcrawler_spark.operators import similarity as SIM
+from bravewebcrawler_spark.sources.tables import spread
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Scan-parallelism guard for compute-heavy map work (optimization guide
-    §2.5 "input skew ... repartition immediately after the read").
-
-    The sandbox testdata ships each table as ONE parquet file with one row
-    group (documents/events/embeddings), so every scan opens as a single
-    input split and all downstream per-row work — the shingle+md5 churn of
-    the dedup ladder, the regex batteries, the text-metrics battery — runs in
-    ONE task regardless of core count (measured: dedup_minhash_lsh 21.4 s at
-    sf1.0/local[32] with a 3-task map stage doing ~all the work). One small
-    round-robin exchange right after the read (documents at sf1.0: ~16 MB)
-    spreads rows across the cluster. At production scale inputs arrive as
-    many splits and this is a no-op — the partition-count check is plan
-    metadata, not a job. Results are unaffected: consumers below a spread
-    are per-row deterministic expressions, exact (integer/min/max/count)
-    aggregates, or float aggregates whose input order is already arbitrary
-    today (corpus_prep's avg(quality) reaches its groupBy through shuffled
-    joins). The TPC-H revenue sums — double sums whose addition order is
-    TODAY still the single-split scan order — deliberately do not use it."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 # =====================================================================
@@ -181,7 +157,7 @@ def _facts_text():
 
 def f_regex_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F7-F11 extraction battery (google_harvester.py:13-16,61-64)."""
-    docs = _spread(_t(spark, sf_dir, "documents")).withColumn("t2", _facts_text())
+    docs = spread(_t(spark, sf_dir, "documents")).withColumn("t2", _facts_text())
     return docs.select(
         "doc_id",
         X.che_id_col(F.col("t2")).alias("che_id"),
@@ -203,7 +179,7 @@ def facts_per_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential oracle)."""
     from bravewebcrawler_spark.plans.facts import battery_cols, merge_facts_per_seed
 
-    docs = _spread(_t(spark, sf_dir, "documents")).withColumn("t2", _facts_text())
+    docs = spread(_t(spark, sf_dir, "documents")).withColumn("t2", _facts_text())
     src = docs.select(
         (F.col("doc_id") % 200).alias("seed_id"),
         (F.col("doc_id") % 3).alias("tier"),
@@ -422,9 +398,9 @@ def _neardup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = docs.where(F.col("doc_id") % 7 == 0).select(
         (F.col("doc_id") + 200000).alias("doc_id"), "text"
     )
-    # _spread: the union reads a single-split file 3x → 3 map tasks carry the
+    # spread: the union reads a single-split file 3x → 3 map tasks carry the
     # entire shingle/md5/signature churn of every dedup consumer (guide §2.5)
-    return _spread(docs.unionByName(near).unionByName(exact))
+    return spread(docs.unionByName(near).unionByName(exact))
 
 
 _SQL_CORPUS = """
@@ -564,7 +540,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     return docs.select("doc_id", TX.fingerprint_col(F.col("text")).alias("fp"))
 
 
@@ -656,7 +632,7 @@ def text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # composition stepped interpreted HOF lambdas per token/line/gram across
     # ~10 metrics; values are bit-identical by the per-field argument in
     # _metrics_batch_fn, and stopword_ratio keeps its column-side rounding.
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     m = TX.text_metrics_arrow(docs, "doc_id", "text")
     return m.select(
         "doc_id", "lang_guess", "s_en", "s_de", "s_fr", "quality",
@@ -706,7 +682,7 @@ def decontam_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast semi-join — the corpus is never shuffled."""
     from bravewebcrawler_spark.operators.decontam import contamination_hits
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     bench = docs.where(F.col("doc_id") % 83 == 0)
     corp = docs.where(F.col("doc_id") % 83 != 0)
     return contamination_hits(corp, bench, "doc_id", "text", "text", k=_DECONTAM_K)
@@ -749,7 +725,7 @@ def corpus_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     actual partition contents over a deterministic global (u, id) order), so
     the spread only parallelizes the token-count scan + the range-partition
     sampling pass."""
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     d = docs.select(
         "doc_id", TX.ws_token_count_col(F.col("text")).cast("long").alias("n_tokens")
     )
@@ -782,7 +758,7 @@ def host_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns) is pytest-asserted within its error bound in the same test
     file — HLL sketches are not bit-identical across engines, so the
     registry row keeps the exact distinct count."""
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     return docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum(TX.ws_token_count_col(F.col("text")).cast("long")).alias("total_tokens"),

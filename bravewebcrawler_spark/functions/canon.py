@@ -140,11 +140,6 @@ def is_blacklisted_col(host: Column, blacklist: tuple[str, ...] = BLACKLIST) -> 
     return F.exists(arr, lambda b: F.contains(host, b))
 
 
-def is_ch_domain_col(host: Column) -> Column:
-    """Reference P4: host.endswith('.ch') (search_common.py:168,265)."""
-    return F.endswith(host, F.lit(".ch"))
-
-
 # --------------------------------------------------------------- Python twin
 _url_re_py = re.compile(_URL_RE)
 

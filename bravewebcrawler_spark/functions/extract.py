@@ -67,11 +67,6 @@ def parse_outlinks_pd(html: pd.Series) -> pd.Series:
 
 
 # ----------------------------------------------------------- column battery
-def title_col(html: Column) -> Column:
-    """F6: <title> extraction, case-insensitive+dotall (search_common.py:411-412)."""
-    return F.regexp_extract(html, r"(?is)<title>(.*?)</title>", 1)
-
-
 def che_id_col(text: Column) -> Column:
     """F7: Swiss company id (google_harvester.py:13)."""
     return F.regexp_extract(text, r"CHE-\d{3}\.\d{3}\.\d{3}", 0)
@@ -95,8 +90,3 @@ def founded_year_col(text: Column) -> Column:
 def address_col(text: Column) -> Column:
     """F11: address after Sitz:/Adresse: label (google_harvester.py:61-64)."""
     return F.regexp_extract(text, r"(?i)(?:Sitz|Adresse):\s*([^<\n]*)", 1)
-
-
-def legal_suffix_strip_col(name: Column) -> Column:
-    """F4: normalize company name (search_common.py:414)."""
-    return F.trim(F.regexp_replace(F.lower(name), r"\s+(ag|gmbh|sa|sàrl)\b|[.,]", ""))

@@ -33,14 +33,6 @@ NUM_HASHES = 16
 NUM_BANDS = 4  # 4 rows per band
 
 
-def _hash_a(j: int) -> int:
-    return 2 * j + 3
-
-
-def _hash_b(j: int) -> int:
-    return 5 * j + 7
-
-
 def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Exact duplicate groups: (keeper_id, n_dups) per distinct text hash."""
     return (
@@ -729,14 +721,14 @@ def simhash_near_pairs(
 def _scratch_ckpt(spark, prefix: str):
     """Per-round lineage truncation for iterative graph loops: write the
     round's state to scratch parquet and read it back (the engine's
-    plans/checkpoint.py pattern). Both CC round bodies reference their input
-    several times, so without truncation the Catalyst plan grows
+    plans/checkpoint.py pattern). The CC round body references its input
+    more than once, so without truncation the Catalyst plan grows
     exponentially in rounds (measured: driver GC OOM during plan
     canonicalization by round ~10). At cluster scale the scratch dir must be
     distributed storage — defaults to $SPARK_GRAFT_STATE_DIR_BASE (the same
     knob the crawl state uses), falling back to local tmp.
 
-    Returns (work_dir, ckpt(df, k) -> DataFrame, cleanup()).
+    Returns (ckpt(df, k) -> DataFrame, cleanup()).
     """
     import os
     import shutil
@@ -750,7 +742,7 @@ def _scratch_ckpt(spark, prefix: str):
         df.write.mode("overwrite").parquet(path)
         return spark.read.parquet(path)
 
-    return work, ckpt, (lambda: shutil.rmtree(work, ignore_errors=True))
+    return ckpt, (lambda: shutil.rmtree(work, ignore_errors=True))
 
 
 class _ScratchOwner:
@@ -770,133 +762,6 @@ class _ScratchOwner:
         return out
 
 
-def _finish_cc_result(out: DataFrame, cleanup, cache_registry: list | None) -> DataFrame:
-    """Shared tail of both CC variants: materialize the persisted result,
-    then either hand (result + scratch dir) ownership to the registry via
-    :class:`_ScratchOwner`, or — with no registry — delete the scratch
-    eagerly. The eager path assumes the persisted copy survives until the
-    result is consumed (always true in local mode; on a cluster pass a
-    ``cache_registry`` so scratch outlives the cache)."""
-    out.count()  # materialize before anything touches the scratch checkpoints
-    if cache_registry is not None:
-        cache_registry.append(_ScratchOwner(out, cleanup))
-    else:
-        cleanup()
-    return out
-
-
-def _star_contraction_components(
-    edges: DataFrame,
-    nodes: DataFrame,
-    id_col: str,
-    src: str,
-    dst: str,
-    max_iters: int,
-    cache_registry: list | None,
-    stats: dict | None,
-) -> DataFrame:
-    """Alternating large-star/small-star contraction (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) — the
-    adversarial-topology variant of :func:`connected_components`.
-
-    Each round rewires the edge set toward a star forest centered at each
-    component's minimum node:
-      large-star(u): every neighbor v > u is connected to min(Γ(u) ∪ {u})
-      small-star(u): every neighbor v < u, and u itself, are connected to
-                     min of the smaller neighborhood
-    Connectivity is preserved by both operations and the edge set converges
-    to stars in O(log^2 n) rounds (O(log n) in practice for the alternating
-    two-phase) — bounded by the LOGARITHM of the longest path, where
-    min-label propagation needs O(diameter) rounds. Convergence is exact
-    set equality of the oriented edge list (count match + empty exceptAll —
-    no fingerprint collisions). Shuffles stay on node ids; per-round work is
-    two groupBy-min passes + two equi-joins over the current edge set.
-
-    Each round's edge set is checkpointed to scratch parquet and read back
-    (:func:`_scratch_ckpt`) — lineage truncation, without which the round
-    body's ~5 references to its input grow the Catalyst plan exponentially.
-    """
-    from pyspark import StorageLevel
-
-    work, ckpt, cleanup = _scratch_ckpt(edges.sparkSession, "bwc-star-")
-
-    # normalize: oriented (big u, small v), no self-loops, distinct
-    from pyspark.sql import Observation
-
-    cur = ckpt(
-        edges.select(F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
-        .distinct(),
-        0,
-    )
-    cur_n = cur.count()  # parquet metadata count — no scan
-    rounds = 0
-    converged = False
-    for _ in range(max_iters):
-        sym = cur.union(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        # large-star: per node u, m = min(neighbors ∪ {u}); connect v>u to m
-        lmin = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        large = (
-            sym.join(lmin, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star over the (big → small) orientation: per node u,
-        # m = min smaller neighbor; connect every smaller neighbor and u to m
-        smin = large.groupBy("u").agg(F.min("v").alias("m"))
-        joined = large.join(smin, "u")
-        rounds += 1
-        # the edge count rides an Observation on the checkpoint write that
-        # runs anyway — no separate count job per round
-        obs = Observation()
-        new = ckpt(
-            joined.select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(joined.select("u", F.col("m").alias("v")))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-            .observe(obs, F.count(F.lit(1)).alias("n")),
-            rounds,
-        )
-        new_n = obs.get["n"]
-        # exact set-equality convergence (both sides distinct + oriented);
-        # the exceptAll runs only when the cheap count gate passes
-        if new_n == cur_n and new.exceptAll(cur).count() == 0:
-            converged = True
-            break
-        cur, cur_n = new, new_n
-    if stats is not None:
-        stats["rounds"] = rounds
-    # stars point every non-center node at its component min; centers and
-    # isolated nodes map to themselves
-    labels = cur.select(F.col("u").alias("node"), F.col("v").alias("comp"))
-    if not converged:
-        # The edge set is not yet a star forest: a node can carry several
-        # (node, comp) rows, so a bare left join would duplicate rows and
-        # return inconsistent labels silently (ADVICE r4). Collapse to the
-        # per-node min (a consistent-if-unconverged label) and warn loudly —
-        # practically unreachable at max_iters=50 (rounds are O(log n)).
-        import warnings
-
-        warnings.warn(
-            f"star-contraction did not converge in {max_iters} rounds; "
-            "returning per-node min labels, which may under-merge components",
-            RuntimeWarning,
-            stacklevel=3,
-        )
-        labels = labels.groupBy("node").agg(F.min("comp").alias("comp"))
-    out = (
-        nodes.select(F.col(id_col).cast("long").alias("node"))
-        .distinct()
-        .join(labels, "node", "left")
-        .select("node", F.coalesce("comp", "node").alias("comp"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    return _finish_cc_result(out, cleanup, cache_registry)
-
-
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame,
@@ -905,8 +770,6 @@ def connected_components(
     dst: str = "id_b",
     max_iters: int = 50,
     cache_registry: list | None = None,
-    algorithm: str = "label",
-    stats: dict | None = None,
 ) -> DataFrame:
     """Duplicate-cluster assignment: connected components over an undirected
     near-dup pair list — ``(node, component)`` with component = the minimum
@@ -927,17 +790,9 @@ def connected_components(
     decimal(38,0) so 10^10 nodes cannot overflow). No all-pairs anything:
     at 10^10 edges each round shuffles on node ids only.
 
-    ``algorithm`` selects the round body:
-      "label" (default) — min-label propagation above: fewest shuffles per
-          round, O(diameter) rounds. The right pick for dedup-cluster
-          topology (band collisions make near-cliques, diameter 1-3).
-      "star" — alternating large-star/small-star contraction
-          (:func:`_star_contraction_components`): O(log n)-ish rounds
-          regardless of diameter — the fallback for adversarially long
-          chains where O(diameter) propagation would not terminate in any
-          reasonable round budget. Both variants agree exactly
-          (tests/test_components.py proves it on clique+chain graphs).
-    ``stats`` (optional dict) receives {"rounds": k} for either variant.
+    An adversarially long chain needs more than ``max_iters`` rounds; the
+    loop then stops and warns (``RuntimeWarning``) rather than returning
+    under-merged labels silently.
 
     Each round's state is checkpointed to scratch parquet and read back
     (:func:`_scratch_ckpt` — lineage truncation). The FINAL result is
@@ -950,11 +805,6 @@ def connected_components(
     """
     from pyspark import StorageLevel
 
-    if algorithm == "star":
-        return _star_contraction_components(
-            edges, nodes, id_col, src, dst, max_iters, cache_registry, stats
-        )
-    assert algorithm == "label", f"unknown algorithm: {algorithm}"
     und = (
         edges.select(F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v"))
         .union(edges.select(F.col(dst).cast("long").alias("u"), F.col(src).cast("long").alias("v")))
@@ -970,20 +820,19 @@ def connected_components(
     # per-round scratch checkpoint: the round body references `cur` twice,
     # so without lineage truncation the plan doubles per round (driver OOM
     # on long chains — see _scratch_ckpt)
-    work, ckpt, cleanup = _scratch_ckpt(edges.sparkSession, "bwc-cc-")
+    ckpt, cleanup = _scratch_ckpt(edges.sparkSession, "bwc-cc-")
     from pyspark.sql import Observation
 
     ssum = F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
     # Round-6: propagate labels over EDGE-ENDPOINT nodes only. A node that
     # appears in no pair has no neighbors — its label can never change — so
     # dragging the full node table through every round's join + groupBy-min
-    # is pure overhead; it rejoins at the end via the left-join + coalesce
-    # (exactly the star variant's tail). In a real corpus near-dup graph the
-    # overwhelming majority of docs are singletons, so the per-round state
-    # shrinks from |corpus| to |endpoints| at any scale. Identical labels by
-    # construction: endpoints see the same propagation; non-endpoints were
-    # (node, node) throughout and coalesce(comp, node) restores precisely
-    # that row.
+    # is pure overhead; it rejoins at the end via the left-join + coalesce.
+    # In a real corpus near-dup graph the overwhelming majority of docs are
+    # singletons, so the per-round state shrinks from |corpus| to |endpoints|
+    # at any scale. Identical labels by construction: endpoints see the same
+    # propagation; non-endpoints were (node, node) throughout and
+    # coalesce(comp, node) restores precisely that row.
     # No round-0 checkpoint (round-6): the initial label table derives from
     # the PERSISTED symmetric edge list in one narrow step, so round 1 can
     # consume it directly — the parquet write+read and the separate initial
@@ -1031,8 +880,6 @@ def connected_components(
             RuntimeWarning,
             stacklevel=2,
         )
-    if stats is not None:
-        stats["rounds"] = rounds
     out = (
         nodes.select(F.col(id_col).cast("long").alias("node"))
         .distinct()
@@ -1040,10 +887,16 @@ def connected_components(
         .select("node", F.coalesce("comp", "node").alias("comp"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    result = _finish_cc_result(out, cleanup, cache_registry)
-    # und can only be released after the result is materialized: the final
-    # ckpt'd `cur` no longer references it, but materialization above runs
-    # through the left join whose build may still be in flight when this
-    # returns — _finish_cc_result has already count()'d, so release now.
+    out.count()  # materialize before anything touches the scratch checkpoints
+    # With a registry, the registry owns result + scratch dir together; with
+    # none, the scratch goes now, which assumes the persisted copy survives
+    # until the result is consumed (always true in local mode; on a cluster
+    # pass a ``cache_registry`` so scratch outlives the cache).
+    if cache_registry is not None:
+        cache_registry.append(_ScratchOwner(out, cleanup))
+    else:
+        cleanup()
+    # und can only be released once the result is materialized (the count
+    # above); the final ckpt'd `cur` no longer references it.
     und.unpersist()
-    return result
+    return out

@@ -63,13 +63,3 @@ def missing_field_counts(df: DataFrame, fields: list[str]) -> DataFrame:
             for f in fields
         ]
     )
-
-
-def gap_driven_filter(df: DataFrame, fields: list[str]) -> DataFrame:
-    """Rows still missing any field — the input of stage k+1 in the staged
-    enrichment pattern (google_search.py:85-93: scrape ONLY residual gaps)."""
-    any_missing = reduce(
-        lambda a, b: a | b,
-        [F.col(f).isNull() | (F.col(f) == "") | (F.col(f) == "null") for f in fields],
-    )
-    return df.where(any_missing)

@@ -27,8 +27,6 @@ a hash is a no-op, which is what makes resume replays safe).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -61,36 +59,6 @@ def empty_bloom(spark: SparkSession, n_buckets: int) -> DataFrame:
     return spark.createDataFrame([], BLOOM_SCHEMA)
 
 
-def bloom_insert(bloom: DataFrame, hashes: DataFrame, n_buckets: int, m_bits: int) -> DataFrame:
-    """Fold new url_hash rows into the bucketed filters (applyInPandas).
-
-    ``hashes``: a DataFrame with a ``url_hash`` column. Missing buckets are
-    created; untouched buckets pass through unchanged (no full-state rewrite
-    beyond the union — at scale the state table is partitioned by bucket and
-    only dirty buckets are rewritten).
-    """
-    # h = -1 marks existing-filter rows: a NULLABLE long column would reach
-    # pandas as float64 and corrupt 60-bit hashes above 2^53.
-    tagged_new = hashes.select(
-        F.pmod(F.col("url_hash"), F.lit(n_buckets)).cast("int").alias("bucket"),
-        F.col("url_hash").alias("h"),
-        F.lit(None).cast("binary").alias("filter"),
-    )
-    existing = bloom.select("bucket", F.lit(-1).cast("long").alias("h"), "filter")
-
-    def update(pdf: pd.DataFrame) -> pd.DataFrame:
-        bucket = int(pdf["bucket"].iloc[0])
-        filt = np.zeros(m_bits // 8, dtype=np.uint8)
-        for b in pdf["filter"].dropna():
-            filt |= np.frombuffer(bytes(b), dtype=np.uint8)
-        hs = pdf.loc[pdf["h"] >= 0, "h"].to_numpy(dtype=np.int64)
-        if len(hs):
-            _set_bits(filt, _bit_positions(hs, m_bits))
-        return pd.DataFrame({"bucket": [bucket], "filter": [filt.tobytes()]})
-
-    return existing.unionByName(tagged_new).groupBy("bucket").applyInPandas(update, BLOOM_SCHEMA)
-
-
 def bloom_insert_delta(
     bloom: DataFrame, hashes: DataFrame, n_buckets: int, m_bits: int
 ) -> tuple[DataFrame, DataFrame]:
@@ -99,9 +67,9 @@ def bloom_insert_delta(
     ``updated`` holds ONLY the buckets that received hashes this round — the
     O(delta) rows a round commit writes; ``full`` is ``updated`` unioned with
     the untouched buckets passing through JVM-side (no Arrow round-trip, no
-    rewrite). ``bloom_insert`` above funnels every existing bucket through
-    applyInPandas each call — correct, but O(total filter bytes) per round,
-    which at a 10^10 frontier is a per-round full-state rewrite.
+    rewrite). Funnelling every existing bucket through applyInPandas each
+    call would be O(total filter bytes) per round — at a 10^10 frontier a
+    per-round full-state rewrite.
     """
     tagged_new = hashes.select(
         F.pmod(F.col("url_hash"), F.lit(n_buckets)).cast("int").alias("bucket"),
@@ -127,199 +95,16 @@ def bloom_insert_delta(
     return updated, updated.unionByName(untouched)
 
 
-def bloom_split(
-    candidates: DataFrame, bloom: DataFrame, n_buckets: int, m_bits: int, hash_col: str = "url_hash"
-) -> DataFrame:
-    """Tag candidates with ``maybe_seen``: False is authoritative (no false
-    negatives); True must be confirmed by the exact anti-join.
-
-    Implemented as a broadcast-free co-partitioned join on bucket + a
-    vectorized test per Arrow batch (cogroup/applyInPandas)."""
-    cand = candidates.withColumn("__bucket", F.pmod(F.col(hash_col), F.lit(n_buckets)).cast("int"))
-    blm = bloom.withColumnRenamed("bucket", "__bucket")
-
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in candidates.schema.fields
-    ) + ", maybe_seen boolean"
-
-    def test(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return pd.DataFrame(columns=[*left.columns, "maybe_seen"]).drop(columns=["__bucket"], errors="ignore").iloc[0:0]
-        hs = left[hash_col].to_numpy(dtype=np.int64)
-        if right.empty or right["filter"].dropna().empty:
-            maybe = np.zeros(len(hs), dtype=bool)
-        else:
-            filt = np.frombuffer(bytes(right["filter"].dropna().iloc[0]), dtype=np.uint8)
-            maybe = _test_bits(filt, _bit_positions(hs, m_bits))
-        res = left.drop(columns=["__bucket"])
-        res["maybe_seen"] = maybe
-        return res
-
-    return (
-        cand.groupBy("__bucket")
-        .cogroup(blm.groupBy("__bucket"))
-        .applyInPandas(test, out_schema)
-    )
-
-
-# --------------------------------------------------------------------------
-# Cuckoo-filter variant (north rule: "bloom/cuckoo"). Same contract as the
-# bloom: no false negatives, the exact join stays the authority. The cuckoo's
-# edge over bloom is DELETION (e.g. scheduling a re-crawl of a stale URL
-# without rebuilding the filter) at a similar space budget.
-# --------------------------------------------------------------------------
-CUCKOO_SLOTS = 4
-_FP_MUL = np.int64(0x5BD1E995)
-
-
-def _cuckoo_parts(hashes: np.ndarray, n_table_buckets: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(fingerprint, i1, i2) for each hash; fp is 16-bit and never 0.
-
-    ``n_table_buckets`` MUST be a power of two: the alternate index is
-    i ^ (g(fp) & mask), which is involutive (alt(alt(i)) == i) — required for
-    the eviction walk to stay within each fingerprint's two legal buckets.
-    """
-    assert n_table_buckets & (n_table_buckets - 1) == 0, "table_buckets must be a power of 2"
-    mask = np.int64(n_table_buckets - 1)
-    fp = ((hashes >> np.int64(40)) & np.int64(0xFFFF)).astype(np.int64)
-    fp = np.where(fp == 0, np.int64(1), fp)
-    i1 = hashes & mask
-    i2 = i1 ^ ((fp * _FP_MUL) & mask)
-    return fp.astype(np.uint16), i1, i2
-
-
-def _alt_index(i: int, fp: int, n: int) -> int:
-    return int(np.int64(i) ^ ((np.int64(fp) * _FP_MUL) & np.int64(n - 1)))
-
-
-def cuckoo_insert(cuckoo: DataFrame, hashes: DataFrame, n_buckets: int, table_buckets: int) -> DataFrame:
-    """Fold url_hash rows into per-partition cuckoo tables (applyInPandas).
-
-    ``table_buckets``: cuckoo buckets per partition (x CUCKOO_SLOTS slots of
-    uint16 fingerprints). Size to <= ~90% load or insertion fails loudly —
-    the engine's default seen-set is the bloom; the cuckoo exists for the
-    deletable variant.
-    """
-    tagged_new = hashes.select(
-        F.pmod(F.col("url_hash"), F.lit(n_buckets)).cast("int").alias("bucket"),
-        F.col("url_hash").alias("h"),
-        F.lit(None).cast("binary").alias("filter"),
-    )
-    existing = cuckoo.select("bucket", F.lit(-1).cast("long").alias("h"), "filter")
-
-    def update(pdf: pd.DataFrame) -> pd.DataFrame:
-        bucket = int(pdf["bucket"].iloc[0])
-        table = np.zeros(table_buckets * CUCKOO_SLOTS, dtype=np.uint16)
-        for b in pdf["filter"].dropna():
-            prev = np.frombuffer(bytes(b), dtype=np.uint16)
-            table = np.where(table == 0, prev, table)  # disjoint rebuild merge
-        hs = pdf.loc[pdf["h"] >= 0, "h"].to_numpy(dtype=np.int64)
-        fps, i1s, _ = _cuckoo_parts(hs, table_buckets)
-        rng_state = 0
-        for fp, i1 in zip(fps.tolist(), i1s.tolist()):
-            cur_fp, cur_i = int(fp), int(i1)
-            placed = False
-            for _kick in range(500):
-                row = table[cur_i * CUCKOO_SLOTS : (cur_i + 1) * CUCKOO_SLOTS]
-                alt = _alt_index(cur_i, cur_fp, table_buckets)
-                alt_row = table[alt * CUCKOO_SLOTS : (alt + 1) * CUCKOO_SLOTS]
-                if cur_fp in row or cur_fp in alt_row:
-                    placed = True  # already present (idempotent)
-                    break
-                free = np.where(row == 0)[0]
-                if len(free):
-                    row[free[0]] = cur_fp
-                    placed = True
-                    break
-                free_alt = np.where(alt_row == 0)[0]
-                if len(free_alt):
-                    alt_row[free_alt[0]] = cur_fp
-                    placed = True
-                    break
-                # evict a pseudo-random victim slot (deterministic sequence)
-                rng_state = (rng_state * 1103515245 + 12345) % (1 << 31)
-                victim = rng_state % CUCKOO_SLOTS
-                cur_fp, row[victim] = int(row[victim]), cur_fp
-                cur_i = _alt_index(cur_i, cur_fp, table_buckets)
-            if not placed:
-                raise RuntimeError(
-                    f"cuckoo bucket {bucket} over capacity: grow table_buckets"
-                )
-        return pd.DataFrame({"bucket": [bucket], "filter": [table.tobytes()]})
-
-    return existing.unionByName(tagged_new).groupBy("bucket").applyInPandas(update, BLOOM_SCHEMA)
-
-
-def cuckoo_split(
-    candidates: DataFrame, cuckoo: DataFrame, n_buckets: int, table_buckets: int, hash_col: str = "url_hash"
-) -> DataFrame:
-    """maybe_seen tagging against the cuckoo tables (vectorized lookup)."""
-    cand = candidates.withColumn("__bucket", F.pmod(F.col(hash_col), F.lit(n_buckets)).cast("int"))
-    flt = cuckoo.withColumnRenamed("bucket", "__bucket")
-
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in candidates.schema.fields
-    ) + ", maybe_seen boolean"
-
-    def test(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return pd.DataFrame(columns=[*left.columns, "maybe_seen"]).drop(columns=["__bucket"], errors="ignore").iloc[0:0]
-        hs = left[hash_col].to_numpy(dtype=np.int64)
-        if right.empty or right["filter"].dropna().empty:
-            maybe = np.zeros(len(hs), dtype=bool)
-        else:
-            table = np.frombuffer(bytes(right["filter"].dropna().iloc[0]), dtype=np.uint16).reshape(
-                table_buckets, CUCKOO_SLOTS
-            )
-            fps, i1, i2 = _cuckoo_parts(hs, table_buckets)
-            maybe = (table[i1] == fps[:, None]).any(axis=1) | (table[i2] == fps[:, None]).any(axis=1)
-        res = left.drop(columns=["__bucket"])
-        res["maybe_seen"] = maybe
-        return res
-
-    return cand.groupBy("__bucket").cogroup(flt.groupBy("__bucket")).applyInPandas(test, out_schema)
-
-
-def cuckoo_delete(cuckoo: DataFrame, hashes: DataFrame, n_buckets: int, table_buckets: int) -> DataFrame:
-    """Remove fingerprints (the cuckoo's edge over bloom): clears ONE slot
-    matching the fingerprint in either candidate bucket."""
-    tagged = hashes.select(
-        F.pmod(F.col("url_hash"), F.lit(n_buckets)).cast("int").alias("bucket"),
-        F.col("url_hash").alias("h"),
-        F.lit(None).cast("binary").alias("filter"),
-    )
-    existing = cuckoo.select("bucket", F.lit(-1).cast("long").alias("h"), "filter")
-
-    def update(pdf: pd.DataFrame) -> pd.DataFrame:
-        bucket = int(pdf["bucket"].iloc[0])
-        blobs = pdf["filter"].dropna()
-        if blobs.empty:
-            return pd.DataFrame({"bucket": [bucket], "filter": [np.zeros(table_buckets * CUCKOO_SLOTS, dtype=np.uint16).tobytes()]})
-        table = np.frombuffer(bytes(blobs.iloc[0]), dtype=np.uint16).copy()
-        hs = pdf.loc[pdf["h"] >= 0, "h"].to_numpy(dtype=np.int64)
-        fps, i1s, i2s = _cuckoo_parts(hs, table_buckets)
-        for fp, i1, i2 in zip(fps.tolist(), i1s.tolist(), i2s.tolist()):
-            for idx in (int(i1), int(i2)):
-                row = table[idx * CUCKOO_SLOTS : (idx + 1) * CUCKOO_SLOTS]
-                hit = np.where(row == fp)[0]
-                if len(hit):
-                    row[hit[0]] = 0
-                    break
-        return pd.DataFrame({"bucket": [bucket], "filter": [table.tobytes()]})
-
-    return existing.unionByName(tagged).groupBy("bucket").applyInPandas(update, BLOOM_SCHEMA)
-
-
 def bloom_hits(
     hashes: DataFrame, bloom: DataFrame, n_buckets: int, m_bits: int, hash_col: str = "url_hash"
 ) -> DataFrame:
     """The hashes (ONLY) that the bloom flags maybe-seen.
 
-    Unlike :func:`bloom_split`, which round-trips every candidate COLUMN
-    through Arrow, this passes just (bucket, hash) — 12 bytes/row — and
-    returns the hit hashes; the caller splits the full candidate rows with
-    JVM joins against this (small) hit set. Same contract: a miss is
-    authoritative, a hit must be confirmed by the exact anti-join.
+    Rather than round-tripping every candidate COLUMN through Arrow, this
+    passes just (bucket, hash) — 12 bytes/row — and returns the hit hashes;
+    the caller splits the full candidate rows with JVM joins against this
+    (small) hit set. A miss is authoritative, a hit must be confirmed by the
+    exact anti-join.
     """
     cand = hashes.select(
         F.pmod(F.col(hash_col), F.lit(n_buckets)).cast("int").alias("__bucket"),
@@ -343,19 +128,3 @@ def bloom_hits(
         .applyInPandas(test, f"{hash_col} long")
     )
 
-
-def dedup_with_bloom(
-    candidates: DataFrame,
-    seen: DataFrame,
-    bloom: DataFrame,
-    n_buckets: int,
-    m_bits: int,
-    hash_col: str = "url_hash",
-) -> DataFrame:
-    """J2 with the bloom pre-filter: definitely-new rows bypass the exact
-    anti-join; bloom hits are confirmed against the authoritative table."""
-    tagged = bloom_split(candidates, bloom, n_buckets, m_bits, hash_col)
-    fresh = tagged.where(~F.col("maybe_seen")).drop("maybe_seen")
-    suspect = tagged.where(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed_new = suspect.join(seen.select(hash_col), hash_col, "left_anti")
-    return fresh.unionByName(confirmed_new)

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bravewebcrawler_spark.operators.ranking import top_k_per_key
+from bravewebcrawler_spark.sources.tables import spread
 
 SIM_P = 1_000_000_007
 
@@ -49,26 +50,9 @@ def norm_col(u: Column) -> Column:
     return F.sqrt(dot_col(u, u))
 
 
-def cosine_col(u: Column, v: Column) -> Column:
-    return dot_col(u, v) / (norm_col(u) * norm_col(v))
-
-
 def _dot_raw(u: Column, v: Column) -> Column:
     """Dot product over already-double arrays (no per-pair cast/copy)."""
     return F.aggregate(F.zip_with(u, v, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Ensure the scan side has enough partitions to use the cluster.
-
-    A small local parquet file reads as ONE partition, which would run the
-    whole pairwise scoring in a single task. At real scale the corpus already
-    has many input splits and this is a no-op (the check is plan metadata,
-    not a job)."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 def _normed(df: DataFrame, id_col: str, vec_col: str, out_id: str, out_vec: str, out_norm: str) -> DataFrame:
@@ -167,7 +151,7 @@ def brute_force_topk(
                     names=["query_id", "neighbor_id", "cos_raw"],
                 )
 
-    c = _spread(
+    c = spread(
         corpus.select(
             F.col(c_id).cast("long").alias("neighbor_id"), F.col(c_vec).alias("cv")
         )
@@ -287,7 +271,7 @@ def ivf_topk(
         )
     cos_order = [F.col("cos_c").desc(), F.col("cent_id").asc()]
 
-    c = _spread(_normed(corpus, c_id, c_vec, "neighbor_id", "cv", "cn"))
+    c = spread(_normed(corpus, c_id, c_vec, "neighbor_id", "cv", "cn"))
     assign = c.crossJoin(F.broadcast(cents)).select(
         "neighbor_id", "cv", "cn", "cent_id",
         (_dot_raw(F.col("cv"), F.col("centv")) / (F.col("cn") * F.col("centn"))).alias("cos_c"),
@@ -379,7 +363,7 @@ def bucketed_neardup_pairs(
     where cosine < threshold anyway; the exact crossJoin variant remains as
     the small-scale/verification baseline (embed_neardup).
     """
-    c = _spread(_normed(corpus, id_col, vec_col, "doc", "v", "n")).withColumn(
+    c = spread(_normed(corpus, id_col, vec_col, "doc", "v", "n")).withColumn(
         "bucket", hyperplane_sign_bucket(F.col("v"), n_planes)
     )
     a = c.select(F.col("doc").alias("id_a"), F.col("v").alias("va"), F.col("n").alias("na"), "bucket")
@@ -518,7 +502,7 @@ def _lsh_probe_topk(
                     names=["query_id", "neighbor_id", "cos_raw"],
                 )
 
-    c = _spread(
+    c = spread(
         corpus.select(
             F.col(c_id).cast("long").alias("neighbor_id"), F.col(c_vec).alias("cv")
         )

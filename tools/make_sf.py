@@ -15,7 +15,7 @@ Row-count scaling observed across sf0.001/0.01/0.1 (per 1.0 of sf):
   (500 -> 2000 -> 8000).
 
 Layout fidelity: one parquet file, ONE row group per table — the exact
-single-split shape the driver data ships and that `_spread` compensates for.
+single-split shape of the shipped test data, which `spread` (sources/tables.py) compensates for.
 
 Usage: python tools/make_sf.py [sf] [outdir]   (default 1.0 /root/bigdata)
 """
