@@ -37,10 +37,9 @@ for rep in $(seq "$REP0" $((REP0 + REPS - 1))); do
   for ex in $LEVELS; do
     cores=$((ex * 2 + 2))
     rm -rf /dev/shm/bwc-state; mkdir -p /dev/shm/bwc-state /dev/shm/spark-tmp
-    # Full stdout (incl. BWC_DEBUG_TIMING per-phase lines) kept per run for
-    # serial-floor attribution; the JSON line is the last line.
+    # Full stdout kept per run; the JSON line is the last line.
     log="/tmp/exec_pair_r${rep}_e${ex}_s${SCALE}.log"
-    BWC_DEBUG_TIMING="${BWC_DEBUG_TIMING:-1}" SPARK_GRAFT_EXECUTORS=$ex SPARK_GRAFT_CRAWL_ONLY=1 \
+    SPARK_GRAFT_EXECUTORS=$ex SPARK_GRAFT_CRAWL_ONLY=1 \
       SPARK_GRAFT_EXEC_MEM_MB=16384 SPARK_GRAFT_BENCH_SCALE=$SCALE \
       SPARK_GRAFT_SHUFFLE_MULT=$MULT \
       SPARK_LOCAL_DIRS=/dev/shm/spark-tmp SPARK_GRAFT_STATE_DIR_BASE=/dev/shm/bwc-state \

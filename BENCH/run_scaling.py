@@ -568,14 +568,6 @@ Round 3:
   negatives by construction; membership equality is oracle-checked).
 - global round cap via distributed top-K + post-cap repartition; the
   seq-assigning window runs over <= cap rows.
-- EXACT dequeue band pruning (policy.dequeue_band_pruning): priorities are
-  discrete (multiples of 0.25), a per-band histogram is maintained
-  arithmetically (zero extra scans) and persisted in the round manifest;
-  the ranking scan touches only the top bands holding >= 2x the cap, with a
-  budget-starvation fallback — per-round dequeue work becomes O(top bands)
-  instead of O(frontier). Proven pruned == unpruned bit-for-bit in
-  tests/test_band_pruning.py; off at sandbox scale where the histogram job
-  costs more than the saved scan.
 - per-round atomic manifest commit is O(1) driver work independent of
   frontier size; state tables are partitioned parquet (Iceberg-semantics
   seam — swap-in real Iceberg is a write-path change only; no Iceberg

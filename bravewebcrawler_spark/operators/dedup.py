@@ -398,9 +398,7 @@ def minhash_sig_and_arrays(df: DataFrame, id_col: str, text_col: str, k: int = 3
     )
 
 
-def minhash_signature_cols(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, shingle_hashes: DataFrame | None = None
-) -> DataFrame:
+def minhash_signature_cols(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
     """Per-doc minhash signature as NUM_HASHES columns:
     h_j(s) = (a_j * H(s) + b_j) mod P with H the portable 60-bit hash reduced
     mod P; a_j <= 2*NUM_HASHES+3 keeps a_j*H < 2^63 (ANSI-safe).
@@ -411,24 +409,14 @@ def minhash_signature_cols(
     shuffle happens at all before the (doc, 16 longs) signature rows exist
     (the former explode → 16-way min hash-aggregate measured ~53
     core-seconds at sf1.0 for the aggregate alone, on top of a ~79
-    core-second shingle pass). Pass ``shingle_hashes`` (a
-    :func:`hashed_shingles` result, possibly persisted) to derive the
-    signature from an existing hash table instead — same values either way
-    (min over the distinct shingle set equals min over all occurrences).
+    core-second shingle pass).
     """
-    if shingle_hashes is None:
-        return df.select(
-            F.col(id_col).cast("long").alias("doc"), F.col(text_col).alias("text")
-        ).mapInArrow(
-            _minhash_sig_fn(k),
-            "doc long, " + ", ".join(f"m{j} long" for j in range(NUM_HASHES)),
-        )
-    sh = shingle_hashes.select("doc", (F.col("H") % MINHASH_P).alias("h"))
-    aggs = [
-        F.min((F.col("h") * (2 * j + 3) + (5 * j + 7)) % MINHASH_P).alias(f"m{j}")
-        for j in range(NUM_HASHES)
-    ]
-    return sh.groupBy("doc").agg(*aggs)
+    return df.select(
+        F.col(id_col).cast("long").alias("doc"), F.col(text_col).alias("text")
+    ).mapInArrow(
+        _minhash_sig_fn(k),
+        "doc long, " + ", ".join(f"m{j} long" for j in range(NUM_HASHES)),
+    )
 
 
 def minhash_lsh_pairs(
@@ -436,7 +424,6 @@ def minhash_lsh_pairs(
     id_col: str,
     text_col: str,
     k: int = 3,
-    shingle_hashes: DataFrame | None = None,
     cache_registry: list | None = None,
     signatures: DataFrame | None = None,
 ) -> DataFrame:
@@ -445,8 +432,7 @@ def minhash_lsh_pairs(
     The scale path: per doc only NUM_HASHES values survive; candidate
     generation shuffles on small (band, band_key) keys. Pairs are distinct
     (id_a < id_b); refinement (true Jaccard on candidates) is jaccard_pairs
-    restricted to these pairs. ``shingle_hashes`` is forwarded to
-    :func:`minhash_signature_cols`.
+    restricted to these pairs.
 
     Band rows come from ONE signature aggregate + an explode of the 4
     per-band key structs — NOT a 4-way union of projections, which (with the
@@ -464,11 +450,7 @@ def minhash_lsh_pairs(
     # pass of minhash_sig_and_arrays) — identical values to the direct pass
     # by construction, forwarded by lsh_refined_pairs so the corpus is
     # shingled once, not twice.
-    sig = (
-        signatures
-        if signatures is not None
-        else minhash_signature_cols(df, id_col, text_col, k, shingle_hashes=shingle_hashes)
-    )
+    sig = signatures if signatures is not None else minhash_signature_cols(df, id_col, text_col, k)
 
     def band_key(band: int):
         key = F.lit(0).cast("long")
@@ -530,9 +512,15 @@ def lsh_refined_pairs(
     collision inside a candidate pair (~|set|^2 / 2^60) — and the DuckDB
     oracle hashes identically, so parity is exact by construction either
     way.
+
+    ``threshold`` must lie in (0, 1]: at ``threshold <= 0`` the Jaccard
+    filter would keep zero-intersection candidate pairs, so it raises
+    ``ValueError`` instead.
     """
     from pyspark import StorageLevel
 
+    if not 0 < threshold <= 1:
+        raise ValueError(f"lsh_refined_pairs: threshold must be in (0, 1], got {threshold!r}")
     # ONE Python pass over the corpus computes BOTH the signature (candidate
     # generation) and the shingle-hash sets (exact refinement) —
     # minhash_sig_and_arrays — persisted because the banded build, the
@@ -583,41 +571,6 @@ def lsh_refined_pairs(
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-
-
-def dedup_cluster_tables(
-    corpus: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    threshold: float = 0.6,
-    components: DataFrame | None = None,
-    cache_registry: list | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(components, roster) for the LSH-refined duplicate-cluster pipeline.
-
-    ``components`` is the per-doc cluster map ``(node, comp)``; ``roster``
-    is the keep-one view ``(doc_id, n_members)`` derived from it. A pipeline
-    that needs BOTH (write the cluster map, write the deduplicated roster)
-    passes the already-computed ``components`` table back in and the whole
-    pairs+connected-components chain runs ONCE instead of once per view
-    (round-5 verdict #6 — the two registry rows each cost the full chain
-    when self-contained). ``components=None`` computes the chain here:
-    lsh_refined_pairs → connected_components, identical to the registry
-    queries' own composition; tests/test_components.py proves the reuse
-    path row-for-row equal to the self-contained one.
-    """
-    if components is None:
-        pairs = lsh_refined_pairs(
-            corpus, id_col, text_col, k=k, threshold=threshold, cache_registry=cache_registry
-        )
-        components = connected_components(
-            pairs, corpus, id_col=id_col, cache_registry=cache_registry
-        )
-    roster = components.groupBy(F.col("comp").alias("doc_id")).agg(
-        F.count(F.lit(1)).alias("n_members")
-    )
-    return components, roster
 
 
 def simhash_col(text_col, bits: int = 16):

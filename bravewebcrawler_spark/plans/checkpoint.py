@@ -64,43 +64,23 @@ def round_dir(state_dir: str, round_no: int) -> str:
     return os.path.join(state_dir, f"round-{round_no:06d}")
 
 
+def _write(rd: str, name: str, df: DataFrame) -> None:
+    # delta tables are small relative to partition count at round scale;
+    # fewer output files = fewer write tasks now + fewer open()s on the
+    # next round's read. (At 10^10 scale partition sizing is governed by
+    # maxPartitionBytes on read, so this stays safe.)
+    df.coalesce(16).write.mode("overwrite").parquet(os.path.join(rd, name))
+
+
 def write_tables(state_dir: str, round_no: int, tables: dict[str, DataFrame]) -> str:
-    """Write a round's tables (not yet visible to resume until the manifest).
-
-    Concurrent by default: every table written here reads WARM caches (the
-    caller materializes selected/fetched/additions/fdelta via the two count
-    jobs first), so parallel write jobs are pure scan+encode and overlap
-    their fixed per-job latency. Concurrency over COLD caches is the thing
-    that measured badly (Spark does not dedupe in-flight computation of a
-    persisted partition: 70s vs 23s for a 100k-URL round at local[32]) —
-    which is why the warm-up counts in plans/crawl.py run before this.
-    BWC_WRITE_PAR=1 restores serial writes for diagnostics."""
-    import time as _time
-    from concurrent.futures import ThreadPoolExecutor
-
+    """Write a round's tables in order on the calling thread (not yet
+    visible to resume until the manifest). The crawl loop calls this for
+    writes over COLD caches, which must not run concurrently: Spark does not
+    dedupe in-flight computation of a persisted partition (70s vs 23s for a
+    100k-URL round at local[32])."""
     rd = round_dir(state_dir, round_no)
-    debug = os.environ.get("BWC_DEBUG_TIMING", "") == "1"
-    if debug:
-        print(f"    write_tables enter {_time.time():.2f}", flush=True)
-
-    def write_one(name: str) -> None:
-        t0 = _time.time()
-        # delta tables are small relative to partition count at round scale;
-        # fewer output files = fewer write tasks now + fewer open()s on the
-        # next round's read. (At 10^10 scale partition sizing is governed by
-        # maxPartitionBytes on read, so this stays safe.)
-        tables[name].coalesce(16).write.mode("overwrite").parquet(os.path.join(rd, name))
-        if debug:
-            print(f"    write {name:14s} {_time.time() - t0:6.2f}s", flush=True)
-
-    names = list(tables)
-    workers = int(os.environ.get("BWC_WRITE_PAR", "6"))
-    if workers <= 1:
-        for name in names:
-            write_one(name)
-    else:
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            list(pool.map(write_one, names))
+    for name, df in tables.items():
+        _write(rd, name, df)
     return rd
 
 
@@ -112,23 +92,10 @@ def start_writes(
     (the two only share WARM caches, so concurrency is pure overlap). The
     caller must ``result()`` every future before publishing the manifest."""
     rd = round_dir(state_dir, round_no)
-    debug = os.environ.get("BWC_DEBUG_TIMING", "") == "1"
-
-    def write_one(name: str) -> None:
-        import time as _time
-
-        t0 = _time.time()
-        tables[name].coalesce(16).write.mode("overwrite").parquet(os.path.join(rd, name))
-        if debug:
-            print(f"    write {name:14s} {_time.time() - t0:6.2f}s (overlapped)", flush=True)
-
-    return [pool.submit(write_one, name) for name in tables]
+    return [pool.submit(_write, rd, name, df) for name, df in tables.items()]
 
 
-def publish_manifest(
-    state_dir: str, round_no: int, metrics: RoundMetrics, base_round: int,
-    band_hist: dict[int, int] | None = None,
-) -> None:
+def publish_manifest(state_dir: str, round_no: int, metrics: RoundMetrics, base_round: int) -> None:
     """Atomically publish a fully-written round (the commit point)."""
     rd = round_dir(state_dir, round_no)
     manifest = {
@@ -138,9 +105,6 @@ def publish_manifest(
         "metrics": metrics.__dict__,
         "committed_at": time.time(),
     }
-    if band_hist is not None:
-        # dequeue band histogram (JSON keys are strings; load converts back)
-        manifest["band_hist"] = {str(b): c for b, c in band_hist.items()}
     tmp = _manifest_path(state_dir, round_no) + ".tmp"
     with open(tmp, "w") as f:
         json.dump(manifest, f)
@@ -225,13 +189,6 @@ def load_state(spark: SparkSession, state_dir: str, round_no: int) -> dict[str, 
 
 def load_metrics(state_dir: str, round_no: int) -> dict:
     return _manifest(state_dir, round_no)["metrics"]
-
-
-def load_band_hist(state_dir: str, round_no: int) -> dict[int, int] | None:
-    """Dequeue band histogram committed with the round (None if the crawl
-    that wrote it ran without band pruning)."""
-    h = _manifest(state_dir, round_no).get("band_hist")
-    return None if h is None else {int(b): c for b, c in h.items()}
 
 
 def load_base_round(state_dir: str, round_no: int) -> int:

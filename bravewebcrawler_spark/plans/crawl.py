@@ -27,7 +27,6 @@ from bravewebcrawler_spark.plans.round import (
     HOST_STATE_SCHEMA,
     SEEN_SCHEMA,
     admit_candidates,
-    band_col,
     robots_df,
     run_round,
 )
@@ -96,7 +95,6 @@ def crawl(
     frontier_size = 0
     base_round = 0
     init_frontier = None  # fresh-start-only persist, released after round 0
-    band_hist: dict[int, int] | None = {} if policy.dequeue_band_pruning else None
     last = ckpt.latest_round(state_dir) if resume else None
     if last is not None:
         state = ckpt.load_state(spark, state_dir, last)
@@ -107,12 +105,6 @@ def crawl(
         frontier_size = m["frontier_size"]
         base_round = ckpt.load_base_round(state_dir, last)
         start_round = last + 1
-        if policy.dequeue_band_pruning:
-            saved = ckpt.load_band_hist(state_dir, last)
-            band_hist = saved if saved is not None else {
-                int(r["b"]): r["count"]
-                for r in frontier.groupBy(band_col(F.col("priority")).alias("b")).count().collect()
-            }
     else:
         st = initial_state(spark, web, seeds, policy)
         frontier, seen, host_state = st["frontier"], st["seen"], st["host_state"]
@@ -132,18 +124,12 @@ def crawl(
         st["dead_letter"].write.mode("overwrite").parquet(os.path.join(state_dir, "dead_letter"))
 
     total_fetched = 0
-    debug = os.environ.get("BWC_DEBUG_TIMING", "") == "1"
     from concurrent.futures import ThreadPoolExecutor
 
     write_pool = ThreadPoolExecutor(max_workers=4, thread_name_prefix="bwc-write")
     for rnd in range(start_round, policy.max_rounds):
         t0 = time.time()
-        out = run_round(
-            spark, web, frontier, seen, host_state, robots, policy, rnd, bloom,
-            band_hist=band_hist,
-        )
-        if debug:
-            print(f"  round {rnd} construct+dequeue-collect in {time.time() - t0:6.2f}s", flush=True)
+        out = run_round(spark, web, frontier, seen, host_state, robots, policy, rnd, bloom)
         # Bookkeeping rides on the writes (zero extra jobs in the common
         # path): the crawl_log write IS the warm+count job — an Observation
         # on it yields (dequeued, fetched_ok) while materializing the
@@ -153,7 +139,6 @@ def crawl(
         # computation of a persisted partition, so parallel jobs over a cold
         # cache would each recompute the dequeue+fetch chain (measured: 3x
         # CPU + GC storm at local[32]).
-        t_warm = time.time()
         obs_a = Observation()
         log_obs = out["crawl_log"].observe(
             obs_a,
@@ -163,8 +148,6 @@ def crawl(
         ckpt.write_tables(state_dir, rnd, {"crawl_log": log_obs})
         counts = obs_a.get
         dequeued, fetched_ok = counts["n"], counts["ok"]
-        if debug:
-            print(f"  round {rnd} jobA fetch+crawl_log write in {time.time() - t_warm:6.2f}s", flush=True)
         # remaining fetched-derived outputs need only warm caches — write
         # them WHILE the discover→dedup→merge chain computes; pure overlap
         early_futs = ckpt.start_writes(
@@ -180,28 +163,6 @@ def crawl(
         # frontier+bloom snapshot every compact_every rounds bounds both the
         # reconstruction read fan-in and the lazy cross-round plan depth.
         is_compaction = rnd % max(policy.compact_every, 1) == 0
-        t_b = time.time()
-        fd_rows = None
-        fdelta_cnt = touched_cnt = 0
-        obs_b = None
-        if policy.dequeue_band_pruning and not is_compaction:
-            # Band-histogram path: the per-(old,new)-band count MAP cannot
-            # ride an Observation (fixed aggregate list only), so one tiny
-            # groupBy over the tagged delta materializes the chain AND
-            # yields the per-band deltas + the frontier-size counts.
-            fd_rows = (
-                out["fdelta_tagged"]
-                .groupBy(
-                    F.col("__touched").alias("old_band"),
-                    band_col(F.col("priority")).alias("new_band"),
-                )
-                .count()
-                .collect()
-            )
-            fdelta_cnt = sum(r["count"] for r in fd_rows)
-            touched_cnt = sum(r["count"] for r in fd_rows if r["old_band"] > -1000)
-            if debug:
-                print(f"  round {rnd} jobB fdelta in {time.time() - t_b:6.2f}s", flush=True)
         if is_compaction:
             base_round = rnd
             # The snapshot write materializes the whole discovery chain
@@ -214,65 +175,34 @@ def crawl(
                 state_dir, rnd, {"bloom": out["bloom"].withColumn("round", F.lit(rnd))}
             )
         else:
-            fdelta = out["frontier_delta"]
-            if fd_rows is None:
-                obs_b = Observation()
-                fdelta = (
-                    out["fdelta_tagged"]
-                    .observe(
-                        obs_b,
-                        F.count(F.lit(1)).alias("n"),
-                        F.count_if(F.col("__touched") > -1000).alias("touched"),
-                    )
-                    .drop("__touched")
+            obs_b = Observation()
+            fdelta = (
+                out["fdelta_tagged"]
+                .observe(
+                    obs_b,
+                    F.count(F.lit(1)).alias("n"),
+                    F.count_if(F.col("__touched") == 1).alias("touched"),
                 )
+                .drop("__touched")
+            )
             # frontier_delta first and alone (cold chain — see above), then
             # the bloom delta as a warm scan of its persisted buckets.
             rd = ckpt.write_tables(state_dir, rnd, {"frontier_delta": fdelta})
             ckpt.write_tables(
                 state_dir, rnd, {"bloom_delta": out["bloom_delta"].withColumn("round", F.lit(rnd))}
             )
-            if obs_b is not None:
-                b = obs_b.get
-                fdelta_cnt, touched_cnt = b["n"], b["touched"]
-        if debug:
-            print(f"  round {rnd} jobB/delta-writes in {time.time() - t_b:6.2f}s", flush=True)
+            b = obs_b.get
+            fdelta_cnt, touched_cnt = b["n"], b["touched"]
         for f in early_futs:  # all tables durable before the manifest commit
             f.result()
-        if debug:
-            print(f"  round {rnd} writes done at {time.time() - t0:6.2f}s", flush=True)
 
         # Exact new-frontier size WITHOUT scanning the frontier: selected
         # rows leave (dequeued), touched rows move into the delta
         # (touched_cnt), the delta contributes fdelta_cnt. On compaction
         # rounds the freshly-written snapshot's footer count is authoritative
         # (and asserts the arithmetic's invariant cheaply at test scale).
-        if policy.dequeue_band_pruning:
-            if is_compaction:
-                # exact re-base from the snapshot (also zeroes any drift)
-                band_hist = {
-                    int(r["b"]): r["count"]
-                    for r in spark.read.parquet(os.path.join(rd, "frontier"))
-                    .groupBy(band_col(F.col("priority")).alias("b"))
-                    .count()
-                    .collect()
-                }
-            else:
-                # arithmetic update: selected rows leave their band, touched
-                # rows leave their OLD band, every delta row enters its band
-                for r in out["selected_count"].groupBy(
-                    band_col(F.col("priority")).alias("b")
-                ).count().collect():
-                    band_hist[int(r["b"])] = band_hist.get(int(r["b"]), 0) - r["count"]
-                for r in fd_rows:
-                    if r["old_band"] > -1000:
-                        band_hist[int(r["old_band"])] = band_hist.get(int(r["old_band"]), 0) - r["count"]
-                    band_hist[int(r["new_band"])] = band_hist.get(int(r["new_band"]), 0) + r["count"]
-                band_hist = {b: c for b, c in band_hist.items() if c > 0}
         frontier_size = (
-            sum(band_hist.values())
-            if policy.dequeue_band_pruning and is_compaction
-            else spark.read.parquet(os.path.join(rd, "frontier")).count()
+            spark.read.parquet(os.path.join(rd, "frontier")).count()
             if is_compaction
             else frontier_size - dequeued - touched_cnt + fdelta_cnt
         )
@@ -286,14 +216,12 @@ def crawl(
             wall_s=time.time() - t0,
         )
         # tables already written: publish manifest atomically (commit point)
-        ckpt.publish_manifest(state_dir, rnd, metrics, base_round, band_hist=band_hist)
+        ckpt.publish_manifest(state_dir, rnd, metrics, base_round)
         for df in out["_cached"]:
             df.unpersist()
         if init_frontier is not None:
             init_frontier.unpersist()
             init_frontier = None
-        if debug:
-            print(f"  round {rnd}: dequeued={dequeued} total={time.time() - t0:6.2f}s", flush=True)
         total_fetched += dequeued
         # Next-round state from COMMITTED parquet (bounded lineage, O(delta)
         # reads): the frontier chains one broadcast-filtered delta per round

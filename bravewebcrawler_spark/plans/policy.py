@@ -46,13 +46,6 @@ class CrawlPolicy:
     # full frontier/bloom snapshot every N rounds (rounds in between commit
     # O(delta) only); bounds both resume read fan-in and cross-round plan depth
     compact_every: int = 4
-    # EXACT dequeue band pruning (plans/round.py dequeue): restrict the
-    # ranking scan to the top priority bands holding >= 2x the round cap,
-    # using a histogram maintained arithmetically by the crawl loop — at a
-    # 10^10 frontier this turns the per-round dequeue from O(state) into
-    # O(top bands). Off by default: at sandbox frontiers the saved scan is
-    # smaller than the extra per-round histogram job.
-    dequeue_band_pruning: bool = False
     # P6 wired into the round: pages with a generic <title> do not expand
     # their outlinks (the page itself is still fetched/logged/kept) —
     # mirrors the reference gating its expensive stage on the relevance

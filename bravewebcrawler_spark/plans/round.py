@@ -33,7 +33,6 @@ plan with .explain):
 from __future__ import annotations
 
 from collections.abc import Iterator
-from contextlib import contextmanager
 
 import pandas as pd
 from pyspark import StorageLevel
@@ -260,54 +259,8 @@ def _fetch_parse_factory(web: SynthWeb):
     return fetch_parse
 
 
-_PINNED_RANK_CACHES: list[DataFrame] = []
-_SCOPED_RANK_CACHES: list[list[DataFrame]] = []  # rank_cache_scope() stack
-
-
-def release_rank_caches() -> None:
-    """Unpersist rank-cap caches pinned by registry-less dequeue callers.
-    Only call once every DataFrame returned by those calls is fully consumed."""
-    while _PINNED_RANK_CACHES:
-        try:
-            _PINNED_RANK_CACHES.pop().unpersist()
-        except Exception:  # noqa: BLE001 — interpreter/JVM teardown
-            pass
-
-
-@contextmanager
-def rank_cache_scope() -> Iterator[None]:
-    """Scope-exit release for registry-less dequeue callers (tests, tools).
-
-    Inside the ``with`` block, dequeue calls that would otherwise pin their
-    placement-freezing caches in the module-global list register them in the
-    scope instead; exit unpersists them all. This keeps the caches alive for
-    exactly as long as the returned DataFrames can be consumed — the caller
-    no longer has to remember ``release_rank_caches()`` (and a weakref
-    finalizer remains unsafe: it would fire mid-query, see _global_rank_cap).
-    The production loop is unaffected — crawl passes an explicit
-    ``cache_registry`` released per round.
-    """
-    scope: list[DataFrame] = []
-    _SCOPED_RANK_CACHES.append(scope)
-    try:
-        yield
-    finally:
-        _SCOPED_RANK_CACHES.remove(scope)
-        for df in scope:
-            try:
-                df.unpersist()
-            except Exception:  # noqa: BLE001 — interpreter/JVM teardown
-                pass
-
-
-def _global_rank_cap(
-    survivors: DataFrame, order: list, cap: int, cache_registry: list | None
-) -> tuple[DataFrame, int | None]:
-    """Exact global top-``cap`` + dense seq, distributed; returns
-    ``(ranked, survivors_total)`` — the total is known for free on the
-    large-cap path (sum of the per-partition offset counts; band-pruned
-    dequeues use it to prove the prune kept >= cap rows) and ``None`` on the
-    small-cap path.
+def _global_rank_cap(survivors: DataFrame, order: list, cap: int, cache_registry: list) -> DataFrame:
+    """Exact global top-``cap`` + dense seq, distributed.
 
     For small caps TakeOrderedAndProject + a tiny window is optimal; for
     large caps both serialize (driver merge / single-partition window), so:
@@ -320,7 +273,7 @@ def _global_rank_cap(
     if cap <= 20_000:
         capped = survivors.orderBy(*order).limit(cap)
         wseq = Window.orderBy(*order)
-        return capped.withColumn("seq", (F.row_number().over(wseq) - 1).cast("int")), None
+        return capped.withColumn("seq", (F.row_number().over(wseq) - 1).cast("int"))
 
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # repartitionByRange SAMPLES its input in a separate job to pick range
@@ -341,14 +294,10 @@ def _global_rank_cap(
     # an evicted-and-recomputed `s` re-samples boundaries: under ANSI mode
     # the element_at(off_map, __pid) below then fails loudly with
     # MAP_KEY_DOES_NOT_EXIST — if that error ever appears here it means the
-    # cache was dropped mid-query, not bad input. Callers pass cache_registry
-    # to unpersist after the round; direct callers use rank_cache_scope()
-    # (scope-exit release) or stay pinned until release_rank_caches().
-    if cache_registry is not None:
-        cache_registry.append(survivors)
-        cache_registry.append(s)
-    elif _SCOPED_RANK_CACHES:
-        _SCOPED_RANK_CACHES[-1].extend((survivors, s))
+    # cache was dropped mid-query, not bad input. The caller owns both
+    # caches through ``cache_registry`` and unpersists them only once every
+    # consumer of the result has run (a finalizer would fire mid-query).
+    cache_registry.extend((survivors, s))
     sizes = {r["__pid"]: r["c"] for r in s.groupBy("__pid").agg(F.count("*").alias("c")).collect()}
     offsets, acc = [], 0
     for pid in sorted(sizes):
@@ -365,35 +314,7 @@ def _global_rank_cap(
         "seq",
         (F.element_at(off_map, F.col("__pid")) + F.row_number().over(w) - 1).cast("int"),
     )
-    result = ranked.where(F.col("seq") < cap).drop("__pid")
-    if cache_registry is None and not _SCOPED_RANK_CACHES:
-        # No finalizer here — a weakref on `result` fires as soon as the
-        # caller derives a new DataFrame and drops this one, unpersisting the
-        # placement-freezing caches MID-QUERY; a recompute then re-samples the
-        # range boundaries and produces overlapping seq ranges (caught by
-        # tests/test_band_pruning.py). Registry-less callers outside a
-        # rank_cache_scope() keep the pin for the session;
-        # release_rank_caches() frees them.
-        _PINNED_RANK_CACHES.extend((survivors, s))
-    return result, acc
-
-
-def band_col(priority: Column) -> Column:
-    """Discrete priority band: priority is a multiple of 0.25 by construction
-    (plans/policy.py), so ``priority*4`` is an exact integer."""
-    return F.round(priority * 4).cast("int")
-
-
-def _band_threshold(band_hist: dict[int, int], target: int) -> int:
-    """Smallest band (scanning from the top) whose cumulative frontier rows
-    reach ``target``; the lowest band if the whole frontier is smaller."""
-    cum = 0
-    bands = sorted(band_hist, reverse=True)
-    for b in bands:
-        cum += band_hist[b]
-        if cum >= target:
-            return b
-    return bands[-1]
+    return ranked.where(F.col("seq") < cap).drop("__pid")
 
 
 def dequeue(
@@ -401,57 +322,29 @@ def dequeue(
     host_state: DataFrame,
     policy: CrawlPolicy,
     refill: bool,
-    cache_registry: list | None = None,
-    band_hist: dict[int, int] | None = None,
+    cache_registry: list,
 ) -> DataFrame:
     """Politeness-budgeted, skew-salted priority dequeue (O1/O2/W1/A7).
 
     Returns frontier columns + ``seq`` (dequeue position within the round).
-
-    ``band_hist`` (band -> frontier row count, maintained arithmetically by
-    the crawl loop) enables EXACT band pruning at scale: ranking the whole
-    10^10-row frontier each round to select ~10^6 is O(state) work; with the
-    histogram the scan is restricted to the top priority bands holding >= 2x
-    the cap. Exactness argument: politeness windows order by priority DESC,
-    so dropping strictly-lower bands never changes an included row's
-    row_number; if the pruned survivor count still reaches the cap, every
-    global top-cap row lies in the included bands (anything below the
-    threshold band is outranked by all cap selected rows). When the pruned
-    survivors fall short (budget-starved top bands), one fallback pass runs
-    unpruned — detected from the survivor total the rank-cap computes anyway.
+    The large-cap rank path persists two caches into ``cache_registry``;
+    the caller unpersists them once the result is fully consumed.
     """
     from bravewebcrawler_spark.operators.politeness import host_budget
 
     order = [F.col("priority").desc(), F.col("depth").asc(), F.col("url_hash").asc(), F.col("url_canon").asc()]
-    cap = policy.max_urls_per_round
-
-    def rank(fr: DataFrame) -> tuple[DataFrame, int | None]:
-        budgeted = fr.join(host_state, "host", "left").withColumn(
-            "budget", host_budget(policy, refill)
-        )
-        # phase 1: salted per-(host,salt) prefix — bounds hot-host window size
-        salted = budgeted.withColumn("salt", F.pmod(F.col("url_hash"), F.lit(SALT_N)))
-        w1 = Window.partitionBy("host", "salt").orderBy(*order)
-        phase1 = salted.withColumn("rn1", F.row_number().over(w1)).where(F.col("rn1") <= F.col("budget"))
-        # phase 2: exact per-host prefix over the ≤ SALT_N×budget survivors
-        w2 = Window.partitionBy("host").orderBy(*order)
-        phase2 = phase1.withColumn("rn2", F.row_number().over(w2)).where(F.col("rn2") <= F.col("budget"))
-        # global round cap + seq assignment (distributed for large caps)
-        return _global_rank_cap(phase2, order, cap, cache_registry)
-
-    prune = (
-        policy.dequeue_band_pruning
-        and band_hist
-        and cap > 20_000  # the small-cap path never reports survivor totals
+    budgeted = frontier.join(host_state, "host", "left").withColumn(
+        "budget", host_budget(policy, refill)
     )
-    if prune:
-        thr = _band_threshold(band_hist, 2 * cap)
-        if thr > min(band_hist):
-            pruned, total = rank(frontier.where(band_col(F.col("priority")) >= thr))
-            if total is not None and total >= cap:
-                return pruned.select(*[f.name for f in FRONTIER_SCHEMA.fields], "seq")
-            # fall through: top bands were budget-starved — rank unpruned
-    ranked, _ = rank(frontier)
+    # phase 1: salted per-(host,salt) prefix — bounds hot-host window size
+    salted = budgeted.withColumn("salt", F.pmod(F.col("url_hash"), F.lit(SALT_N)))
+    w1 = Window.partitionBy("host", "salt").orderBy(*order)
+    phase1 = salted.withColumn("rn1", F.row_number().over(w1)).where(F.col("rn1") <= F.col("budget"))
+    # phase 2: exact per-host prefix over the ≤ SALT_N×budget survivors
+    w2 = Window.partitionBy("host").orderBy(*order)
+    phase2 = phase1.withColumn("rn2", F.row_number().over(w2)).where(F.col("rn2") <= F.col("budget"))
+    # global round cap + seq assignment (distributed for large caps)
+    ranked = _global_rank_cap(phase2, order, policy.max_urls_per_round, cache_registry)
     return ranked.select(*[f.name for f in FRONTIER_SCHEMA.fields], "seq")
 
 
@@ -465,7 +358,6 @@ def run_round(
     policy: CrawlPolicy,
     round_no: int,
     bloom: DataFrame | None = None,
-    band_hist: dict[int, int] | None = None,
 ) -> dict[str, DataFrame]:
     """Execute one round; returns O(delta) state updates + round outputs.
 
@@ -503,10 +395,7 @@ def run_round(
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     cached: list[DataFrame] = []
     selected = (
-        dequeue(
-            frontier, host_state, policy, refill=round_no > 0,
-            cache_registry=cached, band_hist=band_hist,
-        )
+        dequeue(frontier, host_state, policy, refill=round_no > 0, cache_registry=cached)
         .repartition(n_part, F.col("url_hash"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -651,15 +540,12 @@ def run_round(
     # __touched piggybacks on the merge shuffle so the caller can derive the
     # new frontier size ARITHMETICALLY (prev - selected - touched + |delta|)
     # instead of scanning the full frontier for a metrics count — at a 10^10
-    # frontier an O(state) read per round just for a progress number. The tag
-    # value is the touched row's OLD priority band (NOT a boolean): the same
-    # merge then also yields the per-band removals the dequeue band histogram
-    # needs; -1000 marks brand-new keys (max() keeps the old band when both
-    # versions of a key are present — a frontier key is unique, so at most
-    # one tagged row per key carries a real band).
+    # frontier an O(state) read per round just for a progress number. 1 marks
+    # a key that already sat in the frontier, 0 a brand-new key; max() over a
+    # merged key is 1 iff one of its versions came from the frontier.
     fdelta_tagged = merge_frontier(
-        touched.withColumn("__touched", band_col(F.col("priority"))).unionByName(
-            additions.withColumn("__touched", F.lit(-1000))
+        touched.withColumn("__touched", F.lit(1)).unionByName(
+            additions.withColumn("__touched", F.lit(0))
         ),
         tag_col="__touched",
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -678,7 +564,6 @@ def run_round(
         "bloom_delta": bloom_delta,
         "documents": documents,
         "crawl_log": crawl_log,
-        "selected_count": selected,  # caller may count for the empty-round gate
         "fetched": fetched,
         "additions": additions,  # discovered ∪ retries (frontier delta input)
         "_cached": cached,  # caller unpersists after commit

@@ -99,6 +99,18 @@ def test_lsh_refined_equals_exact_jaccard_on_candidates(spark, sf_dir):
     assert recall >= 0.95, f"LSH recall {recall:.3f} on {len(exact)} true pairs"
 
 
+def test_lsh_refined_rejects_degenerate_threshold(spark):
+    """At threshold <= 0 the Jaccard filter keeps zero-intersection
+    candidate pairs, so a threshold outside (0, 1] fails loudly."""
+    corpus = spark.createDataFrame(
+        [(1, "a b c d e f g"), (2, "h i j k l m n")], "doc_id long, text string"
+    )
+    for bad in (0.0, -0.5, 1.5, float("nan")):
+        with pytest.raises(ValueError, match="threshold"):
+            DD.lsh_refined_pairs(corpus, "doc_id", "text", threshold=bad)
+    assert DD.lsh_refined_pairs(corpus, "doc_id", "text", threshold=1.0).count() == 0
+
+
 def test_embed_lsh_recall_vs_exact(spark, sf_dir):
     """Hyperplane-bucketed near-dup pairs are a subset of the all-pairs
     answer with identical cosines; recall is pinned (cosine >= 0.99 pairs are

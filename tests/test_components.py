@@ -81,35 +81,3 @@ def test_no_residual_caches(spark):
     _cc(spark, [(1, 2)], [1, 2, 3])
     leaked = {info.id() for info in jsc.getRDDStorageInfo()} - before
     assert not leaked, f"residual cached RDDs: {leaked}"
-
-
-def test_cluster_tables_reuse_equals_self_contained(spark):
-    # VERDICT r5 #6: passing a precomputed components table into
-    # dedup_cluster_tables must yield the identical roster as the
-    # self-contained path that recomputes the pairs+CC chain itself.
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog again and again ok"),
-        (2, "the quick brown fox jumps over the lazy dog again and again ok"),
-        (3, "the quick brown fox jumps over the lazy dog again and again"),
-        (4, "a completely different document about spark query planning"),
-        (5, "yet another unrelated text with its own words entirely here"),
-    ]
-    corpus = spark.createDataFrame(rows, "doc_id long, text string")
-    comp_a, roster_a = DD.dedup_cluster_tables(corpus, "doc_id", "text")
-    a_comp = sorted(tuple(r) for r in comp_a.collect())
-    a_roster = sorted(tuple(r) for r in roster_a.collect())
-    # reuse path: hand the computed components table back in — the chain
-    # must not rerun (components is a plain DataFrame; equality of the
-    # derived roster is the contract)
-    comp_df = spark.createDataFrame(
-        [tuple(r) for r in comp_a.collect()], "node long, comp long"
-    )
-    _, roster_b = DD.dedup_cluster_tables(
-        corpus, "doc_id", "text", components=comp_df
-    )
-    b_roster = sorted(tuple(r) for r in roster_b.collect())
-    assert a_roster == b_roster
-    # and the self-contained roster agrees with a from-scratch second run
-    comp_c, roster_c = DD.dedup_cluster_tables(corpus, "doc_id", "text")
-    assert sorted(tuple(r) for r in comp_c.collect()) == a_comp
-    assert sorted(tuple(r) for r in roster_c.collect()) == a_roster

@@ -32,14 +32,17 @@ def test_q5_broadcasts_all_dimensions(spark, sf_dir):
 def test_dequeue_no_global_window_for_large_caps(spark):
     frontier = spark.createDataFrame([], FRONTIER_SCHEMA)
     hs = spark.createDataFrame([], HOST_STATE_SCHEMA)
+    registry: list = []
     # small cap -> TakeOrderedAndProject (distributed top-K, not a sort-all)
-    small = dequeue(frontier, hs, CrawlPolicy(max_urls_per_round=200), refill=True)
+    small = dequeue(frontier, hs, CrawlPolicy(max_urls_per_round=200), refill=True, cache_registry=registry)
     assert "TakeOrderedAndProject" in _plan(small)
     # large cap -> range-partitioned rank, no driver-merge TakeOrdered
-    big = dequeue(frontier, hs, CrawlPolicy(max_urls_per_round=100_000), refill=True)
+    big = dequeue(frontier, hs, CrawlPolicy(max_urls_per_round=100_000), refill=True, cache_registry=registry)
     pb = _plan(big)
     assert "TakeOrderedAndProject" not in pb
     assert "rangepartitioning" in pb.lower()
+    for cached in registry:
+        cached.unpersist()
 
 
 def test_anti_join_stays_hash_based(spark, sf_dir):

@@ -1,5 +1,6 @@
-"""Ranking operators: salted == plain top-k; distributed global-rank cap ==
-the naive orderBy+limit+window construction (the large-cap dequeue path)."""
+"""Ranking operators: salted == plain top-k; the distributed global-rank cap
+(the large-cap dequeue path, whose placement-freezing caches the caller owns
+through ``cache_registry``) == the naive orderBy+limit+window construction."""
 
 from __future__ import annotations
 
@@ -39,9 +40,11 @@ def test_global_rank_cap_large_path(spark):
     df = _df(spark, 30000)
     order = [F.col("prio").desc(), F.col("h").asc(), F.col("id").asc()]
     cap = 25000  # > 20k threshold -> distributed range-rank path
-    ranked, total = _global_rank_cap(df, order, cap, None)
-    assert total == 30000  # survivors total comes free from the offsets job
+    registry: list = []
+    ranked = _global_rank_cap(df, order, cap, registry)
     got = {(r["id"], r["seq"]) for r in ranked.collect()}
+    for cached in registry:
+        cached.unpersist()
     w = Window.orderBy(*order)
     expect = {
         (r["id"], r["seq"])
