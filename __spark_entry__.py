@@ -435,7 +435,9 @@ def dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _neardup_corpus(spark, sf_dir)
     caches: list = []
-    pairs = DD.minhash_lsh_pairs(corpus, "doc_id", "text", k=3, cache_registry=caches)
+    pairs = DD.minhash_lsh_pairs(
+        DD.minhash_signature_cols(corpus, "doc_id", "text", k=3), cache_registry=caches
+    )
     return _materialize_and_release(pairs, caches)
 
 
@@ -482,12 +484,9 @@ def dedup_lsh_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _materialize_and_release(pairs, caches)
 
 
-def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-CLUSTER assignment: connected components over the
-    LSH-refined near-dup pairs — (doc_id, component) for every corpus doc,
-    component = min doc id reachable through the pair graph (singletons map
-    to themselves). The keep-one-per-cluster step a corpus pipeline runs
-    after pairwise dedup: (a,b),(b,c) collapse to one cluster {a,b,c}."""
+def _dedup_clusters(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
+    """(node, comp) over the LSH-refined near-dup pairs, plus the registry
+    that the caller's final _materialize_and_release must release."""
     from pyspark import StorageLevel
 
     # corpus feeds the pairs chain AND the CC nodes table — persist it so the
@@ -499,6 +498,16 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = DD.lsh_refined_pairs(corpus, "doc_id", "text", k=3, threshold=0.6, cache_registry=caches)
     pairs = _materialize_and_release(pairs, caches)
     comp = DD.connected_components(pairs, corpus, id_col="doc_id", cache_registry=late)
+    return comp, late
+
+
+def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Duplicate-CLUSTER assignment: connected components over the
+    LSH-refined near-dup pairs — (doc_id, component) for every corpus doc,
+    component = min doc id reachable through the pair graph (singletons map
+    to themselves). The keep-one-per-cluster step a corpus pipeline runs
+    after pairwise dedup: (a,b),(b,c) collapse to one cluster {a,b,c}."""
+    comp, late = _dedup_clusters(spark, sf_dir)
     out = comp.select(F.col("node").alias("doc_id"), F.col("comp").alias("component"))
     return _materialize_and_release(out, late)
 
@@ -508,15 +517,7 @@ def dedup_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster (min doc id) with its member count — what a training-data
     pipeline actually writes out after near-dup collapse. Singleton docs are
     their own representative with n_members = 1."""
-    from pyspark import StorageLevel
-
-    # same corpus persist rationale as dedup_components above
-    corpus = _neardup_corpus(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-    caches: list = []
-    late: list = [corpus]
-    pairs = DD.lsh_refined_pairs(corpus, "doc_id", "text", k=3, threshold=0.6, cache_registry=caches)
-    pairs = _materialize_and_release(pairs, caches)
-    comp = DD.connected_components(pairs, corpus, id_col="doc_id", cache_registry=late)
+    comp, late = _dedup_clusters(spark, sf_dir)
     out = comp.groupBy(F.col("comp").alias("doc_id")).agg(
         F.count(F.lit(1)).alias("n_members")
     )
@@ -1117,7 +1118,7 @@ def _sql_refined_ctes() -> str:
                      from banded a join banded b
                        on a.band = b.band and a.band_key = b.band_key and a.doc < b.doc),
             -- refinement on the portable 60-bit shingle hash, matching the
-            -- engine's shared hashed_shingles pass (operators/dedup.py)
+            -- engine's minhash_sig_and_arrays pass (operators/dedup.py)
             shg as (select doc, cast(('0x' || substr(md5(sh), 1, 15)) as bigint) as h
                     from (select doc_id as doc, unnest(list_distinct({DD.sql_shingles('text', 3)})) as sh from corpus)),
             sizes as (select doc, count(*) as sz from shg group by 1),

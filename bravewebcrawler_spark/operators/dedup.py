@@ -9,11 +9,17 @@ SURVEY.md §2.4 A6); a 100 TB corpus needs the full ladder:
   SimHash         per-bit token-hash vote → bucket on the signature
   embedding       cosine near-dup (operators/similarity.py)
 
-Everything is expressed with built-in DataFrame ops (explode / groupBy /
-join) — shuffles land on shingle/band/bucket keys, partial aggregation is
-map-side, and no Python runs per row. All hashes are the portable md5-derived
-construction (functions/text.py) so every operator has an exact DuckDB oracle
-twin in __spark_entry__.oracle_sql.
+Shingling runs as Arrow-batched Python over (doc, text) — one per-doc
+shingle helper, one md5 hash and one NumPy minhash helper shared by the
+three passes (decontamination strings, signatures, signatures plus hash
+sets), because the column-expression form steps an interpreted lambda per
+shingle. Everything downstream is built-in DataFrame ops (explode / groupBy
+/ join): shuffles land on shingle/band/bucket keys and partial aggregation
+is map-side. All hashes are the portable md5-derived construction
+(functions/text.py) so every operator has an exact DuckDB oracle twin in
+__spark_entry__.oracle_sql.
+
+Ids are byte, short, int or long; any other id type raises ``TypeError``.
 
 Scale notes: shingle explode multiplies rows by ~tokens-per-doc — at 100 TB
 the LSH path (fixed 16-value signature per doc, then tiny band keys) is the
@@ -23,14 +29,19 @@ scale and as the LSH refinement step on candidate pairs only.
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
 from bravewebcrawler_spark.functions.text import portable_hash64, tokens_col
 
 MINHASH_P = 1_000_000_007
 NUM_HASHES = 16
 NUM_BANDS = 4  # 4 rows per band
+_SIG_COLS = [f"m{j}" for j in range(NUM_HASHES)]
+_SIG_DDL = ", ".join(f"{m} long" for m in _SIG_COLS)
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -89,129 +100,53 @@ def jaccard_pairs(df: DataFrame, id_col: str, text_col: str, k: int = 3, thresho
     )
 
 
-def _tokens_py(txt: str | None) -> list[str]:
-    """Python twin of functions.text.tokens_col — split on single spaces,
-    drop empty tokens. Identical token lists by construction."""
-    return [t for t in (txt or "").split(" ") if t]
+def _require_integral_ids(df: DataFrame, *cols: str) -> None:
+    """Every operator here casts its ids to long; refuse any other source
+    type up front. A fractional id would truncate (1.5 and 1.7 both become
+    doc 1, merging two documents) and a string id would fail only at run
+    time with CAST_INVALID_INPUT."""
+    for c in cols:
+        t = df.select(c).schema[0].dataType
+        if not isinstance(t, (ByteType, ShortType, IntegerType, LongType)):
+            raise TypeError(f"id column {c!r} must be byte, short, int or long, got {t.simpleString()}")
 
 
-def _shingle_hash_fn(k: int):
-    """mapInArrow body for :func:`hashed_shingles`: per doc, the 60-bit md5
-    hash of each distinct k-shingle. hashlib.md5 == Spark md5 == DuckDB md5
-    (same algorithm over the same UTF-8 bytes), and
-    int(hexdigest[:15], 16) == conv(substring(md5(s),1,15),16,10)."""
-
-    def run(batches):
-        import hashlib
-
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column("doc").to_pylist()
-            texts = batch.column("text").to_pylist()
-            out_d: list[int] = []
-            out_h: list[int] = []
-            ap_d, ap_h = out_d.append, out_h.append
-            md5 = hashlib.md5
-            for d, txt in zip(ids, texts):
-                toks = _tokens_py(txt)
-                n = len(toks)
-                if n < k:
-                    continue
-                seen: set[str] = set()
-                add = seen.add
-                for i in range(n - k + 1):
-                    s = " ".join(toks[i : i + k])
-                    if s not in seen:
-                        add(s)
-                        ap_d(d)
-                        ap_h(int(md5(s.encode("utf-8")).hexdigest()[:15], 16))
-            if out_d:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(out_d, pa.int64()), pa.array(out_h, pa.int64())],
-                    names=["doc", "H"],
-                )
-
-    return run
+def _doc_text(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """The (doc long, text) projection every shingle pass reads."""
+    _require_integral_ids(df, id_col)
+    return df.select(F.col(id_col).cast("long").alias("doc"), F.col(text_col).alias("text"))
 
 
-def _shingle_hash_array_fn(k: int):
-    """mapInArrow body for :func:`shingle_hash_arrays`: per doc, the full
-    DISTINCT shingle-hash set as ONE list<int64> cell (same 60-bit md5
-    values as :func:`hashed_shingles`, grouped per doc inside the batch so
-    no groupBy shuffle is ever needed to reassemble the set)."""
-
-    def run(batches):
-        import hashlib
-
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column("doc").to_pylist()
-            texts = batch.column("text").to_pylist()
-            out_d: list[int] = []
-            out_hs: list[list[int]] = []
-            md5 = hashlib.md5
-            for d, txt in zip(ids, texts):
-                toks = _tokens_py(txt)
-                n = len(toks)
-                if n < k:
-                    out_d.append(d)
-                    out_hs.append([])
-                    continue
-                seen: set[int] = set()
-                add = seen.add
-                for i in range(n - k + 1):
-                    add(int(md5(" ".join(toks[i : i + k]).encode("utf-8")).hexdigest()[:15], 16))
-                out_d.append(d)
-                out_hs.append(list(seen))
-            if out_d:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(out_d, pa.int64()), pa.array(out_hs, pa.list_(pa.int64()))],
-                    names=["doc", "hs"],
-                )
-
-    return run
+def _shingles_py(txt: str | None, k: int) -> list[str]:
+    """Python twin of :func:`shingles_col`: the k-word shingles of the
+    whitespace tokens (empty tokens dropped), in order, repeats kept."""
+    toks = [t for t in (txt or "").split(" ") if t]
+    return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
 
 
-def _shingle_string_fn(k: int):
-    """mapInArrow body for :func:`exploded_shingle_strings`: per doc, one row
-    per DISTINCT k-shingle carrying the shingle STRING and its portable
-    60-bit hash (same int(md5[:15],16) construction as everywhere else)."""
+def _h60(s: str) -> int:
+    """Python twin of :func:`portable_hash64`: hashlib md5 == Spark md5 ==
+    DuckDB md5 over the same UTF-8 bytes, and int(hexdigest[:15], 16) ==
+    conv(substring(md5(s), 1, 15), 16, 10)."""
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
-    def run(batches):
-        import hashlib
 
-        import pyarrow as pa
+def _minhash_minima(flat, counts):
+    """The NUM_HASHES minhash minima of consecutive hash sets (``counts[i]``
+    values of ``flat`` per set, every count > 0): h_j(H) = (a_j * (H mod P)
+    + b_j) mod P, one NumPy segment-min per j. Exact integer math: H mod P
+    < P and a_j <= 2*NUM_HASHES+3 keep a_j*H + b_j < 2^63, so int64 never
+    wraps. Repeated values (duplicate shingles, 60-bit or mod-P collisions)
+    cannot change a min, so distinct-ness may be taken on any of them."""
+    import numpy as np
 
-        for batch in batches:
-            ids = batch.column("doc").to_pylist()
-            texts = batch.column("text").to_pylist()
-            out_d: list[int] = []
-            out_s: list[str] = []
-            out_h: list[int] = []
-            md5 = hashlib.md5
-            for d, txt in zip(ids, texts):
-                toks = _tokens_py(txt)
-                n = len(toks)
-                if n < k:
-                    continue
-                seen: set[str] = set()
-                add = seen.add
-                for i in range(n - k + 1):
-                    s = " ".join(toks[i : i + k])
-                    if s not in seen:
-                        add(s)
-                        out_d.append(d)
-                        out_s.append(s)
-                        out_h.append(int(md5(s.encode("utf-8")).hexdigest()[:15], 16))
-            if out_d:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(out_d, pa.int64()), pa.array(out_s, pa.string()), pa.array(out_h, pa.int64())],
-                    names=["doc", "sh", "shh"],
-                )
-
-    return run
+    H = np.array(flat, dtype=np.int64) % MINHASH_P
+    offs = np.zeros(len(counts), dtype=np.int64)
+    np.cumsum(counts[:-1], out=offs[1:])
+    return [
+        np.minimum.reduceat((H * (2 * j + 3) + (5 * j + 7)) % MINHASH_P, offs)
+        for j in range(NUM_HASHES)
+    ]
 
 
 def exploded_shingle_strings(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
@@ -222,235 +157,113 @@ def exploded_shingle_strings(df: DataFrame, id_col: str, text_col: str, k: int =
     exists because the column-expression shingle build steps an interpreted
     HOF lambda per element (guide §4.2 — decontamination over the corpus
     measured the HOF pass at ~25 µs/shingle vs ~1 µs in batched Python)."""
-    return df.select(
-        F.col(id_col).cast("long").alias("doc"), F.col(text_col).alias("text")
-    ).mapInArrow(_shingle_string_fn(k), "doc long, sh string, shh long")
-
-
-def shingle_hash_arrays(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """(doc, hs: array<long>) — each doc's DISTINCT shingle-hash set as one
-    array cell, from a single Arrow-batched pass (guide §4.2). The row-per-
-    shingle twin is :func:`hashed_shingles`; this form exists for consumers
-    that need whole sets per doc (exact-Jaccard refinement): set size is
-    ``size(hs)`` and the intersection count is ``size(array_intersect)`` —
-    no explode, no groupBy, no shingle-level shuffle at all."""
-    return df.select(
-        F.col(id_col).cast("long").alias("doc"), F.col(text_col).alias("text")
-    ).mapInArrow(_shingle_hash_array_fn(k), "doc long, hs array<long>")
-
-
-def hashed_shingles(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """(doc, H) — the portable 60-bit hash of each DISTINCT k-shingle per doc.
-
-    The ONE pass over the text that every shingle-based operator can share:
-    set sizes and intersection counts derive from it, so everything
-    downstream shuffles 16-byte (doc, long) rows instead of shingle strings.
-
-    Round-6: the pass runs as an Arrow-batched Python transform
-    (optimization guide §4.2). The previous column-expression form
-    (transform/slice/array_join + md5 per shingle) evaluated its
-    higher-order-function lambdas per ELEMENT outside whole-stage codegen —
-    measured ~79 core-seconds for the sf1.0 corpus's 3.2M shingles (~25 µs
-    per shingle); the same work as a Python loop over Arrow batches with C
-    ``hashlib.md5`` is ~7 core-seconds. Values are bit-identical (same md5
-    over the same UTF-8 bytes, same hex-prefix integer), pytest/oracle
-    checked, and only (doc, text) crosses the boundary.
-    """
-    return df.select(
-        F.col(id_col).cast("long").alias("doc"), F.col(text_col).alias("text")
-    ).mapInArrow(_shingle_hash_fn(k), "doc long, H long")
-
-
-def _minhash_sig_fn(k: int):
-    """mapInArrow body for the direct signature pass: per doc, the 16
-    minhash values over its distinct shingle-hash set, computed with one
-    NumPy segment-min per hash function. Exact integer math: h < P and
-    a_j <= 35 keep a_j*h + b_j < 2^63, so int64 never wraps; min over the
-    distinct set equals min over all occurrences; distinct-ness taken on the
-    hash values is min-equivalent to distinct-ness on the shingle strings
-    (a 60-bit collision merges equal values, which cannot change a min)."""
 
     def run(batches):
-        import hashlib
-
-        import numpy as np
         import pyarrow as pa
 
-        coeffs = [(2 * j + 3, 5 * j + 7) for j in range(NUM_HASHES)]
         for batch in batches:
-            ids = batch.column("doc").to_pylist()
-            texts = batch.column("text").to_pylist()
-            doc_out: list[int] = []
-            counts: list[int] = []
-            flat: list[int] = []
-            md5 = hashlib.md5
-            for d, txt in zip(ids, texts):
-                toks = _tokens_py(txt)
-                n = len(toks)
-                if n < k:
-                    continue
-                hs: set[int] = set()
-                add = hs.add
-                for i in range(n - k + 1):
-                    s = " ".join(toks[i : i + k])
-                    add(int(md5(s.encode("utf-8")).hexdigest()[:15], 16) % MINHASH_P)
-                doc_out.append(d)
-                counts.append(len(hs))
-                flat.extend(hs)
-            if not doc_out:
-                continue
-            H = np.array(flat, dtype=np.int64)
-            offs = np.zeros(len(counts), dtype=np.int64)
-            np.cumsum(counts[:-1], out=offs[1:])
-            cols = [
-                pa.array(np.minimum.reduceat((H * a + b) % MINHASH_P, offs), pa.int64())
-                for a, b in coeffs
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(doc_out, pa.int64()), *cols],
-                names=["doc", *[f"m{j}" for j in range(NUM_HASHES)]],
-            )
-
-    return run
-
-
-def _sig_and_array_fn(k: int):
-    """mapInArrow body for :func:`minhash_sig_and_arrays`: per doc, BOTH the
-    distinct raw shingle-hash set (one list<int64> cell, as
-    :func:`_shingle_hash_array_fn`) and the 16 minhash minima (as
-    :func:`_minhash_sig_fn`) from a single shingling of the text. Minima are
-    taken over the raw set reduced mod P — the same values as the
-    set-of-mod-P construction because a mod-P collision merges equal
-    values, which cannot change a min. Docs with no shingles (< k tokens)
-    emit an empty set and NULL minima (the signature pass emitted no row
-    for them; callers filter on ``size(hs) > 0`` to recover that row set
-    exactly)."""
-
-    def run(batches):
-        import hashlib
-
-        import numpy as np
-        import pyarrow as pa
-
-        coeffs = [(2 * j + 3, 5 * j + 7) for j in range(NUM_HASHES)]
-        for batch in batches:
-            ids = batch.column("doc").to_pylist()
-            texts = batch.column("text").to_pylist()
             out_d: list[int] = []
-            out_hs: list[list[int]] = []
-            counts: list[int] = []
-            flat: list[int] = []
-            sig_rows: list[int] = []  # indices into out_d that have shingles
-            md5 = hashlib.md5
-            for d, txt in zip(ids, texts):
-                toks = _tokens_py(txt)
-                n = len(toks)
-                out_d.append(d)
-                if n < k:
-                    out_hs.append([])
-                    continue
-                seen: set[int] = set()
-                add = seen.add
-                for i in range(n - k + 1):
-                    add(int(md5(" ".join(toks[i : i + k]).encode("utf-8")).hexdigest()[:15], 16))
-                out_hs.append(list(seen))
-                sig_rows.append(len(out_d) - 1)
-                counts.append(len(seen))
-                flat.extend(seen)
-            if not out_d:
-                continue
-            mcols: list[list] = []
-            if sig_rows:
-                H = np.array(flat, dtype=np.int64) % MINHASH_P
-                offs = np.zeros(len(counts), dtype=np.int64)
-                np.cumsum(counts[:-1], out=offs[1:])
-                for a, b in coeffs:
-                    mins = np.minimum.reduceat((H * a + b) % MINHASH_P, offs)
-                    col: list = [None] * len(out_d)
-                    for pos, v in zip(sig_rows, mins):
-                        col[pos] = int(v)
-                    mcols.append(col)
-            else:
-                mcols = [[None] * len(out_d) for _ in coeffs]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_d, pa.int64()),
-                    pa.array(out_hs, pa.list_(pa.int64())),
-                    *[pa.array(c, pa.int64()) for c in mcols],
-                ],
-                names=["doc", "hs", *[f"m{j}" for j in range(NUM_HASHES)]],
-            )
+            out_s: list[str] = []
+            for d, txt in zip(batch.column("doc").to_pylist(), batch.column("text").to_pylist()):
+                sh = dict.fromkeys(_shingles_py(txt, k))
+                out_d += [d] * len(sh)
+                out_s += sh
+            if out_d:
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(out_d, pa.int64()),
+                        pa.array(out_s, pa.string()),
+                        pa.array([_h60(s) for s in out_s], pa.int64()),
+                    ],
+                    names=["doc", "sh", "shh"],
+                )
 
-    return run
-
-
-def minhash_sig_and_arrays(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """(doc, hs, m0..m15) — the shingle-hash SET and the minhash signature
-    from ONE Arrow pass over the corpus. The refined-dedup chain consumes
-    both (candidates from the signature bands, exact Jaccard from the
-    sets); computing them together halves the Python passes over the text
-    (:func:`_sig_and_array_fn` for the value-equality argument)."""
-    return df.select(
-        F.col(id_col).cast("long").alias("doc"), F.col(text_col).alias("text")
-    ).mapInArrow(
-        _sig_and_array_fn(k),
-        "doc long, hs array<long>, " + ", ".join(f"m{j} long" for j in range(NUM_HASHES)),
-    )
+    return _doc_text(df, id_col, text_col).mapInArrow(run, "doc long, sh string, shh long")
 
 
 def minhash_signature_cols(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """Per-doc minhash signature as NUM_HASHES columns:
-    h_j(s) = (a_j * H(s) + b_j) mod P with H the portable 60-bit hash reduced
-    mod P; a_j <= 2*NUM_HASHES+3 keeps a_j*H < 2^63 (ANSI-safe).
+    """(doc, m0..m15) — per-doc minhash signature over the portable 60-bit
+    shingle hashes (:func:`_minhash_minima`), for docs with at least one
+    shingle. One Arrow-batched pass: each batch holds complete docs, so no
+    shuffle runs before the signature rows exist (the former explode →
+    16-way min aggregate measured ~53 core-seconds at sf1.0)."""
 
-    Round-6 default path: ONE Arrow-batched Python pass over (doc, text)
-    computes shingle hashes and all 16 per-doc minima in place
-    (:func:`_minhash_sig_fn`) — each task's batch holds complete docs, so no
-    shuffle happens at all before the (doc, 16 longs) signature rows exist
-    (the former explode → 16-way min hash-aggregate measured ~53
-    core-seconds at sf1.0 for the aggregate alone, on top of a ~79
-    core-second shingle pass).
-    """
-    return df.select(
-        F.col(id_col).cast("long").alias("doc"), F.col(text_col).alias("text")
-    ).mapInArrow(
-        _minhash_sig_fn(k),
-        "doc long, " + ", ".join(f"m{j} long" for j in range(NUM_HASHES)),
-    )
+    def run(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            docs: list[int] = []
+            counts: list[int] = []
+            flat: list[int] = []
+            for d, txt in zip(batch.column("doc").to_pylist(), batch.column("text").to_pylist()):
+                hs = {_h60(s) for s in _shingles_py(txt, k)}
+                if hs:
+                    docs.append(d)
+                    counts.append(len(hs))
+                    flat.extend(hs)
+            if docs:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(docs, pa.int64()), *[pa.array(m, pa.int64()) for m in _minhash_minima(flat, counts)]],
+                    names=["doc", *_SIG_COLS],
+                )
+
+    return _doc_text(df, id_col, text_col).mapInArrow(run, f"doc long, {_SIG_DDL}")
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    cache_registry: list | None = None,
-    signatures: DataFrame | None = None,
-) -> DataFrame:
-    """MinHash+LSH candidate pairs: signature → band keys → bucket equi-join.
+def minhash_sig_and_arrays(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
+    """(doc, hs, m0..m15) — each doc's DISTINCT shingle-hash set as one
+    array cell plus its minhash signature, from ONE Arrow pass over the
+    corpus. The refined-dedup chain consumes both (candidates from the
+    signature bands, exact Jaccard from the sets), so the text is shingled
+    once. Every doc gets a row; a doc with no shingles (< k tokens) gets an
+    empty set and NULL minima, so ``size(hs) > 0`` recovers exactly the row
+    set of :func:`minhash_signature_cols` with identical values."""
+
+    def run(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        for batch in batches:
+            ids = batch.column("doc").to_pylist()
+            sets = [list({_h60(s) for s in _shingles_py(txt, k)}) for txt in batch.column("text").to_pylist()]
+            counts = np.array([len(hs) for hs in sets], dtype=np.int64)
+            has = counts > 0
+            mins = np.zeros((NUM_HASHES, len(ids)), dtype=np.int64)
+            if has.any():
+                mins[:, has] = _minhash_minima([h for hs in sets for h in hs], counts[has])
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(ids, pa.int64()),
+                    pa.array(sets, pa.list_(pa.int64())),
+                    *[pa.array(m, pa.int64(), mask=~has) for m in mins],
+                ],
+                names=["doc", "hs", *_SIG_COLS],
+            )
+
+    return _doc_text(df, id_col, text_col).mapInArrow(run, f"doc long, hs array<long>, {_SIG_DDL}")
+
+
+def minhash_lsh_pairs(sig: DataFrame, cache_registry: list | None = None) -> DataFrame:
+    """MinHash+LSH candidate pairs from a (doc, m0..m15) signature table
+    (:func:`minhash_signature_cols`): band keys → bucket equi-join.
 
     The scale path: per doc only NUM_HASHES values survive; candidate
     generation shuffles on small (band, band_key) keys. Pairs are distinct
-    (id_a < id_b); refinement (true Jaccard on candidates) is jaccard_pairs
-    restricted to these pairs.
+    (id_a < id_b); refinement (true Jaccard on candidates) is
+    :func:`lsh_refined_pairs`.
 
-    Band rows come from ONE signature aggregate + an explode of the 4
-    per-band key structs — NOT a 4-way union of projections, which (with the
-    2 self-join sides) re-ran the whole scan→shingle→md5→16-min-agg pipeline
-    8x (measured: 24 parquet scans, 0 reused exchanges in the executed
-    plan). With ``cache_registry`` the tiny banded table (4 rows x 20 bytes
-    per doc) is persisted so the self-join reads it twice from memory —
+    Band rows come from ONE signature table + an explode of the 4 per-band
+    key structs — NOT a 4-way union of projections, which (with the 2
+    self-join sides) re-ran the whole scan→shingle→md5→16-min pipeline 8x
+    (measured: 24 parquet scans, 0 reused exchanges in the executed plan).
+    With ``cache_registry`` the tiny banded table (4 rows x 20 bytes per
+    doc) is persisted so the self-join reads it twice from memory —
     signature work runs exactly once; without a registry the explode alone
     still cuts the recompute to 2x.
     """
     from pyspark import StorageLevel
 
     rows_per_band = NUM_HASHES // NUM_BANDS
-    # ``signatures``: a precomputed (doc, m0..m15) table (e.g. the shared
-    # pass of minhash_sig_and_arrays) — identical values to the direct pass
-    # by construction, forwarded by lsh_refined_pairs so the corpus is
-    # shingled once, not twice.
-    sig = signatures if signatures is not None else minhash_signature_cols(df, id_col, text_col, k)
 
     def band_key(band: int):
         key = F.lit(0).cast("long")
@@ -497,11 +310,11 @@ def lsh_refined_pairs(
     pairs that provably cannot reach the threshold (J <= min_sz/max_sz)
     before the intersection join runs.
 
-    Two Arrow-batched Python passes over the corpus (round-6): the direct
-    signature pass (shingle → 16 minima inside one batch, no shuffle) and a
-    per-doc DISTINCT shingle-hash ARRAY pass (:func:`shingle_hash_arrays`,
-    semi-joined to candidate endpoints and persisted). The refinement is
-    then two equi-joins of the pair list against the array table plus
+    One Arrow-batched Python pass over the corpus
+    (:func:`minhash_sig_and_arrays`) yields both the signature (candidate
+    generation) and each doc's DISTINCT shingle-hash set as one array cell
+    (semi-joined to candidate endpoints). The refinement is then two
+    equi-joins of the pair list against the array table plus
     ``size(array_intersect)`` per surviving pair — the former shape
     (explode the hash sets, join pairs through (doc, H) rows, re-aggregate)
     shuffled every exploded (pair, H) row; this one shuffles each candidate
@@ -531,12 +344,9 @@ def lsh_refined_pairs(
     both = minhash_sig_and_arrays(df, id_col, text_col, k).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    # size(hs) > 0 recovers exactly the row set the direct signature pass
-    # emits (it skips shingle-less docs; the combined pass NULL-pads them)
-    sig = both.where(F.size("hs") > 0).select("doc", *[f"m{j}" for j in range(NUM_HASHES)])
-    cand = minhash_lsh_pairs(
-        df, id_col, text_col, k, cache_registry=cache_registry, signatures=sig
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # size(hs) > 0 recovers exactly the row set of minhash_signature_cols
+    sig = both.where(F.size("hs") > 0).select("doc", *_SIG_COLS)
+    cand = minhash_lsh_pairs(sig, cache_registry=cache_registry).persist(StorageLevel.MEMORY_AND_DISK)
     cand_docs = cand.select(F.col("id_a").alias("doc")).unionByName(
         cand.select(F.col("id_b").alias("doc"))
     ).distinct()
@@ -758,6 +568,8 @@ def connected_components(
     """
     from pyspark import StorageLevel
 
+    _require_integral_ids(edges, src, dst)
+    _require_integral_ids(nodes, id_col)
     und = (
         edges.select(F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v"))
         .union(edges.select(F.col(dst).cast("long").alias("u"), F.col(src).cast("long").alias("v")))

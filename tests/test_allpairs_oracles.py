@@ -88,7 +88,7 @@ def test_lsh_refined_equals_exact_jaccard_on_candidates(spark, sf_dir):
         assert j == exact[pair], (pair, j, exact[pair])
     cand = {
         (r["id_a"], r["id_b"])
-        for r in DD.minhash_lsh_pairs(corpus, "doc_id", "text", k=3).collect()
+        for r in DD.minhash_lsh_pairs(DD.minhash_signature_cols(corpus, "doc_id", "text", k=3)).collect()
     }
     assert set(refined) == set(exact) & cand
     # recall of the banded candidate generation at threshold 0.6 — pinned so

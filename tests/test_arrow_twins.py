@@ -13,6 +13,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import pytest
 from pyspark.sql import functions as F
 
 from bravewebcrawler_spark.functions import text as TX
@@ -41,21 +42,64 @@ def _docs(spark):
     return real.unionByName(edge)
 
 
-def test_shingle_hash_arrays_equals_hashed_shingles(spark):
+def test_minhash_sig_and_arrays_equals_column_form(spark):
+    """The refined chain's combined pass: ``hs`` is the column-form distinct
+    shingle-hash set of every doc (empty for shingle-less docs), and
+    ``m0..m15`` are the minima of that set — equal to
+    minhash_signature_cols row for row, NULL where a doc has no shingles."""
     docs = _docs(spark)
-    rows = DD.hashed_shingles(docs, "doc_id", "text", 3).collect()
-    want: dict[int, set[int]] = {}
-    for r in rows:
-        want.setdefault(r["doc"], set()).add(r["H"])
-    got = {
-        r["doc"]: set(r["hs"])
-        for r in DD.shingle_hash_arrays(docs, "doc_id", "text", 3).collect()
+    col_form = docs.select(
+        F.col("doc_id").alias("doc"),
+        F.explode(F.array_distinct(DD.shingles_col(F.col("text"), 3))).alias("sh"),
+    ).withColumn("H", TX.portable_hash64(F.col("sh")))
+    want_hs: dict[int, set[int]] = {r["doc_id"]: set() for r in docs.collect()}
+    for r in col_form.collect():
+        want_hs[r["doc"]].add(r["H"])
+    p = DD.MINHASH_P
+    want_sig = {
+        d: tuple(min((a * (h % p) + b) % p for h in hs) for a, b in
+                 ((2 * j + 3, 5 * j + 7) for j in range(DD.NUM_HASHES)))
+        for d, hs in want_hs.items() if hs
     }
-    # row-per-shingle form emits nothing for shingle-less docs; the array
-    # form emits an empty cell — same information
-    got_nonempty = {d: hs for d, hs in got.items() if hs}
-    assert got_nonempty == want
-    assert set(got) == {r["doc_id"] for r in docs.collect()}
+    ms = [f"m{j}" for j in range(DD.NUM_HASHES)]
+    both = DD.minhash_sig_and_arrays(docs, "doc_id", "text", 3).collect()
+    assert len(both) == len(want_hs)
+    assert {r["doc"]: set(r["hs"]) for r in both} == want_hs
+    assert {r["doc"]: tuple(r[m] for m in ms) for r in both if r["hs"]} == want_sig
+    assert all(r[m] is None for r in both if not r["hs"] for m in ms)
+    assert any(not r["hs"] for r in both), "no shingle-less doc: the NULL case is untested"
+    sig = DD.minhash_signature_cols(docs, "doc_id", "text", 3).collect()
+    assert len(sig) == len(want_sig)
+    assert {r["doc"]: tuple(r[m] for m in ms) for r in sig} == want_sig
+
+
+def test_non_integral_ids_rejected(spark):
+    """Ids are cast to long: a fractional id would merge docs 1.5 and 1.7
+    into doc 1 and a string id would fail only at run time, so every
+    operator that takes an id column refuses both at construction."""
+    from bravewebcrawler_spark.operators.decontam import contamination_hits
+
+    text = "alpha beta gamma delta epsilon zeta eta"
+    bench = spark.createDataFrame([(text,)], "text string")
+    for typ, ids in (("double", (1.5, 1.7)), ("string", ("a", "b"))):
+        docs = spark.createDataFrame([(i, text) for i in ids], f"doc_id {typ}, text string")
+        for build in (
+            lambda: DD.exploded_shingle_strings(docs, "doc_id", "text", 3),
+            lambda: DD.minhash_signature_cols(docs, "doc_id", "text", 3),
+            lambda: DD.lsh_refined_pairs(docs, "doc_id", "text"),
+            lambda: contamination_hits(docs, bench, k=3),
+        ):
+            with pytest.raises(TypeError, match="doc_id"):
+                build()
+        edges = spark.createDataFrame([ids], f"id_a {typ}, id_b {typ}")
+        with pytest.raises(TypeError, match="id_a"):
+            DD.connected_components(edges, docs, id_col="doc_id")
+        with pytest.raises(TypeError, match="doc_id"):
+            DD.connected_components(
+                spark.createDataFrame([(1, 2)], "id_a long, id_b long"), docs, id_col="doc_id"
+            )
+    ok = spark.createDataFrame([(1, text)], "doc_id int, text string")
+    assert DD.minhash_signature_cols(ok, "doc_id", "text", 3).count() == 1
 
 
 def test_exploded_shingle_strings_equals_column_form(spark):

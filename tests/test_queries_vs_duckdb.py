@@ -41,9 +41,12 @@ def test_entry_smoke(spark):
 
 
 def test_no_residual_caches_after_cache_managed_queries(spark, sf_dir):
-    """Deterministic cache lifecycle (VERDICT r2 #6): the queries that persist
-    intermediates (lsh_refined_pairs' cand/sh, corpus_prep's uniq) must leave
-    the storage tab exactly as they found it — no ContextCleaner reliance."""
+    """Deterministic cache lifecycle (VERDICT r2 #6): the seven queries that
+    persist intermediates and release them in _materialize_and_release
+    (banded signatures, lsh_refined_pairs' shared pass and candidates, the
+    clustered corpus and components, corpus_prep's uniq, corpus_pack's
+    range-partitioned rows) must leave the storage tab exactly as they
+    found it — no ContextCleaner reliance."""
     import __spark_entry__ as E
 
     jsc = spark.sparkContext._jsc.sc()
@@ -52,7 +55,15 @@ def test_no_residual_caches_after_cache_managed_queries(spark, sf_dir):
         return {info.id() for info in jsc.getRDDStorageInfo()}
 
     before = storage_ids()
-    for name in ("dedup_lsh_refined", "corpus_prep"):
+    for name in (
+        "dedup_minhash_lsh",
+        "dedup_lsh_refined",
+        "dedup_components",
+        "dedup_keep_one",
+        "dedup_simhash_pairs",
+        "corpus_prep",
+        "corpus_pack",
+    ):
         E.queries()[name](spark, sf_dir).count()
     leaked = storage_ids() - before
     assert not leaked, f"residual cached RDDs: {leaked}"

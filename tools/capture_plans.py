@@ -1,15 +1,15 @@
-"""Dump .explain("formatted") for registry queries into plans/r06/.
+"""Dump .explain("formatted") for registry queries into a directory.
 
-Usage: python tools/capture_plans.py <suffix> [query ...]
-  suffix: "before" or "after" — file name becomes plans/r06/<query>_<suffix>.txt
+Usage: python tools/capture_plans.py <out_dir> [query ...]
+  writes <out_dir>/<query>.txt; reads $SPARK_GRAFT_SF_DIR (default sf0.1)
 
-For queries whose registry function EXECUTES during construction
-(_materialize_and_release: the dedup family, corpus_prep, corpus_pack), the
-registry-returned DataFrame is a materialized stub whose plan says nothing, so
-this tool captures the INNER, pre-materialization plan by re-composing the
-query body from the operator modules (same expressions, cache_registry=None).
+For queries whose registry function EXECUTES during construction (the dedup
+family, corpus_prep, corpus_pack), the returned DataFrame is a materialized
+stub whose plan says nothing. For those the tool records the plan of every
+DataFrame the registry body hands to ``_materialize_and_release`` while it
+runs — the registry's own plans, caches included — one section per call.
 Iterative internals (connected-components rounds) have no single static plan;
-the pairs plan that feeds them is what is captured.
+the pairs and result plans around them are what is captured.
 """
 
 from __future__ import annotations
@@ -21,94 +21,51 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 import __spark_entry__ as e  # noqa: E402
-from bravewebcrawler_spark.operators import dedup as DD  # noqa: E402
 from bravewebcrawler_spark.session import get_spark  # noqa: E402
 
-OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r06")
+
+def _formatted(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
 
 
-def inner_plans(spark, sf_dir):
-    """Pre-materialization plans for the execute-on-construction queries."""
-    corpus = e._neardup_corpus(spark, sf_dir)
+def capture(spark, sf_dir: str, name: str) -> str:
+    """The formatted plan text of registry query ``name``."""
+    recorded: list[str] = []
+    release = e._materialize_and_release
 
-    def refined():
-        return DD.lsh_refined_pairs(corpus, "doc_id", "text", k=3, threshold=0.6)
+    def recording(df, caches, row_cap=0):
+        recorded.append(_formatted(df))
+        return release(df, caches, row_cap)
 
-    def minhash():
-        return DD.minhash_lsh_pairs(corpus, "doc_id", "text", k=3)
-
-    def simhash_pairs():
-        return DD.simhash_near_pairs(corpus, "doc_id", "text", bits=16, bands=4, max_hamming=2)
-
-    def corpus_prep_inner():
-        from bravewebcrawler_spark.functions import text as TX
-
-        q = corpus.withColumn("quality", TX.quality_score_col(F.col("text")))
-        kept = q.where(F.col("quality") >= 0.65)
-        uniq = (
-            kept.groupBy(F.md5(F.col("text")).alias("h"))
-            .agg(F.min_by(F.struct("doc_id", "text", "quality"), F.col("doc_id")).alias("r"))
-            .select("r.doc_id", "r.text", "r.quality")
-        )
-        pairs = DD.lsh_refined_pairs(uniq, "doc_id", "text", k=3, threshold=0.6)
-        drops = pairs.select(F.col("id_b").alias("doc_id")).distinct()
-        final = uniq.join(drops, "doc_id", "left_anti")
-        return (
-            TX.lang_bpe_quality_arrow(final, "text", "quality")
-            .groupBy("lang_guess")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum("bpe").cast("long").alias("total_bpe_tokens"),
-                F.round(F.avg("quality"), 4).alias("avg_quality"),
-            )
-        )
-
-    def pack_inner():
-        from bravewebcrawler_spark.functions import text as TX
-
-        docs = e._t(spark, sf_dir, "documents")
-        return docs.select(
-            "doc_id", TX.ws_token_count_col(F.col("text")).cast("long").alias("n_tokens")
-        )
-
-    return {
-        "dedup_minhash_lsh": minhash,
-        "dedup_lsh_refined": refined,
-        "dedup_components": refined,  # pairs plan; CC rounds are iterative
-        "dedup_keep_one": refined,
-        "dedup_simhash_pairs": simhash_pairs,
-        "corpus_prep": corpus_prep_inner,
-        "corpus_pack": pack_inner,  # the scan+token-count stage feeding the prefix sum
-    }
+    e._materialize_and_release = recording
+    try:
+        df = e.queries()[name](spark, sf_dir)
+    finally:
+        e._materialize_and_release = release
+    if not recorded:
+        return _formatted(df)
+    return "".join(
+        f"== _materialize_and_release call {i + 1} of {len(recorded)} ==\n{plan}"
+        for i, plan in enumerate(recorded)
+    )
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    out_dir, names = sys.argv[1], sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.makedirs(OUT_DIR, exist_ok=True)
+    os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("plan-capture")
-    qs = e.queries()
-    inner = inner_plans(spark, sf_dir)
     for name in names:
-        if name in inner:
-            df = inner[name]()
-            note = "(inner pre-materialization plan; registry fn executes on construction)\n"
-        elif name == "stream_stateful_user_stats":
+        if name == "stream_stateful_user_stats":
             print(f"skip {name}: streaming query, no static batch plan")
             continue
-        else:
-            df = qs[name](spark, sf_dir)
-            note = ""
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        path = os.path.join(OUT_DIR, f"{name}_{suffix}.txt")
+        path = os.path.join(out_dir, f"{name}.txt")
         with open(path, "w") as f:
-            f.write(note + buf.getvalue())
+            f.write(capture(spark, sf_dir, name))
         print("wrote", path)
     spark.stop()
 
