@@ -55,7 +55,7 @@ def _test_bits(filt: np.ndarray, pos: np.ndarray) -> np.ndarray:
     return bits.all(axis=1)
 
 
-def empty_bloom(spark: SparkSession, n_buckets: int) -> DataFrame:
+def empty_bloom(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], BLOOM_SCHEMA)
 
 

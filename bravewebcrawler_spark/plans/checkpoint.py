@@ -9,13 +9,15 @@ ROUND, not by total state:
                          selected keys; the seen set is the union of dirs.
   * ``frontier``       — base + delta: a full snapshot every
                          ``policy.compact_every`` rounds (the "base"), and a
-                         ``frontier_delta`` dir (only rediscovered/new rows)
-                         in between. Current frontier =
-                         min-depth-merge(base ∪ deltas) minus keys selected
-                         since the base round.
+                         ``frontier_delta`` dir (only rediscovered/new rows,
+                         already merged against their previous version) in
+                         between. Current frontier = the base folded over
+                         each later round r: drop r's seen keys and r's
+                         delta keys, then union r's delta.
   * ``bloom``          — dirty buckets only per round (with a ``round``
-                         column); current filter = newest row per bucket
-                         since the base round's full snapshot.
+                         column); current filter = the base round's full
+                         snapshot, overlaid with the newest delta row per
+                         bucket since.
   * ``host_state``     — tiny (one row per host), full write each round.
   * ``documents`` / ``crawl_log`` — per-round outputs (append-only by
                          construction).
@@ -72,7 +74,7 @@ def _write(rd: str, name: str, df: DataFrame) -> None:
     df.coalesce(16).write.mode("overwrite").parquet(os.path.join(rd, name))
 
 
-def write_tables(state_dir: str, round_no: int, tables: dict[str, DataFrame]) -> str:
+def write_tables(state_dir: str, round_no: int, tables: dict[str, DataFrame]) -> None:
     """Write a round's tables in order on the calling thread (not yet
     visible to resume until the manifest). The crawl loop calls this for
     writes over COLD caches, which must not run concurrently: Spark does not
@@ -81,7 +83,6 @@ def write_tables(state_dir: str, round_no: int, tables: dict[str, DataFrame]) ->
     rd = round_dir(state_dir, round_no)
     for name, df in tables.items():
         _write(rd, name, df)
-    return rd
 
 
 def start_writes(
@@ -140,44 +141,47 @@ def load_bloom(
     spark: SparkSession, state_dir: str, base_round: int, round_no: int
 ) -> DataFrame:
     """Newest filter bytes per bucket: the base round's full snapshot
-    overlaid with the dirty-bucket deltas committed since."""
+    overlaid with the dirty-bucket deltas committed since; on the base
+    round itself, the snapshot as it is."""
     paths = [os.path.join(round_dir(state_dir, base_round), "bloom")] + [
         os.path.join(round_dir(state_dir, r), "bloom_delta")
         for r in range(base_round + 1, round_no + 1)
     ]
     rows = spark.read.parquet(*paths)
+    if round_no == base_round:
+        return rows.select("bucket", "filter")
     return rows.groupBy("bucket").agg(F.max_by("filter", "round").alias("filter"))
 
 
 def load_frontier(
     spark: SparkSession, state_dir: str, base_round: int, round_no: int
 ) -> DataFrame:
-    """Reconstruct the current frontier from base + deltas.
+    """The base round's snapshot folded over rounds ``base_round+1..round_no``.
 
-    merge_frontier picks the max-(priority,-depth) version of each key, so a
-    key updated in several deltas resolves to its newest (shallowest)
-    version; keys selected since the base round are removed by the anti-join
-    against the seen deltas of those rounds (selected == seen delta)."""
-    from bravewebcrawler_spark.plans.round import merge_frontier
-
-    paths = [os.path.join(round_dir(state_dir, base_round), "frontier")] + [
-        os.path.join(round_dir(state_dir, r), "frontier_delta")
-        for r in range(base_round + 1, round_no + 1)
-    ]
-    frontier = merge_frontier(spark.read.parquet(*paths))
-    if round_no > base_round:
-        removed_paths = [
-            os.path.join(round_dir(state_dir, r), "seen")
-            for r in range(base_round + 1, round_no + 1)
-        ]
-        removed = spark.read.parquet(*removed_paths).select("url_hash")
-        frontier = frontier.join(removed, "url_hash", "left_anti")
+    Each round's rows leave by two anti-joins — its seen delta (the keys it
+    selected) and its frontier delta's keys — and the frontier delta, whose
+    rows run_round already merged against their previous version, is
+    appended. No broadcast hints: AQE picks broadcast only when a delta is
+    genuinely small (see the matching note in plans/round.py)."""
+    frontier = spark.read.parquet(os.path.join(round_dir(state_dir, base_round), "frontier"))
+    for r in range(base_round + 1, round_no + 1):
+        rd = round_dir(state_dir, r)
+        fdelta = spark.read.parquet(os.path.join(rd, "frontier_delta"))
+        removed = spark.read.parquet(os.path.join(rd, "seen")).select("url_hash")
+        frontier = (
+            frontier.join(removed, "url_hash", "left_anti")
+            .join(fdelta.select("url_hash"), "url_hash", "left_anti")
+            .unionByName(fdelta)
+        )
     return frontier
 
 
 def load_state(spark: SparkSession, state_dir: str, round_no: int) -> dict[str, DataFrame]:
-    """Resume state (frontier/seen/host_state/bloom) as of ``round_no`` —
-    round outputs are cumulative and read via plans.crawl.read_outputs."""
+    """Next-round state (frontier/seen/host_state/bloom) as of ``round_no``,
+    read from committed parquet only. The crawl loop reads the next round's
+    state here after every commit, as it does on resume, so a resumed round
+    plans exactly as an uninterrupted one. Round outputs are
+    cumulative and read via plans.crawl.read_outputs."""
     base = _manifest(state_dir, round_no)["base_round"]
     return {
         "frontier": load_frontier(spark, state_dir, base, round_no),

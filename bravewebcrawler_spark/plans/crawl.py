@@ -66,7 +66,6 @@ def initial_state(
         "seen": spark.createDataFrame([], SEEN_SCHEMA),
         "host_state": spark.createDataFrame([], HOST_STATE_SCHEMA),
         "dead_letter": dead,
-        "robots": robots,
     }
 
 
@@ -98,16 +97,13 @@ def crawl(
     last = ckpt.latest_round(state_dir) if resume else None
     if last is not None:
         state = ckpt.load_state(spark, state_dir, last)
-        frontier, seen, host_state = state["frontier"], state["seen"], state["host_state"]
-        bloom = state["bloom"]
         m = ckpt.load_metrics(state_dir, last)
         seen_size = m["seen_size"]
         frontier_size = m["frontier_size"]
         base_round = ckpt.load_base_round(state_dir, last)
         start_round = last + 1
     else:
-        st = initial_state(spark, web, seeds, policy)
-        frontier, seen, host_state = st["frontier"], st["seen"], st["host_state"]
+        state = initial_state(spark, web, seeds, policy)
         # Round 0 consumes the initial frontier several times (the dequeue
         # ranking scan in jobA, then the selected/touched/untouched split in
         # jobB) — without a persist each consumer re-runs the 1.6M-row seed
@@ -117,11 +113,11 @@ def crawl(
         # after round 0 commits.
         from pyspark.storagelevel import StorageLevel
 
-        frontier = frontier.persist(StorageLevel.MEMORY_AND_DISK)
-        init_frontier = frontier
-        bloom = empty_bloom(spark, policy.bloom_buckets)
+        init_frontier = state["frontier"].persist(StorageLevel.MEMORY_AND_DISK)
+        state["frontier"] = init_frontier
+        state["bloom"] = empty_bloom(spark)
         # K3: dead-letter rows are kept with their status, never dropped
-        st["dead_letter"].write.mode("overwrite").parquet(os.path.join(state_dir, "dead_letter"))
+        state["dead_letter"].write.mode("overwrite").parquet(os.path.join(state_dir, "dead_letter"))
 
     total_fetched = 0
     from concurrent.futures import ThreadPoolExecutor
@@ -129,21 +125,26 @@ def crawl(
     write_pool = ThreadPoolExecutor(max_workers=4, thread_name_prefix="bwc-write")
     for rnd in range(start_round, policy.max_rounds):
         t0 = time.time()
-        out = run_round(spark, web, frontier, seen, host_state, robots, policy, rnd, bloom)
-        # Bookkeeping rides on the writes (zero extra jobs in the common
-        # path): the crawl_log write IS the warm+count job — an Observation
-        # on it yields (dequeued, fetched_ok) while materializing the
-        # selected+fetched caches — and the frontier_delta write carries the
-        # frontier-size counts the same way. Ordering is still serial on
-        # purpose where caches are cold: Spark does not dedupe in-flight
-        # computation of a persisted partition, so parallel jobs over a cold
-        # cache would each recompute the dequeue+fetch chain (measured: 3x
-        # CPU + GC storm at local[32]).
+        out = run_round(
+            spark, web, state["frontier"], state["seen"], state["host_state"], robots, policy, rnd,
+            state["bloom"],
+        )
+        # Bookkeeping rides on the writes (zero extra jobs): the crawl_log
+        # write IS the warm+count job — an Observation on it yields
+        # (dequeued, fetched_ok, seen) while materializing the
+        # selected+fetched caches — and the frontier or frontier_delta write
+        # carries the frontier-size counts the same way. Ordering is still
+        # serial on purpose where caches are cold: Spark does not dedupe
+        # in-flight computation of a persisted partition, so parallel jobs
+        # over a cold cache would each recompute the dequeue+fetch chain
+        # (measured: 3x CPU + GC storm at local[32]).
         obs_a = Observation()
         log_obs = out["crawl_log"].observe(
             obs_a,
             F.count(F.lit(1)).alias("n"),
             F.count_if(F.col("status") == "FETCHED_OK").alias("ok"),
+            # a TIMEOUT returns to the frontier, not to seen (plans/round.py)
+            F.count_if(F.col("status") != "TIMEOUT").alias("seen"),
         )
         ckpt.write_tables(state_dir, rnd, {"crawl_log": log_obs})
         counts = obs_a.get
@@ -163,6 +164,7 @@ def crawl(
         # frontier+bloom snapshot every compact_every rounds bounds both the
         # reconstruction read fan-in and the lazy cross-round plan depth.
         is_compaction = rnd % max(policy.compact_every, 1) == 0
+        obs_b = Observation()
         if is_compaction:
             base_round = rnd
             # The snapshot write materializes the whole discovery chain
@@ -170,12 +172,13 @@ def crawl(
             # dependency order; the bloom write after it is a warm scan.
             # Written one at a time — concurrent writes over these COLD
             # caches would duplicate the chain in flight.
-            rd = ckpt.write_tables(state_dir, rnd, {"frontier": out["frontier"]})
+            snapshot = out["frontier"].observe(obs_b, F.count(F.lit(1)).alias("n"))
+            ckpt.write_tables(state_dir, rnd, {"frontier": snapshot})
             ckpt.write_tables(
                 state_dir, rnd, {"bloom": out["bloom"].withColumn("round", F.lit(rnd))}
             )
+            frontier_size = obs_b.get["n"]
         else:
-            obs_b = Observation()
             fdelta = (
                 out["fdelta_tagged"]
                 .observe(
@@ -187,26 +190,19 @@ def crawl(
             )
             # frontier_delta first and alone (cold chain — see above), then
             # the bloom delta as a warm scan of its persisted buckets.
-            rd = ckpt.write_tables(state_dir, rnd, {"frontier_delta": fdelta})
+            ckpt.write_tables(state_dir, rnd, {"frontier_delta": fdelta})
             ckpt.write_tables(
                 state_dir, rnd, {"bloom_delta": out["bloom_delta"].withColumn("round", F.lit(rnd))}
             )
+            # Exact new-frontier size WITHOUT scanning the frontier: selected
+            # rows leave (dequeued), touched rows move into the delta, the
+            # delta contributes all its rows.
             b = obs_b.get
-            fdelta_cnt, touched_cnt = b["n"], b["touched"]
+            frontier_size += b["n"] - dequeued - b["touched"]
         for f in early_futs:  # all tables durable before the manifest commit
             f.result()
 
-        # Exact new-frontier size WITHOUT scanning the frontier: selected
-        # rows leave (dequeued), touched rows move into the delta
-        # (touched_cnt), the delta contributes fdelta_cnt. On compaction
-        # rounds the freshly-written snapshot's footer count is authoritative
-        # (and asserts the arithmetic's invariant cheaply at test scale).
-        frontier_size = (
-            spark.read.parquet(os.path.join(rd, "frontier")).count()
-            if is_compaction
-            else frontier_size - dequeued - touched_cnt + fdelta_cnt
-        )
-        seen_size += dequeued
+        seen_size += counts["seen"]
         metrics = ckpt.RoundMetrics(
             round_no=rnd,
             dequeued=dequeued,
@@ -224,25 +220,9 @@ def crawl(
             init_frontier = None
         total_fetched += dequeued
         # Next-round state from COMMITTED parquet (bounded lineage, O(delta)
-        # reads): the frontier chains one broadcast-filtered delta per round
-        # onto the last full snapshot — identical to load_frontier's
-        # reconstruction, applied incrementally.
-        seen = ckpt.load_seen(spark, state_dir, rnd)
-        host_state = spark.read.parquet(os.path.join(rd, "host_state"))
-        if is_compaction:
-            frontier = spark.read.parquet(os.path.join(rd, "frontier"))
-            bloom = spark.read.parquet(os.path.join(rd, "bloom")).select("bucket", "filter")
-        else:
-            fdelta = spark.read.parquet(os.path.join(rd, "frontier_delta"))
-            removed = spark.read.parquet(os.path.join(rd, "seen")).select("url_hash")
-            # no broadcast hints: AQE picks broadcast only when the delta is
-            # genuinely small (see the matching note in plans/round.py)
-            frontier = (
-                frontier.join(removed, "url_hash", "left_anti")
-                .join(fdelta.select("url_hash"), "url_hash", "left_anti")
-                .unionByName(fdelta)
-            )
-            bloom = ckpt.load_bloom(spark, state_dir, base_round, rnd)
+        # reads), through the same call a resume makes: the frontier folds
+        # one delta per round onto the last full snapshot.
+        state = ckpt.load_state(spark, state_dir, rnd)
         if dequeued == 0:
             break
         if stop_after_round is not None and rnd >= stop_after_round:

@@ -357,20 +357,24 @@ def run_round(
     robots: DataFrame,
     policy: CrawlPolicy,
     round_no: int,
-    bloom: DataFrame | None = None,
+    bloom: DataFrame,
 ) -> dict[str, DataFrame]:
     """Execute one round; returns O(delta) state updates + round outputs.
 
     Commit-size contract (the 10^10-frontier design): everything a round
     WRITES is bounded by the round, not by total state —
-      * ``seen_delta``      — this round's selected keys only,
+      * ``seen_delta``      — this round's selected keys only (TIMEOUTs
+        excluded: they return to the frontier),
       * ``bloom_delta``     — only buckets that received hashes,
-      * ``frontier_delta``  — only rows whose key was (re)discovered this
-        round, min-depth-merged against their current frontier version.
-    The full-state views (``frontier``/``seen``/``bloom``) are lazy unions
-    for in-round consumers and the periodic compaction write; the caller
-    (plans/crawl.py) re-derives next-round state from the committed delta
-    parquet so lineage never chains through a round's cached internals.
+      * ``fdelta_tagged``   — only rows whose key was (re)discovered this
+        round, min-depth-merged against their current frontier version (the
+        ``frontier_delta`` table, plus a ``__touched`` tag for the caller's
+        frontier-size arithmetic).
+    The full-state views (``frontier``/``bloom``) are lazy unions for
+    in-round consumers and the periodic compaction write; the caller
+    (plans/crawl.py) reads next-round state from the committed parquet
+    through ``checkpoint.load_state``, so lineage never chains through a
+    round's cached internals.
 
     The frontier split is two BROADCAST joins (selected keys <= round cap;
     discovered keys <= round fan-out), i.e. map-side filters — the frontier
@@ -378,10 +382,8 @@ def run_round(
     outgrows a broadcast (~100M+ keys/round), flip to a plain shuffle join
     for that round (AQE) — the commit stays O(delta) either way.
     """
-    from bravewebcrawler_spark.operators.seen import bloom_hits, bloom_insert_delta, empty_bloom
+    from bravewebcrawler_spark.operators.seen import bloom_hits, bloom_insert_delta
 
-    if bloom is None:
-        bloom = empty_bloom(spark, policy.bloom_buckets)
     # selected and fetched fan out into every downstream branch (seen, log,
     # documents, host_state, frontier); persisting them makes the dequeue
     # windows and the mapInPandas fetch run ONCE per round instead of once
@@ -555,16 +557,12 @@ def run_round(
 
     return {
         "frontier": new_frontier,
-        "frontier_delta": frontier_delta,
         "fdelta_tagged": fdelta_tagged,
-        "seen": new_seen,
         "seen_delta": seen_delta,
         "host_state": new_host_state,
         "bloom": new_bloom,
         "bloom_delta": bloom_delta,
         "documents": documents,
         "crawl_log": crawl_log,
-        "fetched": fetched,
-        "additions": additions,  # discovered ∪ retries (frontier delta input)
         "_cached": cached,  # caller unpersists after commit
     }

@@ -15,6 +15,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_mem(phys_bytes: int, cap_gb: int = 32) -> str:
+    """Driver heap when ``SPARK_DRIVER_MEM`` is unset: ~60 % of the host's
+    physical RAM, at most ``cap_gb``. The heap is pre-committed (``-Xms``
+    equals it, see below), so it must leave the host room for the Python
+    workers and the OS; a fixed 32 g fails to start the JVM on a 15 GB host."""
+    return f"{min(cap_gb << 10, phys_bytes * 6 // 10 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "bravewebcrawler_spark",
     master: str | None = None,
@@ -54,23 +62,20 @@ def get_spark(
         mult = int(os.environ.get("SPARK_GRAFT_SHUFFLE_MULT", "1"))
         shuffle_partitions = max(n * mult, 8)
 
-    aqe = os.environ.get("SPARK_GRAFT_AQE", "1") == "1"
     # Resolve the driver heap BEFORE composing JVM options: -Xms below must
     # match whatever spark.driver.memory finally is, including an extra_conf
-    # or BWC_EXTRA_CONF override (tests run an 8 g driver; Xms32g there would
-    # abort the JVM with "Initial heap size > maximum heap size").
-    driver_mem = os.environ.get("SPARK_DRIVER_MEM", "16g" if n_exec > 0 else "32g")
-    for kv in filter(None, os.environ.get("BWC_EXTRA_CONF", "").split(";")):
-        k, _, v = kv.partition("=")
-        if k.strip() == "spark.driver.memory":
-            driver_mem = v.strip()
+    # override (tests run an 8 g driver; a larger -Xms there would abort the
+    # JVM with "Initial heap size > maximum heap size").
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem(
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"), 16 if n_exec > 0 else 32
+    )
     if extra_conf and "spark.driver.memory" in extra_conf:
         driver_mem = extra_conf["spark.driver.memory"]
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true" if aqe else "false")
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Let AQE re-optimize (coalesce/size) the output partitioning of
@@ -82,10 +87,7 @@ def get_spark(
         # follows DATA size at any scale — the same rule a 100-TB cache
         # wants (measured at sf1.0/local[32]: the 4-query refined-dedup
         # chain 89s -> 60s; results unaffected — partitioning only).
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            "true" if os.environ.get("SPARK_GRAFT_CACHED_AQE", "1") == "1" else "false",
-        )
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -101,8 +103,8 @@ def get_spark(
         # Headroom over the 1g default: a CollectLimit probe's per-task
         # results can transiently exceed 1g before the driver truncates at
         # the limit (seen with the >1M-row simhash pair list at sf1.0); the
-        # driver heap above is sized far past this.
-        .config("spark.driver.maxResultSize", os.environ.get("SPARK_DRIVER_MAX_RESULT", "8g"))
+        # driver heap above is sized past this.
+        .config("spark.driver.maxResultSize", "8g")
         # Throughput GC: G1's pause-time goal thrashes under 32 task threads'
         # allocation rate (measured: 226s -> 102s on the crawl bench at
         # local[32]); batch analytics prefers ParallelGC throughput.
@@ -114,16 +116,14 @@ def get_spark(
         # 21.4 s task). Pre-committing the heap (-Xms = -Xmx) removes the
         # growth-triggered full GCs, and MetaspaceSize=512m removes the
         # "Metadata GC Threshold" full GCs that codegen class-loading fires
-        # early in every session. 32 g (not 90 g) keeps any remaining full
-        # collection proportionally short — full-GC cost scales with heap —
-        # while holding the 8 g maxResultSize headroom with room to spare
-        # (heavy-4 query A/B at sf1.0: 47-72 s band -> 38-46 s).
+        # early in every session. The 32 g cap (not 90 g) keeps any
+        # remaining full collection proportionally short — full-GC cost
+        # scales with heap — while holding the 8 g maxResultSize headroom
+        # with room to spare (heavy-4 query A/B at sf1.0: 47-72 s band ->
+        # 38-46 s).
         .config(
             "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "BWC_JVM_OPTS",
-                f"-XX:+UseParallelGC -Xms{driver_mem} -XX:MetaspaceSize=512m",
-            ),
+            f"-XX:+UseParallelGC -Xms{driver_mem} -XX:MetaspaceSize=512m",
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
@@ -140,21 +140,13 @@ def get_spark(
         builder = (
             builder.config(
                 "spark.executor.extraJavaOptions",
-                os.environ.get(
-                    "BWC_JVM_OPTS",
-                    # same pre-committed-heap rationale as the driver options
-                    # above, sized to THIS executor's memory
-                    f"-XX:+UseParallelGC -Xms{worker_mem_mb}m -XX:MetaspaceSize=256m",
-                ),
+                # same pre-committed-heap rationale as the driver options
+                # above, sized to THIS executor's memory
+                f"-XX:+UseParallelGC -Xms{worker_mem_mb}m -XX:MetaspaceSize=256m",
             )
             .config("spark.executor.memory", f"{worker_mem_mb}m")
             .config("spark.executorEnv.PYTHONPATH", repo_root)
         )
-    # Ad-hoc conf overrides for benchmarking (e.g. AQE advisory partition
-    # size A/B runs): BWC_EXTRA_CONF="k1=v1;k2=v2".
-    for kv in filter(None, os.environ.get("BWC_EXTRA_CONF", "").split(";")):
-        k, _, v = kv.partition("=")
-        builder = builder.config(k.strip(), v.strip())
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

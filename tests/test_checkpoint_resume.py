@@ -3,6 +3,8 @@ killed after round k and resumed equals the uninterrupted crawl bit-for-bit."""
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from bravewebcrawler_spark.plans import checkpoint as ckpt
 from bravewebcrawler_spark.plans.crawl import crawl, read_outputs
 from bravewebcrawler_spark.plans.policy import CrawlPolicy
@@ -20,6 +22,13 @@ def _log(spark, state_dir):
     )
 
 
+def _frontier(spark, state_dir):
+    """The newest committed frontier, every column but the audit-only
+    ``lineage`` (which records the Spark partition a row was built in)."""
+    st = ckpt.load_state(spark, state_dir, ckpt.latest_round(state_dir))
+    return sorted(tuple(r) for r in st["frontier"].drop("lineage").collect())
+
+
 def test_kill_resume_equals_uninterrupted(spark, tmp_path_factory):
     seeds = spark.createDataFrame(WEB.seed_urls(8), "seed_id string, url string")
     full_dir = str(tmp_path_factory.mktemp("full"))
@@ -31,22 +40,28 @@ def test_kill_resume_equals_uninterrupted(spark, tmp_path_factory):
     assert ckpt.latest_round(kill_dir) == 0  # committed exactly one round
     crawl(spark, WEB, seeds, POLICY, kill_dir, resume=True)
     assert _log(spark, kill_dir) == full
+    assert _frontier(spark, kill_dir) == _frontier(spark, full_dir)
 
 
 def test_frontier_size_arithmetic_matches_reconstruction(spark, tmp_path_factory):
     """Non-compaction rounds derive frontier_size arithmetically
     (prev - selected - touched + |delta|) instead of scanning the frontier;
-    the number must equal the actual reconstructed frontier's cardinality."""
+    the number must equal the actual reconstructed frontier's cardinality,
+    and seen_size the committed seen set's. With compact_every=2 the rounds
+    are compaction, delta, compaction, delta: a second base and a delta on
+    top of it are checked too."""
     seeds = spark.createDataFrame(WEB.seed_urls(8), "seed_id string, url string")
     d = str(tmp_path_factory.mktemp("fsize"))
-    crawl(spark, WEB, seeds, POLICY, d)
-    last = ckpt.latest_round(d)
-    assert last is not None and last >= 1  # at least one delta round
-    for r in range(last + 1):
+    crawl(spark, WEB, seeds, replace(POLICY, compact_every=2, max_rounds=4), d)
+    assert ckpt.latest_round(d) == 3
+    for r in range(4):
         m = ckpt.load_metrics(d, r)
         base = ckpt.load_base_round(d, r)
+        assert base == r - r % 2
         actual = ckpt.load_frontier(spark, d, base, r).count()
         assert m["frontier_size"] == actual, (r, m["frontier_size"], actual)
+        seen = ckpt.load_seen(spark, d, r).count()
+        assert m["seen_size"] == seen, (r, m["seen_size"], seen)
 
 
 def test_manifest_is_the_commit_point(spark, tmp_path_factory):
@@ -65,3 +80,4 @@ def test_manifest_is_the_commit_point(spark, tmp_path_factory):
     full_dir = str(tmp_path_factory.mktemp("full2"))
     crawl(spark, WEB, seeds, POLICY, full_dir)
     assert _log(spark, d) == _log(spark, full_dir)
+    assert _frontier(spark, d) == _frontier(spark, full_dir)

@@ -30,7 +30,7 @@ def test_bloom_no_false_negatives(spark):
     rng = random.Random(42)
     inserted = [rng.randrange(0, 1 << 60) for _ in range(400)]
     other = [rng.randrange(0, 1 << 60) for _ in range(400)]
-    bloom = _insert(spark, empty_bloom(spark, N_BUCKETS), inserted)
+    bloom = _insert(spark, empty_bloom(spark), inserted)
     hits = {r["url_hash"] for r in bloom_hits(_hashes_df(spark, inserted + other), bloom, N_BUCKETS, M_BITS).collect()}
     # every inserted hash MUST be flagged (no false negatives)
     assert set(inserted) <= hits
@@ -46,7 +46,7 @@ def test_dedup_with_bloom_equals_exact_antijoin(spark):
     cand_vals = seen_vals[:100] + [rng.randrange(0, 1 << 60) for _ in range(300)]
     seen = _hashes_df(spark, seen_vals)
     cands = _hashes_df(spark, cand_vals).withColumn("tag", F.col("url_hash") % 10)
-    bloom = _insert(spark, empty_bloom(spark, N_BUCKETS), seen_vals)
+    bloom = _insert(spark, empty_bloom(spark), seen_vals)
     hits = bloom_hits(cands.select("url_hash"), bloom, N_BUCKETS, M_BITS)
     confirmed = hits.join(seen, "url_hash", "left_semi")
     got = {r["url_hash"] for r in cands.join(confirmed, "url_hash", "left_anti").collect()}
@@ -56,7 +56,7 @@ def test_dedup_with_bloom_equals_exact_antijoin(spark):
 
 def test_bloom_insert_idempotent(spark):
     vals = list(range(1000, 1100))
-    b1 = _insert(spark, empty_bloom(spark, N_BUCKETS), vals)
+    b1 = _insert(spark, empty_bloom(spark), vals)
     b2 = _insert(spark, b1, vals)
     assert _filters(b1) == _filters(b2)
 
@@ -67,7 +67,7 @@ def test_bloom_insert_delta_touches_only_dirty_buckets(spark):
     # and bucket 7 (new), so buckets 0 and 2-5 must pass through untouched
     first = [rng.randrange(0, 1 << 56) * N_BUCKETS + b for b in range(6) for _ in range(20)]
     second = [rng.randrange(0, 1 << 56) * N_BUCKETS + b for b in (1, 7) for _ in range(20)]
-    bloom = _insert(spark, empty_bloom(spark, N_BUCKETS), first)
+    bloom = _insert(spark, empty_bloom(spark), first)
     before = _filters(bloom)
     assert set(before) == set(range(6))
 
@@ -81,4 +81,4 @@ def test_bloom_insert_delta_touches_only_dirty_buckets(spark):
     # the dirty bucket keeps every old bit and gains the new ones
     old1, new1 = int.from_bytes(before[1], "little"), int.from_bytes(upd[1], "little")
     assert old1 & new1 == old1 and new1 != old1
-    assert _filters(_insert(spark, empty_bloom(spark, N_BUCKETS), first + second)) == after
+    assert _filters(_insert(spark, empty_bloom(spark), first + second)) == after
