@@ -243,7 +243,7 @@ def minhash_sig_and_arrays(df: DataFrame, id_col: str, text_col: str, k: int = 3
     return _doc_text(df, id_col, text_col).mapInArrow(run, f"doc long, hs array<long>, {_SIG_DDL}")
 
 
-def minhash_lsh_pairs(sig: DataFrame, cache_registry: list | None = None) -> DataFrame:
+def minhash_lsh_pairs(sig: DataFrame, *, cache_registry: list) -> DataFrame:
     """MinHash+LSH candidate pairs from a (doc, m0..m15) signature table
     (:func:`minhash_signature_cols`): band keys → bucket equi-join.
 
@@ -256,10 +256,10 @@ def minhash_lsh_pairs(sig: DataFrame, cache_registry: list | None = None) -> Dat
     key structs — NOT a 4-way union of projections, which (with the 2
     self-join sides) re-ran the whole scan→shingle→md5→16-min pipeline 8x
     (measured: 24 parquet scans, 0 reused exchanges in the executed plan).
-    With ``cache_registry`` the tiny banded table (4 rows x 20 bytes per
-    doc) is persisted so the self-join reads it twice from memory —
-    signature work runs exactly once; without a registry the explode alone
-    still cuts the recompute to 2x.
+    The tiny banded table (4 rows x 20 bytes per doc) is persisted into
+    ``cache_registry`` so the self-join reads it twice from memory —
+    signature work runs exactly once. The caller releases the registry
+    after the result is consumed.
     """
     from pyspark import StorageLevel
 
@@ -280,9 +280,8 @@ def minhash_lsh_pairs(sig: DataFrame, cache_registry: list | None = None) -> Dat
             ])
         ).alias("bk"),
     ).select("doc", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
-    if cache_registry is not None:
-        banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-        cache_registry.append(banded)
+    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
+    cache_registry.append(banded)
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(
@@ -298,7 +297,7 @@ def minhash_lsh_pairs(sig: DataFrame, cache_registry: list | None = None) -> Dat
 
 def lsh_refined_pairs(
     df: DataFrame, id_col: str, text_col: str, k: int = 3, threshold: float = 0.6,
-    cache_registry: list | None = None,
+    *, cache_registry: list,
 ) -> DataFrame:
     """The 100-TB dedup composition: MinHash+LSH candidate generation, exact
     Jaccard refinement computed ONLY on the candidate pairs.
@@ -337,10 +336,8 @@ def lsh_refined_pairs(
     # ONE Python pass over the corpus computes BOTH the signature (candidate
     # generation) and the shingle-hash sets (exact refinement) —
     # minhash_sig_and_arrays — persisted because the banded build, the
-    # endpoint unions, and both refinement join sides all read it. Pass
-    # ``cache_registry`` to take ownership of the release (unpersist after
-    # the result is fully consumed); without it Spark's ContextCleaner
-    # unpersists once the consumed plan is garbage-collected.
+    # endpoint unions, and both refinement join sides all read it; the
+    # caller releases ``cache_registry`` once the result is fully consumed.
     both = minhash_sig_and_arrays(df, id_col, text_col, k).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -351,8 +348,7 @@ def lsh_refined_pairs(
         cand.select(F.col("id_b").alias("doc"))
     ).distinct()
     arrs = both.select("doc", "hs").join(cand_docs, "doc", "left_semi")
-    if cache_registry is not None:
-        cache_registry.extend((both, cand))
+    cache_registry.extend((both, cand))
     a = arrs.select(F.col("doc").alias("id_a"), F.col("hs").alias("hs_a"))
     b = arrs.select(F.col("doc").alias("id_b"), F.col("hs").alias("hs_b"))
     # Size-ratio candidate pruning: J(A,B) = |∩|/|∪| <= min(|A|,|B|)/max(|A|,|B|),
@@ -418,7 +414,7 @@ def simhash_near_pairs(
     bits: int = 16,
     bands: int = 4,
     max_hamming: int = 2,
-    cache_registry: list | None = None,
+    *, cache_registry: list,
 ) -> DataFrame:
     """Banded-Hamming simhash near-dup pairs (the scale refinement).
 
@@ -431,8 +427,8 @@ def simhash_near_pairs(
 
     Band rows are ONE simhash computation + an explode of the per-band key
     structs (not a per-band union of projections, which re-ran the bit-vote
-    aggregate bands x 2-join-sides times); with ``cache_registry`` the
-    banded table is persisted so the self-join reads it twice from memory.
+    aggregate bands x 2-join-sides times); the banded table is persisted
+    into ``cache_registry`` so the self-join reads it twice from memory.
     """
     from pyspark import StorageLevel
 
@@ -455,9 +451,8 @@ def simhash_near_pairs(
             ])
         ).alias("bk"),
     ).select("doc", "simhash", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
-    if cache_registry is not None:
-        banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-        cache_registry.append(banded)
+    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
+    cache_registry.append(banded)
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
@@ -509,12 +504,11 @@ def _scratch_ckpt(spark, prefix: str):
 
 
 class _ScratchOwner:
-    """Pairs a persisted result with the scratch checkpoint dir its plan may
-    still recompute through: ``unpersist()`` releases the cache FIRST, then
-    deletes the scratch files. Handed to ``cache_registry`` owners so that on
-    a real cluster an executor loss while the result is still cached can
-    always recompute from the checkpoint parquet — eager deletion right after
-    the materializing count was safe in local mode only (ADVICE r4)."""
+    """Pairs a persisted result with the scratch checkpoint dir its plan
+    reads: ``unpersist()`` releases the cache FIRST, then deletes the
+    scratch files. Handed to the ``cache_registry`` owner so that on a real
+    cluster an executor loss while the result is still in use can always
+    recompute from the checkpoint parquet (ADVICE r4)."""
 
     def __init__(self, df: DataFrame, cleanup) -> None:
         self._df, self._cleanup = df, cleanup
@@ -532,7 +526,7 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iters: int = 50,
-    cache_registry: list | None = None,
+    *, cache_registry: list,
 ) -> DataFrame:
     """Duplicate-cluster assignment: connected components over an undirected
     near-dup pair list — ``(node, component)`` with component = the minimum
@@ -558,13 +552,13 @@ def connected_components(
     under-merged labels silently.
 
     Each round's state is checkpointed to scratch parquet and read back
-    (:func:`_scratch_ckpt` — lineage truncation). The FINAL result is
-    persisted and materialized; with a ``cache_registry`` the registry entry
-    owns BOTH the persist and the scratch files (deleted together at
-    ``unpersist()`` — :class:`_ScratchOwner` — so cluster-mode recomputation
-    after executor loss can always re-read the checkpoints); with no registry
-    the scratch is deleted eagerly, which assumes the persisted copy survives
-    until the result is consumed (local mode, or a prompt consumer).
+    (:func:`_scratch_ckpt` — lineage truncation). The result is persisted
+    lazily — the consumer's own action materializes it. ``cache_registry``
+    receives the persisted edge list and one :class:`_ScratchOwner` that
+    owns BOTH the result's persist and the scratch files (deleted together
+    at ``unpersist()``, so cluster-mode recomputation after executor loss
+    can always re-read the checkpoints); the caller releases them once the
+    result is consumed.
     """
     from pyspark import StorageLevel
 
@@ -652,16 +646,5 @@ def connected_components(
         .select("node", F.coalesce("comp", "node").alias("comp"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    out.count()  # materialize before anything touches the scratch checkpoints
-    # With a registry, the registry owns result + scratch dir together; with
-    # none, the scratch goes now, which assumes the persisted copy survives
-    # until the result is consumed (always true in local mode; on a cluster
-    # pass a ``cache_registry`` so scratch outlives the cache).
-    if cache_registry is not None:
-        cache_registry.append(_ScratchOwner(out, cleanup))
-    else:
-        cleanup()
-    # und can only be released once the result is materialized (the count
-    # above); the final ckpt'd `cur` no longer references it.
-    und.unpersist()
+    cache_registry.extend((und, _ScratchOwner(out, cleanup)))
     return out

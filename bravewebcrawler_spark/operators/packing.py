@@ -45,7 +45,8 @@ def pack_sequences(
     id_col: str,
     n_tokens_col: str,
     budget: int,
-    cache_registry: list | None = None,
+    *,
+    cache_registry: list,
 ) -> DataFrame:
     """Assign each row a ``pack_id`` / ``pack_offset`` under the
     concatenate-and-chunk contract described in the module docstring.
@@ -54,6 +55,9 @@ def pack_sequences(
     the document's start offset within its starting pack). A document longer
     than ``budget`` keeps the pack it starts in (it spans into the next
     ones), exactly like the flat token-stream view.
+
+    The range-partitioned table is persisted into ``cache_registry``; the
+    caller releases it once the result is consumed.
     """
     spark = df.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -64,8 +68,7 @@ def pack_sequences(
         .withColumn("__pid", F.spark_partition_id())
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if cache_registry is not None:
-        cache_registry.append(s)
+    cache_registry.append(s)
     sizes = {
         r["__pid"]: r["t"]
         for r in s.groupBy("__pid").agg(F.sum(n_tokens_col).alias("t")).collect()

@@ -65,6 +65,98 @@ def _normed(df: DataFrame, id_col: str, vec_col: str, out_id: str, out_vec: str,
     ).withColumn(out_norm, F.sqrt(_dot_raw(F.col(out_vec), F.col(out_vec))))
 
 
+# The query side of the NumPy top-k operators is collected to the driver,
+# shipped in every corpus task's closure and scored against each Arrow batch
+# as one (batch rows x |Q|) matrix; a larger query side is a join, not a
+# probe set, and is refused before it reaches the driver.
+MAX_QUERY_ROWS = 10_000
+
+
+def _vector_matrix(vecs, name: str, n_dims: int):
+    """An Arrow list array of vectors as an (n, n_dims) float64 matrix. A
+    null vector, a null element or a length other than ``n_dims`` raises
+    ``ValueError`` naming column ``name``: the flat reshape would otherwise
+    shift every later vector, or fill NaN where the oracle has NULL."""
+    import numpy as np
+
+    flat = vecs.flatten()
+    if vecs.null_count or flat.null_count:
+        raise ValueError(f"vector column {name!r} holds a null vector or a null element")
+    lens = vecs.value_lengths().to_numpy()
+    bad = lens != n_dims
+    if bad.any():
+        raise ValueError(
+            f"vector column {name!r} holds a vector of length {int(lens[bad][0])}, expected {n_dims}"
+        )
+    return np.asarray(flat, dtype=np.float64).reshape(len(vecs), n_dims)
+
+
+def _query_side(queries: DataFrame, q_id: str, q_vec: str):
+    """The query side on the driver: ``(ids, Q, norms)`` — int64 ids, the
+    float64 (|Q|, dims) vector matrix and each norm folded dim by dim in the
+    oracle's order. The size probe reads at most ``MAX_QUERY_ROWS + 1`` rows
+    and raises ``ValueError`` above the cap; every vector must have the
+    first one's length (see :func:`_vector_matrix`)."""
+    import numpy as np
+    import pyarrow as pa
+
+    q = queries.select(F.col(q_id).cast("long").alias("qid"), _dbl(F.col(q_vec)).alias("qv"))
+    rows = q.limit(MAX_QUERY_ROWS + 1).collect()
+    if len(rows) > MAX_QUERY_ROWS:
+        raise ValueError(f"query side has more than MAX_QUERY_ROWS = {MAX_QUERY_ROWS} rows")
+    qids = np.array([r["qid"] for r in rows], dtype=np.int64)
+    n_dims = len(rows[0]["qv"] or []) if rows else 0
+    Q = _vector_matrix(pa.array([r["qv"] for r in rows], pa.list_(pa.float64())), q_vec, n_dims)
+    qn_acc = np.zeros(len(qids))
+    for i in range(n_dims):
+        qn_acc += Q[:, i] * Q[:, i]
+    return qids, Q, np.sqrt(qn_acc)
+
+
+def _keep_topk(out: list, qid: int, nids, cos, k: int) -> None:
+    """Append one query's batch candidates to ``out``: the exact top-k of the
+    finite cosines (cos desc, neighbor asc — the final window's own total
+    order; union-containment makes the per-batch cut exact) plus every
+    non-finite one, which the final window ranks by Spark's NaN ordering."""
+    import numpy as np
+
+    finite = np.isfinite(cos)
+    idx = np.flatnonzero(finite)
+    sel = np.concatenate((idx[np.lexsort((nids[idx], -cos[idx]))[:k]], np.flatnonzero(~finite)))
+    if sel.size:
+        out.append((np.full(sel.size, qid, dtype=np.int64), nids[sel], cos[sel]))
+
+
+def _candidate_batch(out: list):
+    """The ``(query_id, neighbor_id, cos_raw)`` Arrow batch of ``out``."""
+    import numpy as np
+    import pyarrow as pa
+
+    q, i, c = (np.concatenate(parts) for parts in zip(*out))
+    return pa.RecordBatch.from_arrays(
+        [pa.array(q, pa.int64()), pa.array(i.astype(np.int64), pa.int64()), pa.array(c, pa.float64())],
+        names=["query_id", "neighbor_id", "cos_raw"],
+    )
+
+
+def _ranked_topk(corpus: DataFrame, c_id: str, c_vec: str, score, k: int, empty: bool) -> DataFrame:
+    """Run ``score`` in one ``mapInArrow`` pass over the spread
+    ``(neighbor_id, cv)`` corpus, then the exact global top-k per query;
+    ``empty`` (no query rows) gives an empty result without a pass."""
+    if empty:
+        return corpus.sparkSession.createDataFrame(
+            [], "query_id long, neighbor_id long, rank int, cosine double"
+        )
+    c = spread(corpus.select(F.col(c_id).cast("long").alias("neighbor_id"), F.col(c_vec).alias("cv")))
+    survivors = c.mapInArrow(score, "query_id long, neighbor_id long, cos_raw double")
+    top = top_k_per_key(
+        survivors, ["query_id"], [F.col("cos_raw").desc(), F.col("neighbor_id").asc()], k, rank_name="rank"
+    )
+    return top.select(
+        "query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), (F.round("cos_raw", 4) + F.lit(0.0)).alias("cosine")
+    )
+
+
 def brute_force_topk(
     queries: DataFrame, corpus: DataFrame, q_id: str, q_vec: str, c_id: str, c_vec: str, k: int = 10
 ) -> DataFrame:
@@ -87,82 +179,37 @@ def brute_force_topk(
     multiply then one IEEE add per dim in dim order, norms fold the same
     way, and ``cn * qn`` / division match because IEEE multiplication is
     commutative. Non-finite cosines (a zero-norm vector) are never ranked in
-    NumPy — such rows pass through to the final window so Spark's own
-    NaN-ordering semantics decide, exactly as before."""
+    NumPy (:func:`_keep_topk`).
+
+    The query side is collected when this DataFrame is built (at most
+    ``MAX_QUERY_ROWS`` rows): re-executing the result never re-reads it,
+    and an empty query side gives a permanently empty result. A null or
+    wrong-length vector on either side raises ``ValueError``."""
     import numpy as np
 
-    q_rows = queries.select(
-        F.col(q_id).cast("long").alias("qid"), _dbl(F.col(q_vec)).alias("qv")
-    ).collect()
-    if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, cosine double"
-        )
-    qids_l = np.array([r["qid"] for r in q_rows], dtype=np.int64)
-    Q = np.array([r["qv"] for r in q_rows], dtype=np.float64)
+    qids_l, Q, qn_l = _query_side(queries, q_id, q_vec)
     n_dims = Q.shape[1]
-    qn_acc = np.zeros(len(qids_l))
-    for i in range(n_dims):
-        qn_acc += Q[:, i] * Q[:, i]
-    qn_l = np.sqrt(qn_acc)
 
     def score(batches):
-        import pyarrow as pa
-
-        nq = len(qids_l)
         for batch in batches:
             n = batch.num_rows
-            if n == 0:
-                continue
             ids = batch.column("neighbor_id").to_numpy(zero_copy_only=False)
-            C = np.asarray(batch.column("cv").flatten(), dtype=np.float64).reshape(n, n_dims)
-            acc = np.zeros((n, nq))
+            C = _vector_matrix(batch.column("cv"), c_vec, n_dims)
+            acc = np.zeros((n, len(qids_l)))
             cn_acc = np.zeros(n)
             for i in range(n_dims):
                 ci = C[:, i]
                 acc += ci[:, None] * Q[:, i][None, :]
                 cn_acc += ci * ci
             cos = acc / (np.sqrt(cn_acc)[:, None] * qn_l[None, :])
-            out_q: list = []
-            out_i: list = []
-            out_c: list = []
-            for j in range(nq):
-                colc = cos[:, j]
-                not_self = ids != qids_l[j]
-                finite = np.isfinite(colc)
-                idx = np.flatnonzero(not_self & finite)
-                if idx.size:
-                    sel = idx[np.lexsort((ids[idx], -colc[idx]))[:k]]
-                    out_q.append(np.full(sel.size, qids_l[j], dtype=np.int64))
-                    out_i.append(ids[sel])
-                    out_c.append(colc[sel])
-                nonfin = np.flatnonzero(not_self & ~finite)
-                if nonfin.size:
-                    out_q.append(np.full(nonfin.size, qids_l[j], dtype=np.int64))
-                    out_i.append(ids[nonfin])
-                    out_c.append(colc[nonfin])
-            if out_q:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.concatenate(out_q), pa.int64()),
-                        pa.array(np.concatenate(out_i).astype(np.int64), pa.int64()),
-                        pa.array(np.concatenate(out_c), pa.float64()),
-                    ],
-                    names=["query_id", "neighbor_id", "cos_raw"],
-                )
+            out: list = []
+            for j, qid in enumerate(qids_l):
+                not_self = ids != qid
+                _keep_topk(out, qid, ids[not_self], cos[not_self, j], k)
+            if out:
+                yield _candidate_batch(out)
 
-    c = spread(
-        corpus.select(
-            F.col(c_id).cast("long").alias("neighbor_id"), F.col(c_vec).alias("cv")
-        )
-    )
-    survivors = c.mapInArrow(score, "query_id long, neighbor_id long, cos_raw double")
-    top = top_k_per_key(
-        survivors, ["query_id"], [F.col("cos_raw").desc(), F.col("neighbor_id").asc()], k, rank_name="rank"
-    )
-    return top.select(
-        "query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), (F.round("cos_raw", 4) + F.lit(0.0)).alias("cosine")
-    )
+    return _ranked_topk(corpus, c_id, c_vec, score, k, empty=not qids_l.size)
 
 
 QUANT = 1048576.0  # 2^20 — k-means quantization scale (see learn_ivf_centroids)
@@ -396,31 +443,16 @@ def _lsh_probe_topk(
     bit-identical to the oracle: the projection and dot accumulators run the
     same left-to-right dim fold per (row/pair), float32→float64 casts are
     exact, norms fold identically, and ``cn * qn`` / division match IEEE.
-    Non-finite cosines skip the per-batch top-k prefilter so Spark's
-    NaN-ordering decides, exactly as before; finite candidates pass an
-    exact per-batch top-k (union-containment, ties broken (cos desc,
-    neighbor asc) — the final window's own total order)."""
+    Each batch keeps per query what :func:`_keep_topk` keeps."""
     import numpy as np
 
-    q_rows = queries.select(
-        F.col(q_id).cast("long").alias("qid"), _dbl(F.col(q_vec)).alias("qv")
-    ).collect()
-    if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, cosine double"
-        )
-    qids_l = np.array([r["qid"] for r in q_rows], dtype=np.int64)
-    Q = np.array([r["qv"] for r in q_rows], dtype=np.float64)
+    qids_l, Q, qn_l = _query_side(queries, q_id, q_vec)
     n_dims = Q.shape[1]
     W = np.array(_plane_weights(n_planes, n_dims), dtype=np.float64)  # (planes, dims)
     pow2 = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
-    qn_acc = np.zeros(len(qids_l))
     qproj = np.zeros((len(qids_l), n_planes))
     for i in range(n_dims):
-        qi = Q[:, i]
-        qn_acc += qi * qi
-        qproj += qi[:, None] * W[:, i][None, :]
-    qn_l = np.sqrt(qn_acc)
+        qproj += Q[:, i][:, None] * W[:, i][None, :]
     qbuck = (qproj > 0).astype(np.int64) @ pow2
     probe_of: dict[int, list[int]] = {}
     for j, b in enumerate(qbuck):
@@ -432,14 +464,10 @@ def _lsh_probe_topk(
     probe_arr = {b: np.array(idx, dtype=np.int64) for b, idx in probe_of.items()}
 
     def score(batches):
-        import pyarrow as pa
-
         for batch in batches:
             n = batch.num_rows
-            if n == 0:
-                continue
             ids = batch.column("neighbor_id").to_numpy(zero_copy_only=False)
-            C = np.asarray(batch.column("cv").flatten(), dtype=np.float64).reshape(n, n_dims)
+            C = _vector_matrix(batch.column("cv"), c_vec, n_dims)
             cn_acc = np.zeros(n)
             cproj = np.zeros((n, n_planes))
             for i in range(n_dims):
@@ -451,8 +479,7 @@ def _lsh_probe_topk(
             # candidate (row, query) index arrays: rows grouped by bucket,
             # cross-joined with the queries probing that bucket
             order = np.argsort(cbuck, kind="stable")
-            sb = cbuck[order]
-            uniq, starts = np.unique(sb, return_index=True)
+            uniq, starts = np.unique(cbuck[order], return_index=True)
             r_parts: list = []
             q_parts: list = []
             for t in range(len(uniq)):
@@ -468,52 +495,19 @@ def _lsh_probe_topk(
             q_idx = np.concatenate(q_parts)
             keep = ids[r_idx] != qids_l[q_idx]
             r_idx, q_idx = r_idx[keep], q_idx[keep]
-            if not r_idx.size:
-                continue
             acc = np.zeros(r_idx.size)
             for i in range(n_dims):
                 acc += C[r_idx, i] * Q[q_idx, i]
             cos = acc / (cn[r_idx] * qn_l[q_idx])
             nids = ids[r_idx]
-            finite = np.isfinite(cos)
-            out_q: list = []
-            out_i: list = []
-            out_c: list = []
+            out: list = []
             for j in np.unique(q_idx):
                 mine = q_idx == j
-                idx = np.flatnonzero(mine & finite)
-                if idx.size:
-                    sel = idx[np.lexsort((nids[idx], -cos[idx]))[:k]]
-                    out_q.append(np.full(sel.size, qids_l[j], dtype=np.int64))
-                    out_i.append(nids[sel])
-                    out_c.append(cos[sel])
-                nonfin = np.flatnonzero(mine & ~finite)
-                if nonfin.size:
-                    out_q.append(np.full(nonfin.size, qids_l[j], dtype=np.int64))
-                    out_i.append(nids[nonfin])
-                    out_c.append(cos[nonfin])
-            if out_q:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.concatenate(out_q), pa.int64()),
-                        pa.array(np.concatenate(out_i).astype(np.int64), pa.int64()),
-                        pa.array(np.concatenate(out_c), pa.float64()),
-                    ],
-                    names=["query_id", "neighbor_id", "cos_raw"],
-                )
+                _keep_topk(out, qids_l[j], nids[mine], cos[mine], k)
+            if out:
+                yield _candidate_batch(out)
 
-    c = spread(
-        corpus.select(
-            F.col(c_id).cast("long").alias("neighbor_id"), F.col(c_vec).alias("cv")
-        )
-    )
-    survivors = c.mapInArrow(score, "query_id long, neighbor_id long, cos_raw double")
-    top = top_k_per_key(
-        survivors, ["query_id"], [F.col("cos_raw").desc(), F.col("neighbor_id").asc()], k, rank_name="rank"
-    )
-    return top.select(
-        "query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), (F.round("cos_raw", 4) + F.lit(0.0)).alias("cosine")
-    )
+    return _ranked_topk(corpus, c_id, c_vec, score, k, empty=not qids_l.size)
 
 
 def multiprobe_lsh_topk(
@@ -531,6 +525,11 @@ def multiprobe_lsh_topk(
     and the probe set {b, b^1, b^2, ...} is distinct, so a (query, neighbor)
     pair scores at most once — no dedup pass needed. Execution shape:
     :func:`_lsh_probe_topk`.
+
+    The query side is collected when this DataFrame is built (at most
+    ``MAX_QUERY_ROWS`` rows): re-executing the result never re-reads it,
+    and an empty query side gives a permanently empty result. A null or
+    wrong-length vector on either side raises ``ValueError``.
     """
     return _lsh_probe_topk(queries, corpus, q_id, q_vec, c_id, c_vec, k, n_planes, True)
 
@@ -547,5 +546,10 @@ def lsh_bucketed_topk(
     2^n_planes fan-in reduction; :func:`multiprobe_lsh_topk` raises recall
     by also probing the n_planes Hamming-1 buckets at (n_planes+1)x the
     probe fan-out. Execution shape: :func:`_lsh_probe_topk`.
+
+    The query side is collected when this DataFrame is built (at most
+    ``MAX_QUERY_ROWS`` rows): re-executing the result never re-reads it,
+    and an empty query side gives a permanently empty result. A null or
+    wrong-length vector on either side raises ``ValueError``.
     """
     return _lsh_probe_topk(queries, corpus, q_id, q_vec, c_id, c_vec, k, n_planes, False)

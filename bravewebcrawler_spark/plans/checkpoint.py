@@ -178,9 +178,9 @@ def load_frontier(
 
 def load_state(spark: SparkSession, state_dir: str, round_no: int) -> dict[str, DataFrame]:
     """Next-round state (frontier/seen/host_state/bloom) as of ``round_no``,
-    read from committed parquet only. The crawl loop reads the next round's
-    state here after every commit, as it does on resume, so a resumed round
-    plans exactly as an uninterrupted one. Round outputs are
+    read from committed parquet only. The crawl loop reads each round's
+    state here right before the round runs, on resume as after a commit,
+    so a resumed round plans exactly as an uninterrupted one. Round outputs are
     cumulative and read via plans.crawl.read_outputs."""
     base = _manifest(state_dir, round_no)["base_round"]
     return {

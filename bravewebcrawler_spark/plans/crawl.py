@@ -93,10 +93,8 @@ def crawl(
     seen_size = 0
     frontier_size = 0
     base_round = 0
-    init_frontier = None  # fresh-start-only persist, released after round 0
     last = ckpt.latest_round(state_dir) if resume else None
     if last is not None:
-        state = ckpt.load_state(spark, state_dir, last)
         m = ckpt.load_metrics(state_dir, last)
         seen_size = m["seen_size"]
         frontier_size = m["frontier_size"]
@@ -110,11 +108,10 @@ def crawl(
         # canonicalize+merge chain (phase-log finding, round 3). jobA's full
         # ranking scan warms the cache before jobB's joins read it, so the
         # in-flight-recompute trap (BENCH item 2) does not apply; released
-        # after round 0 commits.
+        # with the round's own caches once round 0 commits.
         from pyspark.storagelevel import StorageLevel
 
-        init_frontier = state["frontier"].persist(StorageLevel.MEMORY_AND_DISK)
-        state["frontier"] = init_frontier
+        state["frontier"] = state["frontier"].persist(StorageLevel.MEMORY_AND_DISK)
         state["bloom"] = empty_bloom(spark)
         # K3: dead-letter rows are kept with their status, never dropped
         state["dead_letter"].write.mode("overwrite").parquet(os.path.join(state_dir, "dead_letter"))
@@ -124,6 +121,12 @@ def crawl(
 
     write_pool = ThreadPoolExecutor(max_workers=4, thread_name_prefix="bwc-write")
     for rnd in range(start_round, policy.max_rounds):
+        if rnd > 0:
+            # Round state from COMMITTED parquet (bounded lineage, O(delta)
+            # reads), the same call for a resume and for the round after a
+            # commit: the frontier folds one delta per round onto the last
+            # full snapshot. Read only when a round will run on it.
+            state = ckpt.load_state(spark, state_dir, rnd - 1)
         t0 = time.time()
         out = run_round(
             spark, web, state["frontier"], state["seen"], state["host_state"], robots, policy, rnd,
@@ -213,16 +216,11 @@ def crawl(
         )
         # tables already written: publish manifest atomically (commit point)
         ckpt.publish_manifest(state_dir, rnd, metrics, base_round)
-        for df in out["_cached"]:
+        # the round's caches and its input frontier (persisted on round 0
+        # only; a no-op on a frontier read from parquet)
+        for df in (*out["_cached"], state["frontier"]):
             df.unpersist()
-        if init_frontier is not None:
-            init_frontier.unpersist()
-            init_frontier = None
         total_fetched += dequeued
-        # Next-round state from COMMITTED parquet (bounded lineage, O(delta)
-        # reads), through the same call a resume makes: the frontier folds
-        # one delta per round onto the last full snapshot.
-        state = ckpt.load_state(spark, state_dir, rnd)
         if dequeued == 0:
             break
         if stop_after_round is not None and rnd >= stop_after_round:

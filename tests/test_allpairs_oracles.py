@@ -86,10 +86,11 @@ def test_lsh_refined_equals_exact_jaccard_on_candidates(spark, sf_dir):
     assert set(refined) <= set(exact)
     for pair, j in refined.items():
         assert j == exact[pair], (pair, j, exact[pair])
-    cand = {
-        (r["id_a"], r["id_b"])
-        for r in DD.minhash_lsh_pairs(DD.minhash_signature_cols(corpus, "doc_id", "text", k=3)).collect()
-    }
+    caches: list = []
+    sig = DD.minhash_signature_cols(corpus, "doc_id", "text", k=3)
+    cand = {(r["id_a"], r["id_b"]) for r in DD.minhash_lsh_pairs(sig, cache_registry=caches).collect()}
+    for c in caches:
+        c.unpersist()
     assert set(refined) == set(exact) & cand
     # recall of the banded candidate generation at threshold 0.6 — pinned so
     # a banding regression fails CI (measured 1.0 at sf0.001 and sf0.01: the
@@ -105,10 +106,14 @@ def test_lsh_refined_rejects_degenerate_threshold(spark):
     corpus = spark.createDataFrame(
         [(1, "a b c d e f g"), (2, "h i j k l m n")], "doc_id long, text string"
     )
+    caches: list = []
     for bad in (0.0, -0.5, 1.5, float("nan")):
         with pytest.raises(ValueError, match="threshold"):
-            DD.lsh_refined_pairs(corpus, "doc_id", "text", threshold=bad)
-    assert DD.lsh_refined_pairs(corpus, "doc_id", "text", threshold=1.0).count() == 0
+            DD.lsh_refined_pairs(corpus, "doc_id", "text", threshold=bad, cache_registry=caches)
+    assert not caches
+    assert DD.lsh_refined_pairs(corpus, "doc_id", "text", threshold=1.0, cache_registry=caches).count() == 0
+    for c in caches:
+        c.unpersist()
 
 
 def test_embed_lsh_recall_vs_exact(spark, sf_dir):

@@ -86,17 +86,18 @@ def test_non_integral_ids_rejected(spark):
         for build in (
             lambda: DD.exploded_shingle_strings(docs, "doc_id", "text", 3),
             lambda: DD.minhash_signature_cols(docs, "doc_id", "text", 3),
-            lambda: DD.lsh_refined_pairs(docs, "doc_id", "text"),
+            lambda: DD.lsh_refined_pairs(docs, "doc_id", "text", cache_registry=[]),
             lambda: contamination_hits(docs, bench, k=3),
         ):
             with pytest.raises(TypeError, match="doc_id"):
                 build()
         edges = spark.createDataFrame([ids], f"id_a {typ}, id_b {typ}")
         with pytest.raises(TypeError, match="id_a"):
-            DD.connected_components(edges, docs, id_col="doc_id")
+            DD.connected_components(edges, docs, id_col="doc_id", cache_registry=[])
         with pytest.raises(TypeError, match="doc_id"):
             DD.connected_components(
-                spark.createDataFrame([(1, 2)], "id_a long, id_b long"), docs, id_col="doc_id"
+                spark.createDataFrame([(1, 2)], "id_a long, id_b long"), docs, id_col="doc_id",
+                cache_registry=[],
             )
     ok = spark.createDataFrame([(1, text)], "doc_id int, text string")
     assert DD.minhash_signature_cols(ok, "doc_id", "text", 3).count() == 1
@@ -227,3 +228,47 @@ def test_cc_empty_edge_list(spark):
     for c in caches:
         c.unpersist()
     assert got == {5: 5, 7: 7, 9: 9}
+
+
+def _vectors(spark, rows, col):
+    return spark.createDataFrame(rows, f"vec_id long, {col} array<float>")
+
+
+CORPUS_VECS = [(i, [float(i % 3 + 1), float(i % 5), 1.0, float(i)]) for i in range(1, 13)]
+
+
+@pytest.mark.parametrize("op", ["brute_force_topk", "lsh_bucketed_topk", "multiprobe_lsh_topk"])
+def test_ann_query_side_size_guard(spark, monkeypatch, op):
+    """The query side is collected to the driver: above MAX_QUERY_ROWS rows
+    the operator refuses it before collecting it all."""
+    from bravewebcrawler_spark.operators import similarity as SIM
+
+    fn = getattr(SIM, op)
+    corpus = _vectors(spark, CORPUS_VECS, "cvec")
+    queries = _vectors(spark, CORPUS_VECS[:4], "qvec")
+    monkeypatch.setattr(SIM, "MAX_QUERY_ROWS", 3)
+    with pytest.raises(ValueError, match="MAX_QUERY_ROWS"):
+        fn(queries, corpus, "vec_id", "qvec", "vec_id", "cvec", k=3)
+    monkeypatch.setattr(SIM, "MAX_QUERY_ROWS", 4)
+    assert fn(queries, corpus, "vec_id", "qvec", "vec_id", "cvec", k=3).count() > 0
+
+
+@pytest.mark.parametrize("op", ["brute_force_topk", "lsh_bucketed_topk", "multiprobe_lsh_topk"])
+def test_ann_rejects_null_and_wrong_length_vectors(spark, op):
+    """A null or wrong-length vector would shift every later row of the flat
+    reshape; on either side it raises a ValueError naming the column. The
+    corpus case pairs a 3- and a 5-long vector, whose total length still
+    reshapes cleanly (a silent misalignment without the check)."""
+    from bravewebcrawler_spark.operators import similarity as SIM
+
+    fn = getattr(SIM, op)
+    corpus = _vectors(spark, CORPUS_VECS, "cvec")
+    good_q = CORPUS_VECS[:3]
+    for bad_q in (good_q + [(50, None)], good_q + [(50, [1.0, None, 2.0, 3.0])], good_q + [(50, [1.0, 2.0])]):
+        with pytest.raises(ValueError, match="qvec"):
+            fn(_vectors(spark, bad_q, "qvec"), corpus, "vec_id", "qvec", "vec_id", "cvec", k=3)
+    queries = _vectors(spark, good_q, "qvec")
+    for bad_c in ([(60, None)], [(60, [1.0, 2.0, 3.0]), (61, [1.0, 2.0, 3.0, 4.0, 5.0])]):
+        corpus = _vectors(spark, CORPUS_VECS + bad_c, "cvec")
+        with pytest.raises(Exception, match="ValueError: vector column 'cvec'"):
+            fn(queries, corpus, "vec_id", "qvec", "vec_id", "cvec", k=3).collect()

@@ -81,3 +81,26 @@ def test_manifest_is_the_commit_point(spark, tmp_path_factory):
     crawl(spark, WEB, seeds, POLICY, full_dir)
     assert _log(spark, d) == _log(spark, full_dir)
     assert _frontier(spark, d) == _frontier(spark, full_dir)
+
+
+def test_state_is_loaded_only_for_a_round_that_runs(spark, tmp_path_factory, monkeypatch):
+    """Round r > 0 reads round r-1's committed state through
+    ``ckpt.load_state`` right before it runs; nothing is read after the last
+    round or after a ``stop_after_round`` exit."""
+    loaded = []
+    load_state = ckpt.load_state
+
+    def counting(spark_, state_dir, round_no):
+        loaded.append(round_no)
+        return load_state(spark_, state_dir, round_no)
+
+    monkeypatch.setattr(ckpt, "load_state", counting)
+    seeds = spark.createDataFrame(WEB.seed_urls(8), "seed_id string, url string")
+    d = str(tmp_path_factory.mktemp("loads"))
+    crawl(spark, WEB, seeds, POLICY, d)
+    assert ckpt.latest_round(d) == POLICY.max_rounds - 1 == 2
+    assert loaded == [0, 1]
+    loaded.clear()
+    crawl(spark, WEB, seeds, POLICY, d, stop_after_round=0)
+    assert ckpt.latest_round(d) == 0
+    assert loaded == []

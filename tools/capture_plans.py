@@ -10,12 +10,22 @@ DataFrame the registry body hands to ``_materialize_and_release`` while it
 runs — the registry's own plans, caches included — one section per call.
 Iterative internals (connected-components rounds) have no single static plan;
 the pairs and result plans around them are what is captured.
+
+The capture session runs with adaptive execution off: an adaptive plan
+re-plans from runtime statistics and stage completion order, and a cache
+filled before the capture prints its executed plan, so two captures of the
+same code could differ. The static plan is what a code change moves. The text
+is normalised (:func:`normalize`): expression ids, ``plan_id``s (the
+exchange ids), RDD ids and the random part of ``bwc-*`` scratch dirs become
+fixed tokens, so ``diff -r`` of two captures of the same plans is empty — run the
+tool on two checkouts to check that a change leaves plans alone.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -25,11 +35,27 @@ import __spark_entry__ as e  # noqa: E402
 from bravewebcrawler_spark.session import get_spark  # noqa: E402
 
 
+# (pattern, replacement): ids Spark hands out per session or per run
+_VOLATILE = [
+    (re.compile(r"#\d+"), "#N"),  # expression ids
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"(bwc-[a-z]+-)\w+"), r"\1*"),  # mkdtemp suffix
+]
+
+
+def normalize(plan: str) -> str:
+    """``plan`` with every session- or run-specific id replaced by a token."""
+    for pattern, token in _VOLATILE:
+        plan = pattern.sub(token, plan)
+    return plan
+
+
 def _formatted(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    return buf.getvalue()
+    return normalize(buf.getvalue())
 
 
 def capture(spark, sf_dir: str, name: str) -> str:
@@ -58,7 +84,7 @@ def main() -> None:
     out_dir, names = sys.argv[1], sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("plan-capture")
+    spark = get_spark("plan-capture", extra_conf={"spark.sql.adaptive.enabled": "false"})
     for name in names:
         if name == "stream_stateful_user_stats":
             print(f"skip {name}: streaming query, no static batch plan")
