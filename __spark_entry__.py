@@ -9,7 +9,7 @@ order-insensitive value-hash matches.
 
 from __future__ import annotations
 
-import os
+import atexit
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -457,22 +457,22 @@ def _materialize_and_release(df: DataFrame, caches: list, row_cap: int = 0) -> D
     _MATERIALIZE_ROW_CAP) is instead written to scratch parquet while the
     caches are hot and read back, so an unexpectedly large result (e.g. a
     full (doc_id, component) table at production scale) can never OOM the
-    driver. The scratch files live for the session (the returned plan reads
-    them lazily); a 100-TB pipeline would give this a real output table."""
+    driver. The spill goes to a ``DD._scratch_ckpt`` dir that is deleted at
+    interpreter exit: the returned plan reads the files lazily, so nothing
+    earlier may remove them. A 100-TB pipeline would give this a real output
+    table."""
     cap = row_cap or _MATERIALIZE_ROW_CAP
     rows = df.limit(cap + 1).collect()
     if len(rows) <= cap:
         for c in caches:
             c.unpersist()
         return df.sparkSession.createDataFrame(rows, df.schema)
-    import tempfile
-
-    base = os.environ.get("SPARK_GRAFT_STATE_DIR_BASE") or None
-    path = os.path.join(tempfile.mkdtemp(prefix="bwc-result-", dir=base), "rows")
-    df.write.mode("overwrite").parquet(path)
+    ckpt, cleanup = DD._scratch_ckpt(df.sparkSession, "bwc-result-")
+    atexit.register(cleanup)
+    out = ckpt(df, 0)
     for c in caches:
         c.unpersist()
-    return df.sparkSession.read.parquet(path)
+    return out
 
 
 def dedup_lsh_refined(spark: SparkSession, sf_dir: str) -> DataFrame:

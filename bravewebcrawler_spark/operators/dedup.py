@@ -477,14 +477,15 @@ def simhash_near_pairs(
 
 
 def _scratch_ckpt(spark, prefix: str):
-    """Per-round lineage truncation for iterative graph loops: write the
-    round's state to scratch parquet and read it back (the engine's
-    plans/checkpoint.py pattern). The CC round body references its input
-    more than once, so without truncation the Catalyst plan grows
-    exponentially in rounds (measured: driver GC OOM during plan
-    canonicalization by round ~10). At cluster scale the scratch dir must be
-    distributed storage — defaults to $SPARK_GRAFT_STATE_DIR_BASE (the same
-    knob the crawl state uses), falling back to local tmp.
+    """Scratch parquet: write a frame and read it back (the engine's
+    plans/checkpoint.py pattern). Used for per-round lineage truncation in
+    iterative graph loops and for the query registry's oversized-result
+    spill. The CC round body references its input more than once, so
+    without truncation the Catalyst plan grows exponentially in rounds
+    (measured: driver GC OOM during plan canonicalization by round ~10).
+    At cluster scale the scratch dir must be distributed storage — defaults
+    to $SPARK_GRAFT_STATE_DIR_BASE (the same knob the crawl state uses),
+    falling back to local tmp.
 
     Returns (ckpt(df, k) -> DataFrame, cleanup()).
     """

@@ -17,9 +17,10 @@ plan with .explain):
     ``row_number() over (host, salt)`` bounds any single task's window to
     1/SALT_N of a hot host before the exact per-host re-rank — salting
     changes placement, never rank (risk R2);
-  * the global round cap is ``orderBy(total_order).limit(K)`` which Spark
-    executes as TakeOrderedAndProject (distributed top-K) — NOT a
-    single-partition window; the seq-assigning window then runs over ≤K rows;
+  * the global round cap is the exact global rank from
+    ``operators/ranking.global_prefix`` (W2): range partitions on the total
+    order plus per-partition offsets, seq = rank, kept while seq < cap —
+    never a single-partition window or a driver-merged top-K;
   * dedup is an exact ``left_anti`` join on url_hash (J2); the bloom
     pre-filter (operators/seen.py) cheapens it but never decides membership
     (risk R3);
@@ -36,7 +37,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -47,6 +48,7 @@ from bravewebcrawler_spark.functions.canon import (
     is_blacklisted_col,
     url_hash_col,
 )
+from bravewebcrawler_spark.operators.ranking import global_prefix, salted_top_k
 from bravewebcrawler_spark.plans.policy import CrawlPolicy, path_of_col, priority_col
 from bravewebcrawler_spark.sources.synthweb import SynthWeb
 
@@ -259,64 +261,6 @@ def _fetch_parse_factory(web: SynthWeb):
     return fetch_parse
 
 
-def _global_rank_cap(survivors: DataFrame, order: list, cap: int, cache_registry: list) -> DataFrame:
-    """Exact global top-``cap`` + dense seq, distributed.
-
-    For small caps TakeOrderedAndProject + a tiny window is optimal; for
-    large caps both serialize (driver merge / single-partition window), so:
-    range-partition on the total order, sort within partitions, compute
-    per-partition offsets from a tiny counts job, seq = offset + local
-    row_number. seq equals the global rank regardless of where the sampled
-    range boundaries fall, so determinism (risk R2) is preserved.
-    """
-    spark = survivors.sparkSession
-    if cap <= 20_000:
-        capped = survivors.orderBy(*order).limit(cap)
-        wseq = Window.orderBy(*order)
-        return capped.withColumn("seq", (F.row_number().over(wseq) - 1).cast("int"))
-
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # repartitionByRange SAMPLES its input in a separate job to pick range
-    # boundaries — without this persist the expensive dequeue windows would
-    # compute twice (once for the sample pass, once for the real shuffle).
-    survivors = survivors.persist(StorageLevel.MEMORY_AND_DISK)
-    s = (
-        survivors.repartitionByRange(n_part, *order)
-        .sortWithinPartitions(*order)
-        .withColumn("__pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # The persist is CORRECTNESS, not just perf: repartitionByRange samples
-    # its range boundaries per execution, so without it the sizes job below
-    # and the final consumer could place rows in different __pid partitions
-    # and the offsets would be wrong (caught by test_global_rank_cap_large_
-    # path). MEMORY_AND_DISK (explicit, spills instead of evicting) because
-    # an evicted-and-recomputed `s` re-samples boundaries: under ANSI mode
-    # the element_at(off_map, __pid) below then fails loudly with
-    # MAP_KEY_DOES_NOT_EXIST — if that error ever appears here it means the
-    # cache was dropped mid-query, not bad input. The caller owns both
-    # caches through ``cache_registry`` and unpersists them only once every
-    # consumer of the result has run (a finalizer would fire mid-query).
-    cache_registry.extend((survivors, s))
-    sizes = {r["__pid"]: r["c"] for r in s.groupBy("__pid").agg(F.count("*").alias("c")).collect()}
-    offsets, acc = [], 0
-    for pid in sorted(sizes):
-        offsets.append((pid, acc))
-        acc += sizes[pid]
-    # offsets as a literal map lookup, NOT a broadcast join: a broadcast
-    # build is driver-serial seconds per round (an Amdahl term), while this
-    # ~n_part-entry CASE/map evaluates inside the same codegen stage.
-    off_map = F.create_map(
-        *[F.lit(v) for pair in (offsets or [(0, 0)]) for v in pair]
-    )
-    w = Window.partitionBy("__pid").orderBy(*order)
-    ranked = s.withColumn(
-        "seq",
-        (F.element_at(off_map, F.col("__pid")) + F.row_number().over(w) - 1).cast("int"),
-    )
-    return ranked.where(F.col("seq") < cap).drop("__pid")
-
-
 def dequeue(
     frontier: DataFrame,
     host_state: DataFrame,
@@ -324,10 +268,14 @@ def dequeue(
     refill: bool,
     cache_registry: list,
 ) -> DataFrame:
-    """Politeness-budgeted, skew-salted priority dequeue (O1/O2/W1/A7).
+    """Politeness-budgeted, skew-salted priority dequeue (O1/O2/W1/W2/A7).
 
-    Returns frontier columns + ``seq`` (dequeue position within the round).
-    The large-cap rank path persists two caches into ``cache_registry``;
+    Each host keeps its first ``budget`` URLs in total order
+    (``salted_top_k``, W1); the survivors are then ranked globally
+    (``global_prefix`` with weight 1, W2) and the first
+    ``max_urls_per_round`` kept. Returns frontier columns + ``seq`` (the
+    0-based dequeue position within the round). Builds eagerly (one tiny
+    partition-size job) and persists two caches into ``cache_registry``;
     the caller unpersists them once the result is fully consumed.
     """
     from bravewebcrawler_spark.operators.politeness import host_budget
@@ -336,16 +284,16 @@ def dequeue(
     budgeted = frontier.join(host_state, "host", "left").withColumn(
         "budget", host_budget(policy, refill)
     )
-    # phase 1: salted per-(host,salt) prefix — bounds hot-host window size
-    salted = budgeted.withColumn("salt", F.pmod(F.col("url_hash"), F.lit(SALT_N)))
-    w1 = Window.partitionBy("host", "salt").orderBy(*order)
-    phase1 = salted.withColumn("rn1", F.row_number().over(w1)).where(F.col("rn1") <= F.col("budget"))
-    # phase 2: exact per-host prefix over the ≤ SALT_N×budget survivors
-    w2 = Window.partitionBy("host").orderBy(*order)
-    phase2 = phase1.withColumn("rn2", F.row_number().over(w2)).where(F.col("rn2") <= F.col("budget"))
-    # global round cap + seq assignment (distributed for large caps)
-    ranked = _global_rank_cap(phase2, order, policy.max_urls_per_round, cache_registry)
-    return ranked.select(*[f.name for f in FRONTIER_SCHEMA.fields], "seq")
+    # the range partitioning samples its input in a separate job to pick
+    # boundaries; this persist keeps the host windows from running twice
+    survivors = salted_top_k(
+        budgeted, ["host"], order, F.col("budget"), F.col("url_hash"), SALT_N
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    cache_registry.append(survivors)
+    ranked = global_prefix(survivors, order, F.lit(1), cache_registry=cache_registry)
+    return ranked.where(F.col("prefix") < policy.max_urls_per_round).select(
+        *[f.name for f in FRONTIER_SCHEMA.fields], F.col("prefix").cast("int").alias("seq")
+    )
 
 
 def run_round(
@@ -389,11 +337,11 @@ def run_round(
     # windows and the mapInPandas fetch run ONCE per round instead of once
     # per state-table write. The caller unpersists after the round commit.
     #
-    # CRITICAL for scaling: the global-cap TakeOrderedAndProject (and the seq
-    # window) collapse to a single partition — without the repartition below,
-    # the whole fetch+parse of a round would run in ONE task and adding
-    # executors could not help (measured: local[8] beat local[32] before
-    # this). seq is already assigned, so spreading by url_hash is free.
+    # CRITICAL for scaling: the cap keeps only the lowest range partitions of
+    # the global order (all of a round's URLs can sit in one of them) — without
+    # the repartition below, the fetch+parse of a round could run in a few
+    # tasks and adding executors could not help. seq is already assigned, so
+    # spreading by url_hash is free.
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     cached: list[DataFrame] = []
     selected = (

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import SparkSession
 
 
@@ -150,6 +151,16 @@ def get_spark(
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    try:
+        spark = builder.getOrCreate()
+    except PySparkRuntimeError as exc:
+        if exc.getCondition() != "JAVA_GATEWAY_EXITED":
+            raise
+        # the usual cause: the pre-committed heap does not fit the host
+        raise RuntimeError(
+            f"the Spark driver JVM exited at start with driver heap {driver_mem} "
+            "(pre-committed by -Xms); set SPARK_DRIVER_MEM to a smaller heap, "
+            "e.g. SPARK_DRIVER_MEM=4g"
+        ) from exc
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -10,7 +10,8 @@ total order subject to per-host budget and the global cap. Before the cap
 fires, each host's selected URLs are exactly its first-``budget`` eligible
 URLs in total order; once the cap fires every later URL is rejected. Hence
 oracle-selected == top-``cap`` (total order) of the union of per-host
-prefixes — precisely the engine's salted-window + TakeOrdered construction.
+prefixes — precisely the engine's salted-window + global-rank construction
+(``salted_top_k`` then ``global_prefix`` with weight 1, kept below the cap).
 """
 
 from __future__ import annotations

@@ -33,14 +33,13 @@ def test_dequeue_no_global_window_for_large_caps(spark):
     frontier = spark.createDataFrame([], FRONTIER_SCHEMA)
     hs = spark.createDataFrame([], HOST_STATE_SCHEMA)
     registry: list = []
-    # small cap -> TakeOrderedAndProject (distributed top-K, not a sort-all)
-    small = dequeue(frontier, hs, CrawlPolicy(max_urls_per_round=200), refill=True, cache_registry=registry)
-    assert "TakeOrderedAndProject" in _plan(small)
-    # large cap -> range-partitioned rank, no driver-merge TakeOrdered
-    big = dequeue(frontier, hs, CrawlPolicy(max_urls_per_round=100_000), refill=True, cache_registry=registry)
-    pb = _plan(big)
-    assert "TakeOrderedAndProject" not in pb
-    assert "rangepartitioning" in pb.lower()
+    # range-partitioned global rank at every cap (the default 200 included):
+    # no driver-merge TakeOrdered, no single-partition window
+    for policy in (CrawlPolicy(), CrawlPolicy(max_urls_per_round=100_000)):
+        plan = _plan(dequeue(frontier, hs, policy, refill=True, cache_registry=registry))
+        assert "TakeOrderedAndProject" not in plan
+        assert "rangepartitioning" in plan.lower()
+        assert "SinglePartition" not in plan
     for cached in registry:
         cached.unpersist()
 

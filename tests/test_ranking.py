@@ -1,14 +1,15 @@
-"""Ranking operators: salted == plain top-k; the distributed global-rank cap
-(the large-cap dequeue path, whose placement-freezing caches the caller owns
-through ``cache_registry``) == the naive orderBy+limit+window construction."""
+"""Ranking operators: salted == plain top-k (constant and per-key Column
+``k``); the distributed global prefix sum (the dequeue's round cap and
+sequence packing, whose placement-freezing cache the caller owns through
+``cache_registry``) == the naive single-window running sum."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from bravewebcrawler_spark.operators.ranking import salted_top_k, top_k_per_key
-from bravewebcrawler_spark.plans.round import _global_rank_cap
+from bravewebcrawler_spark.operators.ranking import global_prefix, salted_top_k, top_k_per_key
 
 
 def _df(spark, n=30000):
@@ -36,20 +37,36 @@ def test_salted_equals_plain_topk(spark):
     assert plain == salted and len(plain) == 97 * 5
 
 
-def test_global_rank_cap_large_path(spark):
-    df = _df(spark, 30000)
+def test_salted_equals_plain_topk_column_k(spark):
+    # a per-key budget as in the dequeue; every 7th key has budget 0
+    df = _df(spark, 20000).withColumn("budget", F.col("key") % 7)
+    order = [F.col("prio").desc(), F.col("id").asc()]
+    k = F.col("budget")
+    plain = {(r["key"], r["id"], r["rn"]) for r in top_k_per_key(df, ["key"], order, k).collect()}
+    salted = {
+        (r["key"], r["id"], r["rn"])
+        for r in salted_top_k(df, ["key"], order, k, salt_col=F.col("h"), salt_n=8).collect()
+    }
+    assert plain == salted
+    assert len(plain) == sum(key % 7 for key in range(97))
+    assert not {key for key, _, _ in plain if key % 7 == 0}
+
+
+@pytest.mark.parametrize(
+    "n, weight",
+    [(30000, "1"), (30000, "h % 512"), (0, "1")],
+    ids=["rank", "tokens", "empty"],
+)
+def test_global_prefix_equals_naive_window(spark, n, weight):
+    df, weight = _df(spark, n), F.expr(weight)
     order = [F.col("prio").desc(), F.col("h").asc(), F.col("id").asc()]
-    cap = 25000  # > 20k threshold -> distributed range-rank path
     registry: list = []
-    ranked = _global_rank_cap(df, order, cap, registry)
-    got = {(r["id"], r["seq"]) for r in ranked.collect()}
+    got = {(r["id"], r["prefix"]) for r in global_prefix(df, order, weight, cache_registry=registry).collect()}
     for cached in registry:
         cached.unpersist()
-    w = Window.orderBy(*order)
+    w = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, -1)
     expect = {
-        (r["id"], r["seq"])
-        for r in df.withColumn("seq", (F.row_number().over(w) - 1).cast("int"))
-        .where(F.col("seq") < cap)
-        .collect()
+        (r["id"], r["prefix"])
+        for r in df.withColumn("prefix", F.coalesce(F.sum(weight).over(w), F.lit(0))).collect()
     }
-    assert got == expect and len(got) == cap
+    assert got == expect and len(got) == n

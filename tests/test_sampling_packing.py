@@ -85,8 +85,8 @@ def test_pack_matches_sequential_prefix_sum(spark, sf_dir):
 
 def test_pack_invariant_to_partition_count(spark, sf_dir):
     """Pack assignment is a pure function of the data, not of where the
-    sampled range boundaries fall (the _global_rank_cap determinism
-    argument applied to the weighted prefix sum)."""
+    sampled range boundaries fall (the ``global_prefix`` determinism
+    argument)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id",
         F.size(F.filter(F.split("text", " "), lambda t: t != "")).cast("long").alias("n_tokens"),

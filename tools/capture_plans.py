@@ -2,6 +2,9 @@
 
 Usage: python tools/capture_plans.py <out_dir> [query ...]
   writes <out_dir>/<query>.txt; reads $SPARK_GRAFT_SF_DIR (default sf0.1)
+       python tools/capture_plans.py diff <dirA> <dirB>
+  prints a unified diff per differing plan and exits 1 on any difference
+  (a plan present on one side only counts); exits 0 when all are identical
 
 For queries whose registry function EXECUTES during construction (the dedup
 family, corpus_prep, corpus_pack), the returned DataFrame is a materialized
@@ -17,12 +20,14 @@ filled before the capture prints its executed plan, so two captures of the
 same code could differ. The static plan is what a code change moves. The text
 is normalised (:func:`normalize`): expression ids, ``plan_id``s (the
 exchange ids), RDD ids and the random part of ``bwc-*`` scratch dirs become
-fixed tokens, so ``diff -r`` of two captures of the same plans is empty — run the
-tool on two checkouts to check that a change leaves plans alone.
+fixed tokens, so two captures of the same plans are identical — capture on
+two checkouts, then ``diff`` the two directories to check that a change
+leaves plans alone.
 """
 
 from __future__ import annotations
 
+import difflib
 import io
 import os
 import re
@@ -42,6 +47,26 @@ _VOLATILE = [
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"(bwc-[a-z]+-)\w+"), r"\1*"),  # mkdtemp suffix
 ]
+
+
+def diff_dirs(dir_a: str, dir_b: str) -> int:
+    """Print a unified diff for every plan that differs between two capture
+    directories; return the number of differing or one-sided files."""
+    names = sorted(set(os.listdir(dir_a)) | set(os.listdir(dir_b)))
+    differing = 0
+    for name in names:
+        a, b = os.path.join(dir_a, name), os.path.join(dir_b, name)
+        if not (os.path.isfile(a) and os.path.isfile(b)):
+            print(f"only in {dir_a if os.path.isfile(a) else dir_b}: {name}")
+            differing += 1
+            continue
+        with open(a) as fa, open(b) as fb:
+            lines_a, lines_b = fa.readlines(), fb.readlines()
+        if lines_a != lines_b:
+            sys.stdout.writelines(difflib.unified_diff(lines_a, lines_b, a, b))
+            differing += 1
+    print(f"{len(names) - differing} of {len(names)} plans identical")
+    return differing
 
 
 def normalize(plan: str) -> str:
@@ -81,6 +106,8 @@ def capture(spark, sf_dir: str, name: str) -> str:
 
 
 def main() -> None:
+    if sys.argv[1] == "diff":
+        sys.exit(1 if diff_dirs(sys.argv[2], sys.argv[3]) else 0)
     out_dir, names = sys.argv[1], sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(out_dir, exist_ok=True)
