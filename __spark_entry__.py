@@ -423,15 +423,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return groups.where(F.col("n_dups") > 1).select("keeper_id", "n_dups")
 
 
-def dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard over the FULL corpus — NOT a registry query: the
-    shingle self-join is quadratic in hot shingles, so this lives as the
-    pytest refinement oracle for dedup_lsh_refined
-    (tests/test_allpairs_oracles.py; VERDICT r4 #1/#3)."""
-    corpus = _neardup_corpus(spark, sf_dir)
-    return DD.jaccard_pairs(corpus, "doc_id", "text", k=3, threshold=0.6)
-
-
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _neardup_corpus(spark, sf_dir)
     caches: list = []
@@ -591,17 +582,16 @@ def corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = DD.lsh_refined_pairs(uniq, "doc_id", "text", k=3, threshold=0.6, cache_registry=caches)
     drops = pairs.select(F.col("id_b").alias("doc_id")).distinct()
     final = uniq.join(drops, "doc_id", "left_anti")
-    # lang_id + BPE count in one Arrow pass over the surviving rows
-    # (functions/text.lang_bpe_quality_arrow — same bit-exactness argument
-    # as the text_metrics battery); quality passes through untouched, and
-    # the groupBy sees identical per-row values, so the aggregate is
-    # unchanged.
+    # lang_id, BPE count and quality from the text_metrics battery's one
+    # Arrow pass over the surviving rows: its quality is bit-identical to
+    # quality_score_col (tests/test_arrow_twins.py), so the groupBy sees the
+    # same per-row values as the gate above.
     out = (
-        TX.lang_bpe_quality_arrow(final, "text", "quality")
+        TX.text_metrics_arrow(final, "doc_id", "text")
         .groupBy("lang_guess")
         .agg(
             F.count("*").alias("n_docs"),
-            F.sum("bpe").cast("long").alias("total_bpe_tokens"),
+            F.sum("bpe_tokens").cast("long").alias("total_bpe_tokens"),
             F.round(F.avg("quality"), 4).alias("avg_quality"),
         )
     )
@@ -755,21 +745,6 @@ def url_freq_prior(spark: SparkSession, sf_dir: str) -> DataFrame:
         "host_df",
         F.round(F.lit(1.0) / F.col("host_df"), 8).alias("prior"),
     )
-
-
-def embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All-pairs exact cosine baseline — NOT a registry query: a crossJoin is
-    a scale-killer plan, so this lives as the pytest recall oracle for
-    embed_neardup_lsh (tests/test_allpairs_oracles.py; VERDICT r4 #1/#3)."""
-    corpus = _emb_corpus(spark, sf_dir).withColumn("norm", SIM.norm_col(F.col("v")))
-    a = corpus.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"), F.col("norm").alias("na"))
-    b = corpus.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
-    pairs = a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))
-    scored = pairs.select(
-        "id_a", "id_b",
-        F.round(SIM.dot_col(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 4).alias("cosine"),
-    )
-    return scored.where(F.col("cosine") >= 0.99)
 
 
 # 300 queries, not 5: at 5 queries the whole ANN suite is plan/codegen fixed

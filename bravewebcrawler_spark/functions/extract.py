@@ -10,7 +10,8 @@ with deterministic extraction:
     inside ``mapInPandas`` (Arrow batches; no per-row Python loops — the regex
     scan runs via ``Series.str.extractall``/``findall`` which iterate in C).
     Output spans match the input_hint payload:
-    ``array<struct<kind:string,text:string,media_ref:string,offset:int>>``.
+    ``array<struct<kind:string,text:string,media_ref:string,offset:int>>``
+    (``plans/round.SPAN_TYPE``).
   * column-expression versions of the scalar regex battery (F6–F11) for use
     directly in DataFrame plans — JVM-side, whole-stage-codegen'd.
 
@@ -31,8 +32,6 @@ from pyspark.sql import functions as F
 #   1: <title> text   2: <p> text   3: <img src>
 SPAN_RE = re.compile(r"<title>(.*?)</title>|<p>(.*?)</p>|<img src=\"([^\"]*)\">", re.S)
 LINK_RE = re.compile(r"<a href=\"([^\"]*)\">")
-
-SPAN_SCHEMA = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 
 
 def parse_spans_pd(html: pd.Series) -> pd.Series:

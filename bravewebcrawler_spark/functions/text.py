@@ -2,10 +2,15 @@
 
 These are the operations a 100 TB document-corpus pipeline needs on top of the
 reference's extraction battery: language ID, quality scoring, token counting,
-and document fingerprinting (SURVEY.md §5.3 / build-plan step 8). Everything
-here is pure column expressions — JVM-side, whole-stage-codegen'd, no Python
-in the hot path — and every function has an ANSI-SQL twin in
-``__spark_entry__.oracle_sql`` so DuckDB verifies it value-for-value.
+and document fingerprinting (SURVEY.md §5.3 / build-plan step 8). Tokens,
+quality, token counts and fingerprints are column expressions (JVM-side,
+whole-stage-codegen'd); the per-document metric battery (language ID,
+BPE-ish tokens, stopwords, repetition rules) is ONE Arrow-batched pass,
+:func:`text_metrics_arrow`, because the column form steps an interpreted
+lambda per token/line/gram. Every value has an ANSI-SQL twin in
+``__spark_entry__.oracle_sql`` so DuckDB verifies it value-for-value; the
+column-expression twins of the battery live in ``tests/twins.py``, where
+``tests/test_arrow_twins.py`` pins the pass to them bit for bit.
 
 Portable hashing: ``portable_hash64`` is the md5-derived 60-bit hash (same
 construction as functions/canon.url_hash_col) computable identically in
@@ -27,9 +32,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 STOPWORDS_EN = ("the", "a", "of", "and", "to", "in", "is", "it", "on", "for")
-
-# A BPE-ish token: runs of letters, runs of digits, or single punctuation.
-BPE_ISH_RE = r"[A-Za-z]+|\d+|[^A-Za-z\d\s]"
 
 # Fingerprint modulus/base sized so the fold step acc*BASE + h (acc < MOD,
 # h < 2^60) stays below 2^63 — Spark 4 runs ANSI mode (overflow throws) and
@@ -53,18 +55,6 @@ def tokens_col(text: Column) -> Column:
 
 def ws_token_count_col(text: Column) -> Column:
     return F.size(tokens_col(text))
-
-
-def bpe_ish_token_count_col(text: Column) -> Column:
-    """Count of BPE-ish tokens (letter runs / digit runs / punct); the cheap
-    proxy for LLM token counting over a 100 TB corpus."""
-    return F.size(F.regexp_extract_all(text, F.lit(BPE_ISH_RE), 0))
-
-
-def stopword_ratio_col(text: Column, stopwords: tuple[str, ...] = STOPWORDS_EN) -> Column:
-    toks = tokens_col(F.lower(text))
-    sw = F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
-    return sw / F.greatest(F.size(toks), F.lit(1))
 
 
 # The exact character sets of the two former quality regexes, enumerated for
@@ -103,86 +93,6 @@ def quality_score_col(text: Column) -> Column:
     return F.floor(raw * 10000) / 10000
 
 
-def lang_score_col(text: Column, lang: str) -> Column:
-    """# of marker-word hits for ``lang`` among the lowercased tokens."""
-    toks = tokens_col(F.lower(text))
-    return F.size(F.filter(toks, lambda t: t.isin(*LANG_MARKERS[lang])))
-
-
-def lang_id_col(text: Column) -> Column:
-    """argmax over language marker scores; ties broken by language name asc
-    (deterministic, mirrored in SQL via a greatest-struct comparison)."""
-    scored = [
-        F.struct(lang_score_col(text, lg).alias("s"), F.lit(i).alias("nrank"), F.lit(lg).alias("lang"))
-        # languages in REVERSE name order so that on equal score the
-        # lexicographically-smaller name wins via greatest()
-        for i, lg in enumerate(sorted(LANG_MARKERS, reverse=True))
-    ]
-    return F.greatest(*scored)["lang"]
-
-
-def _floor_q(x: Column) -> Column:
-    # floor-quantize to 4dp: bit-identical across engines (round-half rules
-    # differ between Spark's BigDecimal and DuckDB's IEEE rounding)
-    return F.floor(x * 10000) / 10000
-
-
-def dup_line_fraction_col(text: Column) -> Column:
-    """Gopher-style repetition rule: fraction of non-empty lines that are
-    duplicates of an earlier line (1 - distinct/total; 0 for empty docs)."""
-    lines = F.filter(F.split(text, "\n"), lambda l: l != "")
-    n = F.size(lines)
-    return F.when(
-        n > 0,
-        _floor_q(F.lit(1.0) - F.size(F.array_distinct(lines)) / n.cast("double")),
-    ).otherwise(F.lit(0.0))
-
-
-def dup_ngram_fraction_col(text: Column, k: int = 2) -> Column:
-    """Duplicate k-gram fraction over whitespace tokens (1 - distinct/total).
-
-    The cheap columnar stand-in for Gopher's "fraction of characters in
-    duplicate n-grams": all array ops, no shuffle, no Python.
-    """
-    toks = tokens_col(text)
-    n = F.size(toks)
-    if k == 2:
-        # Bigram fast path: distinct over (tok[i], tok[i+1]) STRUCTS equals
-        # distinct over the joined "tok[i] tok[i+1]" strings — tokens cannot
-        # contain the separator (they come from splitting on it), so the
-        # join is injective. Two slices + one zip_with instead of a
-        # per-gram slice+concat string build (sf0.1 documents, local[32],
-        # warm: 4.7s -> 1.1s for the full-column collect).
-        grams = F.when(
-            n >= 2,
-            F.zip_with(
-                F.slice(toks, 1, n - 1),
-                F.slice(toks, 2, n - 1),
-                lambda a, b: F.struct(a.alias("a"), b.alias("b")),
-            ),
-        ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-    else:
-        grams = F.when(
-            n >= k,
-            F.transform(
-                F.sequence(F.lit(1), n - (k - 1)),
-                lambda i: F.array_join(F.slice(toks, i, k), " "),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-    total = F.size(grams)
-    return F.when(
-        total > 0,
-        _floor_q(F.lit(1.0) - F.size(F.array_distinct(grams)) / total.cast("double")),
-    ).otherwise(F.lit(0.0))
-
-
-def symbol_word_ratio_col(text: Column) -> Column:
-    """(# of '#' chars + '...' runs) per word — Gopher's symbol-to-word rule."""
-    hashes = F.length(text) - F.length(F.regexp_replace(text, r"#", ""))
-    ellipses = F.size(F.regexp_extract_all(text, F.lit(r"\.\.\."), 0))
-    return _floor_q((hashes + ellipses) / F.greatest(F.size(tokens_col(text)), F.lit(1)).cast("double"))
-
-
 def fingerprint_col(text: Column) -> Column:
     """Polynomial rolling hash over whitespace tokens mod 2^61-1 (F20-style
     document fingerprint). Exact integer math — oracle-identical.
@@ -219,9 +129,9 @@ def sql_fingerprint(expr: str) -> str:
 # ----------------------------------------------------- Arrow-batched battery
 def _metrics_batch_fn():
     """mapInArrow body for :func:`text_metrics_arrow` — exact Python twins of
-    the column expressions above, one pass per doc (guide §4.2: the HOF
-    forms step an interpreted lambda per token/line/gram; this loop is plain
-    C-speed str/set work). Bit-exactness notes per field:
+    the column expressions in ``tests/twins.py``, one pass per doc (guide
+    §4.2: the HOF forms step an interpreted lambda per token/line/gram; this
+    loop is plain C-speed str/set work). Bit-exactness notes per field:
 
     - every count is an exact int (tokens, lines, grams, marker hits,
       translate-deletion char counts, regex match counts — the Python
@@ -317,8 +227,9 @@ def _metrics_batch_fn():
 
 def text_metrics_arrow(df, id_col: str, text_col: str):
     """The full per-document metric battery in ONE Arrow-batched pass —
-    value-for-value identical to composing the column expressions above
-    (see :func:`_metrics_batch_fn` for the per-field exactness argument;
+    value-for-value identical to composing the column expressions of
+    ``tests/twins.py`` and :func:`quality_score_col` (see
+    :func:`_metrics_batch_fn` for the per-field exactness argument;
     ``stopword_ratio`` is emitted RAW, callers apply their own rounding
     exactly as with the column form)."""
     return df.select(
@@ -329,47 +240,3 @@ def text_metrics_arrow(df, id_col: str, text_col: str):
         "quality double, ws_tokens long, bpe_tokens long, stopword_ratio double, "
         "dup_line_frac double, dup_2gram_frac double, symbol_word_ratio double",
     )
-
-
-def _lang_bpe_fn():
-    """mapInArrow body for :func:`lang_bpe_quality_arrow`: lang_id + BPE-ish
-    token count (exact Python twins, same argument as _metrics_batch_fn)
-    with the precomputed quality column passed through untouched."""
-
-    def run(batches):
-        import re
-
-        import pyarrow as pa
-
-        bpe_re = re.compile(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\x0b\f\r]")
-        langs_rev = sorted(LANG_MARKERS, reverse=True)
-        markers = {lg: frozenset(LANG_MARKERS[lg]) for lg in LANG_MARKERS}
-        for batch in batches:
-            texts = batch.column("text").to_pylist()
-            quality = batch.column("quality")
-            guesses: list[str] = []
-            bpes: list[int] = []
-            for txt in texts:
-                t = txt or ""
-                low = [x for x in t.lower().split(" ") if x]
-                guesses.append(
-                    max(
-                        (sum(1 for x in low if x in markers[lg]), i, lg)
-                        for i, lg in enumerate(langs_rev)
-                    )[2]
-                )
-                bpes.append(len(bpe_re.findall(t)))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(guesses, pa.string()), pa.array(bpes, pa.int64()), quality],
-                names=["lang_guess", "bpe", "quality"],
-            )
-
-    return run
-
-
-def lang_bpe_quality_arrow(df, text_col: str, quality_col: str):
-    """(lang_guess, bpe, quality) in one Arrow pass — the corpus_prep final
-    projection without per-token HOF stepping; quality is a passthrough."""
-    return df.select(
-        F.col(text_col).alias("text"), F.col(quality_col).cast("double").alias("quality")
-    ).mapInArrow(_lang_bpe_fn(), "lang_guess string, bpe long, quality double")

@@ -1,6 +1,9 @@
 """Benchmark decontamination: flag corpus documents that share k-gram text
 with an evaluation/benchmark set — the standard pre-training hygiene step
 (the PaLM/GPT-3 papers' "13-gram overlap" rule, here parameterized).
+:func:`contamination_hits` returns the flagged documents with their hit
+counts (the ``decontam_overlap`` query); dropping them is the caller's
+anti-join on the document id.
 
 Spark-first shape: the benchmark side is SMALL relative to the corpus (eval
 suites are at most ~10^6 documents → ~10^8 distinct shingle hashes), so its
@@ -20,7 +23,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
 
 
 def contamination_hits(
@@ -64,27 +66,3 @@ def contamination_hits(
         F.count("*").alias("n_hits"), F.min("sh").alias("example_shingle")
     )
 
-
-def decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    c_id: str = "doc_id",
-    c_text: str = "text",
-    b_text: str = "text",
-    k: int = 5,
-    max_hits: int = 0,
-) -> DataFrame:
-    """Corpus rows surviving decontamination (≤ max_hits contaminated
-    k-grams; 0 = any overlap removes the document). Anti-join shape.
-
-    The flagged-id side is NOT force-broadcast: while eval suites are small,
-    the set of contaminated CORPUS doc ids is corpus-sized in the worst case
-    (10^8 flagged ids is hundreds of MB — past broadcast/driver limits), so
-    the join strategy is left to the optimizer/AQE, which broadcasts when
-    the runtime size is actually small and falls back to a shuffled
-    anti-join when it is not. Only the benchmark shingle set (bounded by the
-    eval suite) is force-broadcast, in :func:`contamination_hits`."""
-    flagged = contamination_hits(corpus, benchmark, c_id, c_text, b_text, k).where(
-        F.col("n_hits") > max_hits
-    )
-    return corpus.join(flagged.select(c_id), c_id, "left_anti")

@@ -4,8 +4,8 @@ The reference dedups implicitly (each input row processed once,
 SURVEY.md §2.4 A6); a 100 TB corpus needs the full ladder:
 
   exact           hash-groupBy on md5(text)
-  n-gram Jaccard  shingle explode → self-equi-join → pair aggregate
-  MinHash + LSH   portable minhash signatures → band buckets → bucket join
+  MinHash + LSH   portable minhash signatures → band buckets → bucket join,
+                  exact Jaccard refinement on the candidate pairs
   SimHash         per-bit token-hash vote → bucket on the signature
   embedding       cosine near-dup (operators/similarity.py)
 
@@ -13,9 +13,10 @@ Shingling runs as Arrow-batched Python over (doc, text) — one per-doc
 shingle helper, one md5 hash and one NumPy minhash helper shared by the
 three passes (decontamination strings, signatures, signatures plus hash
 sets), because the column-expression form steps an interpreted lambda per
-shingle. Everything downstream is built-in DataFrame ops (explode / groupBy
-/ join): shuffles land on shingle/band/bucket keys and partial aggregation
-is map-side. All hashes are the portable md5-derived construction
+shingle (that form, ``shingles_col``, is the reference twin the tests compare
+the passes against, in ``tests/twins.py``). Everything downstream is
+built-in DataFrame ops (explode / groupBy / join): shuffles land on
+shingle/band/bucket keys and partial aggregation is map-side. All hashes are the portable md5-derived construction
 (functions/text.py) so every operator has an exact DuckDB oracle twin in
 __spark_entry__.oracle_sql.
 
@@ -23,8 +24,9 @@ Ids are byte, short, int or long; any other id type raises ``TypeError``.
 
 Scale notes: shingle explode multiplies rows by ~tokens-per-doc — at 100 TB
 the LSH path (fixed 16-value signature per doc, then tiny band keys) is the
-one that survives; the full-pair Jaccard join exists for small/verification
-scale and as the LSH refinement step on candidate pairs only.
+one that survives; exact Jaccard runs as the LSH refinement step on
+candidate pairs only (the full-pair shingle self-join is the tests'
+verification-scale oracle, ``tests/twins.jaccard_pairs``).
 """
 
 from __future__ import annotations
@@ -52,16 +54,6 @@ def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def shingles_col(text_col, k: int = 3):
-    """k-word shingles from whitespace tokens (join with single spaces)."""
-    toks = tokens_col(text_col)
-    n = F.size(toks)
-    return F.when(n >= k, F.transform(
-        F.sequence(F.lit(1), n - (k - 1)),
-        lambda i: F.array_join(F.slice(toks, i, k), " "),
-    )).otherwise(F.array().cast("array<string>"))
-
-
 def sql_shingles(expr: str, k: int = 3) -> str:
     toks = f"list_filter(string_split({expr}, ' '), t -> t <> '')"
     return (
@@ -69,34 +61,6 @@ def sql_shingles(expr: str, k: int = 3) -> str:
         f"list_transform(range(1, len({toks}) - {k - 2}), "
         f"i -> array_to_string(list_slice({toks}, i, i + {k - 1}), ' ')) "
         f"else [] end"
-    )
-
-
-def jaccard_pairs(df: DataFrame, id_col: str, text_col: str, k: int = 3, threshold: float = 0.5) -> DataFrame:
-    """n-gram Jaccard near-dup pairs (id_a < id_b, jaccard >= threshold).
-
-    shingle-set explode → self-equi-join on shingle → per-pair intersection
-    count vs set sizes. Equi-join (never theta); the shuffle key is the
-    shingle, so hot shingles are the skew risk — AQE skew-join handles it.
-    """
-    sh = (
-        df.select(F.col(id_col).alias("doc"), F.explode(F.array_distinct(shingles_col(F.col(text_col), k))).alias("sh"))
-    )
-    sizes = sh.groupBy("doc").agg(F.count("*").alias("sz"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    sa = sizes.select(F.col("doc").alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc").alias("id_b"), F.col("sz").alias("sz_b"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("jaccard", F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 4))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -118,7 +82,7 @@ def _doc_text(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def _shingles_py(txt: str | None, k: int) -> list[str]:
-    """Python twin of :func:`shingles_col`: the k-word shingles of the
+    """Python twin of ``tests/twins.shingles_col``: the k-word shingles of the
     whitespace tokens (empty tokens dropped), in order, repeats kept."""
     toks = [t for t in (txt or "").split(" ") if t]
     return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
@@ -302,8 +266,8 @@ def lsh_refined_pairs(
     """The 100-TB dedup composition: MinHash+LSH candidate generation, exact
     Jaccard refinement computed ONLY on the candidate pairs.
 
-    The full-corpus shingle self-join (jaccard_pairs) is quadratic in hot
-    shingles; here the expensive exact step touches only |candidates| pairs —
+    The full-corpus shingle self-join is quadratic in hot shingles; here the
+    expensive exact step touches only |candidates| pairs —
     the intersection count joins shingles through the candidate pair list
     instead of shingle-vs-shingle — and size-ratio pruning drops candidate
     pairs that provably cannot reach the threshold (J <= min_sz/max_sz)

@@ -22,6 +22,11 @@ Decode ladder (what each tier honestly does in this container):
 What IS fully real and tested either way is the Spark-side plumbing:
 schema, Arrow batch shape, mapInPandas signature, and partition behavior —
 exactly what survives a swap-in of a full codec on a production cluster.
+
+The ``multimodal_meta`` registry query runs only the plumbing
+(:func:`media_table_from_documents` and an aggregate over it): the DuckDB
+oracle has no decoder to compare :func:`extract_media_features` against, so
+the decode pass is checked by ``tests/test_multimodal.py`` on crafted bytes.
 """
 
 from __future__ import annotations
@@ -34,15 +39,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("n_bytes", T.IntegerType(), True),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.StringType(), False),
@@ -53,25 +49,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("feature", T.ArrayType(T.FloatType()), True),
     ]
 )
-
-
-def decode_available() -> bool:
-    """True — image *header* decode (width/height) is pure Python and always
-    available; see :func:`parse_image_header`. Full pixel decode still needs
-    a codec library (:func:`codec_available`)."""
-    return True
-
-
-def codec_available() -> bool:
-    """True when a real pixel codec library is importable (never in this
-    sandbox). PNG no longer needs one — :func:`decode_png_pixels` is pure
-    stdlib — so this now gates only the JPEG/GIF pixel paths."""
-    try:
-        import PIL  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}  # gray, RGB, gray+alpha, RGBA
@@ -91,8 +68,7 @@ def decode_png_pixels(payload: bytes | None) -> tuple[int, int, list[float]] | N
 
     Scope: non-interlaced, 8-bit-depth color types 0/2/4/6. Palette images
     (color type 3), 16-bit depths, and Adam7 interlace return ``None`` —
-    callers fall back to the digest stand-in, same as JPEG/GIF pixel decode
-    (:func:`codec_available`).
+    callers fall back to the digest stand-in, as for JPEG/GIF pixels.
 
     Un-filtering vectorizes what vectorizes (round-6, VERDICT r5 #3): None
     is a slice; a run of consecutive Up rows is ONE column-wise cumulative
@@ -293,7 +269,7 @@ def _decode(payload: bytes | None) -> tuple[int | None, int | None, list[float] 
     (:func:`decode_png_pixels`), else real container width/height from the
     header when the bytes are a parseable PNG/JPEG/GIF with the digest
     stand-in feature, else digest-derived everything (JPEG/GIF pixel decode
-    still needs a codec — :func:`codec_available`)."""
+    still needs a codec)."""
     if payload is None:
         return None, None, None
     payload = bytes(payload)

@@ -30,24 +30,9 @@ from pyspark.sql import functions as F
 from bravewebcrawler_spark.operators.ranking import top_k_per_key
 from bravewebcrawler_spark.sources.tables import spread
 
-SIM_P = 1_000_000_007
-
 
 def _dbl(v: Column) -> Column:
     return F.transform(v, lambda x: x.cast("double"))
-
-
-def dot_col(u: Column, v: Column) -> Column:
-    """Sequential-fold dot product in double precision (zip_with + aggregate)."""
-    return F.aggregate(
-        F.zip_with(_dbl(u), _dbl(v), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm_col(u: Column) -> Column:
-    return F.sqrt(dot_col(u, u))
 
 
 def _dot_raw(u: Column, v: Column) -> Column:
@@ -407,8 +392,9 @@ def bucketed_neardup_pairs(
     the bucket id doubles as a write-time partition key at 10^10 vectors.
     Near-identical vectors (the near-dup regime) agree on every hyperplane
     sign with overwhelming probability, so recall loss concentrates exactly
-    where cosine < threshold anyway; the exact crossJoin variant remains as
-    the small-scale/verification baseline (embed_neardup).
+    where cosine < threshold anyway; the exact crossJoin variant is the
+    tests' verification baseline (``embed_neardup`` in
+    ``tests/test_allpairs_oracles.py``), which pins this operator's recall.
     """
     c = spread(_normed(corpus, id_col, vec_col, "doc", "v", "n")).withColumn(
         "bucket", hyperplane_sign_bucket(F.col("v"), n_planes)

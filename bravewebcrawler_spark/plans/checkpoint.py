@@ -40,10 +40,9 @@ import os
 import time
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-OUTPUT_TABLES = ("documents", "crawl_log")
 
 
 @dataclass(frozen=True)
@@ -91,9 +90,12 @@ def start_writes(
     """Kick off table writes on ``pool`` and return their futures — lets the
     caller overlap fetch-derived output writes with the discovery pipeline
     (the two only share WARM caches, so concurrency is pure overlap). The
-    caller must ``result()`` every future before publishing the manifest."""
+    caller must ``result()`` every future before publishing the manifest.
+    Each write runs with the caller's Spark local properties (job group, job
+    tags), captured here, so its jobs are attributed like the caller's."""
     rd = round_dir(state_dir, round_no)
-    return [pool.submit(_write, rd, name, df) for name, df in tables.items()]
+    write = inheritable_thread_target(SparkSession.active())(_write)
+    return [pool.submit(write, rd, name, df) for name, df in tables.items()]
 
 
 def publish_manifest(state_dir: str, round_no: int, metrics: RoundMetrics, base_round: int) -> None:

@@ -14,6 +14,12 @@ Everything is column expressions + one hash aggregate per seed — no window
 (scales to any number of seeds), no UDF. The status taxonomy mirrors the
 reference's terminal statuses (ALL_FIELDS_COMPLETE / PARTIAL_k_MISSING /
 NO_FACTS_EXTRACTED / NO_RESULTS_FOUND, brave_parallel_processing.py:287-305).
+
+The registry's ``facts_per_seed`` query runs :func:`merge_facts_per_seed` over
+the documents table and ``facts_reference_csv`` translates it with
+:func:`facts_to_reference_csv`; :func:`facts_per_seed_from_crawl` is the same
+merge over crawl output, the reference workflow's extraction step that
+``tests/test_reference_workflow.py`` runs against the sequential oracle.
 """
 
 from __future__ import annotations
@@ -119,22 +125,7 @@ REFERENCE_JSON_KEYS = (
 )
 REFERENCE_CSV_COLUMNS = ("company_number", "company_name", *REFERENCE_JSON_KEYS, "processing_status")
 
-# engine fact field -> reference JSON key (models.py:4-12 <-> EXPECTED_JSON_KEYS)
-_FIELD_TO_KEY = {
-    "founded": "founded",
-    "address": "Hauptsitz",
-    "che_id": "Firmenidentifikationsnummer",
-    "phone": "HauptTelefonnummer",
-    "email": "HauptEmailAdresse",
-}
-
-
-def facts_to_reference_csv(
-    facts: DataFrame,
-    seeds: DataFrame,
-    out_dir: str | None = None,
-    pdf_facts: DataFrame | None = None,
-) -> DataFrame:
+def facts_to_reference_csv(facts: DataFrame, seeds: DataFrame, out_dir: str | None = None) -> DataFrame:
     """Boundary translation of the facts rows into the reference's EXACT
     output CSV shape: positional columns ``company_number,company_name`` +
     the 7 ``EXPECTED_JSON_KEYS`` + ``processing_status``
@@ -147,11 +138,9 @@ def facts_to_reference_csv(
     the reference's (company_number, company_name) verbatim.
     ``official_website`` is the seed's root URL when the crawl fetched any
     evidence (the reference fills it from the search hit that won the
-    cascade, google_search.py:72). ``Geschäftsbericht`` comes from the
-    optional ``pdf_facts`` (seed_id, geschaeftsbericht) side input — in the
-    reference it is found by a separate PDF search tier
-    (google_harvester.py:105-114, operator P9), not by the crawl itself —
-    and is ``"null"`` when absent.
+    cascade, google_search.py:72). ``Geschäftsbericht`` is always ``"null"``:
+    the reference finds it by a separate PDF search tier
+    (google_harvester.py:105-114, operator P9), not by the crawl itself.
 
     Writes a header'd CSV when ``out_dir`` is given; always returns the
     translated DataFrame (all-string columns, reference order).
@@ -164,12 +153,6 @@ def facts_to_reference_csv(
     j = facts.join(
         F.broadcast(seeds.select("seed_id", "url").dropDuplicates(["seed_id"])), "seed_id"
     )
-    if pdf_facts is not None:
-        j = j.join(
-            F.broadcast(pdf_facts.select("seed_id", "geschaeftsbericht")), "seed_id", "left"
-        )
-    else:
-        j = j.withColumn("geschaeftsbericht", F.lit(None).cast("string"))
     out = j.select(
         F.col("seed_id").alias("company_number"),
         F.col("url").alias("company_name"),
@@ -179,7 +162,7 @@ def facts_to_reference_csv(
         _s(F.col("che_id")).alias("Firmenidentifikationsnummer"),
         _s(F.col("phone")).alias("HauptTelefonnummer"),
         _s(F.col("email")).alias("HauptEmailAdresse"),
-        _s(F.col("geschaeftsbericht")).alias("Geschäftsbericht"),
+        F.lit("null").alias("Geschäftsbericht"),
         F.col("status").alias("processing_status"),
     )
     assert tuple(out.columns) == REFERENCE_CSV_COLUMNS

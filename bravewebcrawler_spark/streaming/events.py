@@ -10,6 +10,8 @@ oracle (tests/test_streaming.py asserts parity).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -41,13 +43,24 @@ def window_agg_batch(events: DataFrame) -> DataFrame:
     )
 
 
+def events_stream(spark: SparkSession, events_path: str) -> DataFrame:
+    """The events as a streaming parquet source. The file source reads a
+    DIRECTORY; a bare parquet file (the testdata layout) is read as its
+    directory filtered to that one file name."""
+    reader = spark.readStream.schema(EVENTS_SCHEMA)
+    if os.path.isfile(events_path):
+        reader = reader.option("pathGlobFilter", os.path.basename(events_path))
+        events_path = os.path.dirname(os.path.abspath(events_path))
+    return reader.parquet(events_path)
+
+
 def window_agg_stream(spark: SparkSession, events_path: str) -> DataFrame:
     """The same aggregation as a streaming query over a parquet source.
 
     Watermark bounds state for late data; in production the source is
     kafka/kinesis — the parquet source here drives the identical plan.
     """
-    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(events_path)
+    stream = events_stream(spark, events_path)
     return (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", f"{WINDOW_S} seconds").alias("win"), "event_type")

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from bravewebcrawler_spark.streaming.events import EVENTS_SCHEMA
+from bravewebcrawler_spark.streaming.events import events_stream
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -49,7 +49,7 @@ def _update(key: Any, pdfs: Iterable[pd.DataFrame], state: GroupState) -> Iterab
 
 
 def running_user_stats_stream(spark: SparkSession, events_path: str) -> DataFrame:
-    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(events_path)
+    stream = events_stream(spark, events_path)
     # Project to the two columns the state function touches BEFORE the
     # key shuffle: the full event row carries a ~100-byte JSON props string
     # plus three more unused columns, all of which would otherwise cross the
@@ -60,37 +60,18 @@ def running_user_stats_stream(spark: SparkSession, events_path: str) -> DataFram
     )
 
 
-def run_stateful_to_memory(
-    spark: SparkSession, events_path: str, name: str = "stateful_out",
-    state_partitions: int | None = 0,
-) -> DataFrame:
-    # the streaming file source requires a DIRECTORY; accept a bare parquet
-    # file (the testdata layout) by streaming a temp dir that symlinks it
-    import os
-    import tempfile
-
-    if os.path.isfile(events_path):
-        d = tempfile.mkdtemp(prefix="bwc_stream_")
-        os.symlink(os.path.abspath(events_path), os.path.join(d, os.path.basename(events_path)))
-        events_path = d
+def run_stateful_to_memory(spark: SparkSession, events_path: str, name: str = "stateful_out") -> DataFrame:
     # State-store instance count == shuffle partitions AT STREAM START, and
     # each instance pays per-batch fixed cost (store init + one Arrow
-    # exchange with a Python worker). Default (0): half the cores, floor 8 —
-    # enough instances to spread the per-key Python work across workers
-    # without paying 32 near-idle store inits on a small keyspace (measured
-    # with the pre-sized heap, best-of-2: sf1.0/15k keys 8 -> 3.6s,
-    # 16 -> 2.6s, 32 -> 2.75s; sf0.1/1.5k keys 8/16/32 all 1.3-1.8s — the
-    # old "32 costs 4-9s at sf0.1" was heap-growth full-GC noise, re-measured
-    # after the round-6 -Xms fix). Scales with the cluster, not a local
-    # constant; a production stream with millions of keys passes None to
-    # keep the session's (cluster-sized) setting. The override is scoped —
-    # streaming queries capture the conf at start; restored before
-    # post-processing.
-    if state_partitions == 0:
-        state_partitions = max(8, spark.sparkContext.defaultParallelism // 2)
+    # exchange with a Python worker). Half the cores, floor 8 — enough
+    # instances to spread the per-key Python work across workers without
+    # paying 32 near-idle store inits on a small keyspace (measured with the
+    # pre-sized heap, best-of-2: sf1.0/15k keys 8 -> 3.6s, 16 -> 2.6s,
+    # 32 -> 2.75s; sf0.1/1.5k keys 8/16/32 all 1.3-1.8s). Scales with the
+    # cluster, not a local constant. The override is scoped — streaming
+    # queries capture the conf at start; restored before post-processing.
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(max(8, spark.sparkContext.defaultParallelism // 2)))
     try:
         q = (
             running_user_stats_stream(spark, events_path)
@@ -102,8 +83,7 @@ def run_stateful_to_memory(
         q.processAllAvailable()
         q.stop()
     finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     # update mode emits one row per key per batch; the LAST emission per key
     # is the final running value (single finite source => one batch here,
     # but dedupe defensively by taking max n_events per key)

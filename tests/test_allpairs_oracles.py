@@ -1,6 +1,7 @@
 """The two all-pairs baselines, demoted from the driver registry (VERDICT r4
 #1/#3): a crossJoin / full-corpus shingle self-join is a scale-killer plan in
-a registry that advertises 100-TB shapes, so they live here instead — still
+a registry that advertises 100-TB shapes, so they live here, on the column
+twins of ``tests/twins.py``, instead — still
 oracle-checked against their DuckDB twins (the SQL moved verbatim from
 oracle_sql()), and additionally used as the exactness/recall gates for their
 scale siblings:
@@ -29,7 +30,29 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E  # noqa: E402
 from bravewebcrawler_spark.operators import dedup as DD  # noqa: E402
+from tests.twins import dot_col, jaccard_pairs, norm_col  # noqa: E402
 from tools.check_queries import compare, duck_con  # noqa: E402
+
+
+def dedup_jaccard(spark, sf_dir):
+    """Exact n-gram Jaccard over the FULL corpus — quadratic in hot
+    shingles, so a test oracle, not a registry query."""
+    corpus = E._neardup_corpus(spark, sf_dir)
+    return jaccard_pairs(corpus, "doc_id", "text", k=3, threshold=0.6)
+
+
+def embed_neardup(spark, sf_dir):
+    """All-pairs exact cosine over a crossJoin — a test oracle, not a
+    registry query."""
+    corpus = E._emb_corpus(spark, sf_dir).withColumn("norm", norm_col(F.col("v")))
+    a = corpus.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"), F.col("norm").alias("na"))
+    b = corpus.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
+    pairs = a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))
+    scored = pairs.select(
+        "id_a", "id_b",
+        F.round(dot_col(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 4).alias("cosine"),
+    )
+    return scored.where(F.col("cosine") >= 0.99)
 
 
 @pytest.fixture(scope="module")
@@ -62,12 +85,12 @@ _EMB_ORACLE = f"""
 
 
 def test_dedup_jaccard_matches_duckdb(spark, sf_dir, con):
-    problems = compare("dedup_jaccard", E.dedup_jaccard(spark, sf_dir), _JACCARD_ORACLE, con)
+    problems = compare("dedup_jaccard", dedup_jaccard(spark, sf_dir), _JACCARD_ORACLE, con)
     assert not problems, "\n".join(problems)
 
 
 def test_embed_neardup_matches_duckdb(spark, sf_dir, con):
-    problems = compare("embed_neardup", E.embed_neardup(spark, sf_dir), _EMB_ORACLE, con)
+    problems = compare("embed_neardup", embed_neardup(spark, sf_dir), _EMB_ORACLE, con)
     assert not problems, "\n".join(problems)
 
 
@@ -81,7 +104,7 @@ def test_lsh_refined_equals_exact_jaccard_on_candidates(spark, sf_dir):
     exact answer WITH THE SAME jaccard value, and the misses must be exactly
     the exact pairs that no MinHash band caught."""
     corpus = E._neardup_corpus(spark, sf_dir)
-    exact = _pairmap(E.dedup_jaccard(spark, sf_dir).collect())
+    exact = _pairmap(dedup_jaccard(spark, sf_dir).collect())
     refined = _pairmap(E.dedup_lsh_refined(spark, sf_dir).collect())
     assert set(refined) <= set(exact)
     for pair, j in refined.items():
@@ -121,7 +144,7 @@ def test_embed_lsh_recall_vs_exact(spark, sf_dir):
     answer with identical cosines; recall is pinned (cosine >= 0.99 pairs are
     near-parallel vectors, which sign-LSH separates only with probability
     ~acos(0.99)/pi per plane — measured 1.0 on this corpus)."""
-    exact = _pairmap(E.embed_neardup(spark, sf_dir).collect())
+    exact = _pairmap(embed_neardup(spark, sf_dir).collect())
     lsh = _pairmap(E.embed_neardup_lsh(spark, sf_dir).collect())
     assert set(lsh) <= set(exact)
     for pair, c in lsh.items():

@@ -3,7 +3,8 @@
 Every optimization that moved work across the Python boundary claims
 bit-identical values, not just statistical agreement; these tests pin that
 claim row-for-row on the sf0.01 documents plus crafted edge cases (empty
-text, shorter-than-k docs, newlines, '#'/'...' symbols, unicode).
+text, shorter-than-k docs, newlines, '#'/'...' symbols, unicode). The
+column-expression twins are test code (``tests/twins.py``).
 """
 
 from __future__ import annotations
@@ -18,6 +19,7 @@ from pyspark.sql import functions as F
 
 from bravewebcrawler_spark.functions import text as TX
 from bravewebcrawler_spark.operators import dedup as DD
+from tests import twins as TW
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -50,7 +52,7 @@ def test_minhash_sig_and_arrays_equals_column_form(spark):
     docs = _docs(spark)
     col_form = docs.select(
         F.col("doc_id").alias("doc"),
-        F.explode(F.array_distinct(DD.shingles_col(F.col("text"), 3))).alias("sh"),
+        F.explode(F.array_distinct(TW.shingles_col(F.col("text"), 3))).alias("sh"),
     ).withColumn("H", TX.portable_hash64(F.col("sh")))
     want_hs: dict[int, set[int]] = {r["doc_id"]: set() for r in docs.collect()}
     for r in col_form.collect():
@@ -107,7 +109,7 @@ def test_exploded_shingle_strings_equals_column_form(spark):
     docs = _docs(spark)
     col_form = docs.select(
         F.col("doc_id").alias("doc"),
-        F.explode(F.array_distinct(DD.shingles_col(F.col("text"), 5))).alias("sh"),
+        F.explode(F.array_distinct(TW.shingles_col(F.col("text"), 5))).alias("sh"),
     ).withColumn("shh", TX.portable_hash64(F.col("sh")))
     want = {(r["doc"], r["sh"], r["shh"]) for r in col_form.collect()}
     got = {
@@ -121,17 +123,17 @@ def test_text_metrics_arrow_equals_column_form(spark):
     docs = _docs(spark)
     col_form = docs.select(
         "doc_id",
-        TX.lang_id_col(F.col("text")).alias("lang_guess"),
-        TX.lang_score_col(F.col("text"), "en").cast("long").alias("s_en"),
-        TX.lang_score_col(F.col("text"), "de").cast("long").alias("s_de"),
-        TX.lang_score_col(F.col("text"), "fr").cast("long").alias("s_fr"),
+        TW.lang_id_col(F.col("text")).alias("lang_guess"),
+        TW.lang_score_col(F.col("text"), "en").cast("long").alias("s_en"),
+        TW.lang_score_col(F.col("text"), "de").cast("long").alias("s_de"),
+        TW.lang_score_col(F.col("text"), "fr").cast("long").alias("s_fr"),
         TX.quality_score_col(F.col("text")).alias("quality"),
         TX.ws_token_count_col(F.col("text")).cast("long").alias("ws_tokens"),
-        TX.bpe_ish_token_count_col(F.col("text")).cast("long").alias("bpe_tokens"),
-        TX.stopword_ratio_col(F.col("text")).alias("stopword_ratio"),
-        TX.dup_line_fraction_col(F.col("text")).alias("dup_line_frac"),
-        TX.dup_ngram_fraction_col(F.col("text"), 2).alias("dup_2gram_frac"),
-        TX.symbol_word_ratio_col(F.col("text")).alias("symbol_word_ratio"),
+        TW.bpe_ish_token_count_col(F.col("text")).cast("long").alias("bpe_tokens"),
+        TW.stopword_ratio_col(F.col("text")).alias("stopword_ratio"),
+        TW.dup_line_fraction_col(F.col("text")).alias("dup_line_frac"),
+        TW.dup_ngram_fraction_col(F.col("text")).alias("dup_2gram_frac"),
+        TW.symbol_word_ratio_col(F.col("text")).alias("symbol_word_ratio"),
     )
     want = {r["doc_id"]: r for r in col_form.collect()}
     got = {
@@ -144,23 +146,6 @@ def test_text_metrics_arrow_equals_column_form(spark):
         for f in w.asDict():
             # exact equality, doubles included — the battery's contract
             assert g[f] == w[f], (d, f, g[f], w[f])
-
-
-def test_lang_bpe_quality_arrow_equals_column_form(spark):
-    docs = _docs(spark).withColumn("quality", TX.quality_score_col(F.col("text")))
-    want = sorted(
-        (r["lang_guess"], r["bpe"], r["quality"])
-        for r in docs.select(
-            TX.lang_id_col(F.col("text")).alias("lang_guess"),
-            TX.bpe_ish_token_count_col(F.col("text")).cast("long").alias("bpe"),
-            "quality",
-        ).collect()
-    )
-    got = sorted(
-        (r["lang_guess"], r["bpe"], r["quality"])
-        for r in TX.lang_bpe_quality_arrow(docs, "text", "quality").collect()
-    )
-    assert got == want
 
 
 def test_lsh_probe_topk_equals_bucket_join_form(spark):

@@ -104,3 +104,19 @@ def test_state_is_loaded_only_for_a_round_that_runs(spark, tmp_path_factory, mon
     crawl(spark, WEB, seeds, POLICY, d, stop_after_round=0)
     assert ckpt.latest_round(d) == 0
     assert loaded == []
+
+
+def test_side_writes_carry_the_callers_job_group(spark, tmp_path_factory):
+    """The overlapped side writes (``ckpt.start_writes``) run on pool
+    threads; they inherit the caller's local properties, so a crawl run
+    under a job group starts no job outside it."""
+    seeds = spark.createDataFrame(WEB.seed_urls(8), "seed_id string, url string")
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    spark.sparkContext.setJobGroup("bwc-crawl-group", "one crawl round")
+    try:
+        crawl(spark, WEB, seeds, replace(POLICY, max_rounds=1), str(tmp_path_factory.mktemp("group")))
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+    assert tracker.getJobIdsForGroup("bwc-crawl-group")
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()

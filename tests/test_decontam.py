@@ -7,12 +7,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from bravewebcrawler_spark.functions.text import (
-    dup_line_fraction_col,
-    dup_ngram_fraction_col,
-    symbol_word_ratio_col,
-)
-from bravewebcrawler_spark.operators.decontam import contamination_hits, decontaminate
+from bravewebcrawler_spark.functions.text import text_metrics_arrow
+from bravewebcrawler_spark.operators.decontam import contamination_hits
 
 
 @pytest.fixture(scope="module")
@@ -53,30 +49,25 @@ def test_contamination_hits_exact_membership(docs, bench, spark):
     assert 4 not in got  # shorter than k tokens -> no shingles -> clean
 
 
-def test_decontaminate_filters_in_place(docs, bench):
-    kept = sorted(r["doc_id"] for r in decontaminate(docs, bench, k=5).collect())
-    assert kept == [4]
-    # max_hits=1 tolerates single-shingle overlap
-    kept1 = sorted(r["doc_id"] for r in decontaminate(docs, bench, k=5, max_hits=1).collect())
-    assert kept1 == [1, 2, 3, 4, 5]
-
-
 def test_repetition_rules_crafted(spark):
+    """The repetition rules of the battery the text_metrics query runs."""
     rows = [
         (1, "a b\na b\nc d"),            # 3 lines, 'a b' duplicated -> 1/3
-        (2, "x y x y x y"),               # 2-grams: 5 total, 3 distinct ('x y','y x') -> wait
+        (2, "x y x y x y"),               # 2-grams: 5 total, 2 distinct ('x y', 'y x')
         (3, "### spam ### ... buy ..."),  # symbols
         (4, ""),                          # empty -> all zeros
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         r["doc_id"]: r
-        for r in df.select(
+        for r in text_metrics_arrow(df, "doc_id", "text")
+        .select(
             "doc_id",
-            dup_line_fraction_col(F.col("text")).alias("dl"),
-            dup_ngram_fraction_col(F.col("text"), 2).alias("dg"),
-            symbol_word_ratio_col(F.col("text")).alias("sw"),
-        ).collect()
+            F.col("dup_line_frac").alias("dl"),
+            F.col("dup_2gram_frac").alias("dg"),
+            F.col("symbol_word_ratio").alias("sw"),
+        )
+        .collect()
     }
     assert out[1]["dl"] == pytest.approx(1 - 2 / 3, abs=1e-4)
     # 'x y x y x y': 2-grams = [x y, y x, x y, y x, x y] -> 5 total, 2 distinct

@@ -139,7 +139,7 @@ def test_facts_to_reference_csv_shape(spark, crawled, tmp_path):
             che or "null",
             phone or "null",
             email or "null",
-            "null",  # Geschäftsbericht: separate PDF-search tier, no pdf_facts given
+            "null",  # Geschäftsbericht: a separate PDF-search tier, never crawled
             status,
         ]
         assert rows[sid] == want, (sid, rows[sid], want)

@@ -13,13 +13,19 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bravewebcrawler_spark.operators.multimodal import (
-    MEDIA_SCHEMA,
-    codec_available,
-    decode_available,
     decode_png_pixels,
     extract_media_features,
     media_table_from_documents,
     parse_image_header,
+)
+
+MEDIA_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.StringType(), False),
+        T.StructField("payload", T.BinaryType(), True),
+        T.StructField("mime", T.StringType(), True),
+        T.StructField("n_bytes", T.IntegerType(), True),
+    ]
 )
 
 
@@ -161,11 +167,6 @@ def test_real_png_pixels_through_mapinpandas(spark):
     assert (row["width"], row["height"]) == (2, 2)
     expect = _expected_stats(pixels, 3)
     assert [round(float(v), 6) for v in row["feature"]] == expect
-
-
-def test_header_decode_available_codec_absent():
-    assert decode_available()  # header parsing is pure Python
-    assert not codec_available()  # no pixel codec in this sandbox
 
 
 def test_parse_image_header_fixtures():

@@ -24,19 +24,25 @@ def test_stream_equals_batch(spark, sf_dir, tmp_path):
     assert len(batch) > 10
 
 
-def test_stateful_running_stats(spark, sf_dir, tmp_path):
-    """applyInPandasWithState per-key state equals the batch aggregate."""
-    import os
+def test_stateful_running_stats(spark, sf_dir):
+    """applyInPandasWithState per-key state equals the batch aggregate. The
+    source is the bare events file, as the registry passes it: it is read in
+    place, through no scratch directory."""
+    import tempfile
 
     from pyspark.sql import functions as F
 
     from bravewebcrawler_spark.streaming.stateful import run_stateful_to_memory
 
-    os.symlink(f"{sf_dir}/events.parquet", tmp_path / "part-0.parquet")
+    def scratch():
+        return {d for d in os.listdir(tempfile.gettempdir()) if d.startswith("bwc_stream_")}
+
+    before = scratch()
     got = {
         r["user_id"]: (r["n_events"], round(r["sum_value"], 6), r["max_value"])
-        for r in run_stateful_to_memory(spark, str(tmp_path), name="t_stateful").collect()
+        for r in run_stateful_to_memory(spark, f"{sf_dir}/events.parquet", name="t_stateful").collect()
     }
+    assert not scratch() - before
     expect = {
         r["user_id"]: (r["n"], round(r["s"], 6), r["m"])
         for r in spark.read.parquet(f"{sf_dir}/events.parquet")
