@@ -562,12 +562,11 @@ def corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min_by(F.struct("doc_id", "text", "quality"), F.col("doc_id")).alias("r"))
         .select("r.doc_id", "r.text", "r.quality")
     )
-    # lsh_refined_pairs fans uniq into three branches (signatures, shingle
-    # sets, sizes) and the final anti-join makes a fourth — without this
-    # persist the quality+dedup shuffle above recomputes per branch
-    # (measured 148s -> ~30s at sf0.1). All caches are registered and
-    # released deterministically via _materialize_and_release (the result is
-    # a tiny per-language aggregate).
+    # lsh_refined_pairs reads uniq once (into its persisted banded table)
+    # and the final anti-join reads it again — without this persist the
+    # quality+dedup shuffle above recomputes per reader. All caches are
+    # registered and released deterministically via _materialize_and_release
+    # (the result is a tiny per-language aggregate).
     # The explicit repartition before the persist sets the parallelism of
     # every downstream mapInArrow shingle/signature pass: the semi-join
     # output otherwise caches at its AQE-coalesced partition count (a

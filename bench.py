@@ -1,7 +1,7 @@
 """Benchmark runner (driver contract): headline queries + crawl throughput.
 
 Runs at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]`` (default: the host's cores) and prints ONE JSON line:
   {"metric": ..., "value": <total seconds>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": <sf>, "crawl_urls_per_s": <rate>, ...}
 
@@ -149,12 +149,12 @@ def bench_crawl(spark) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    import __spark_entry__ as entrymod
+    from bravewebcrawler_spark.session import get_spark, host_cpus
+
+    cpus = host_cpus()
     skip_crawl = os.environ.get("SPARK_GRAFT_SKIP_CRAWL", "") == "1"
     crawl_only = os.environ.get("SPARK_GRAFT_CRAWL_ONLY", "") == "1"
-
-    import __spark_entry__ as entrymod
-    from bravewebcrawler_spark.session import get_spark
 
     # SPARK_GRAFT_EXECUTORS=N switches to local-cluster[N,2,...] — N real
     # executor JVMs (the north rule's N-vs-4N-executors shape); master=None

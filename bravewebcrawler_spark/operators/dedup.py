@@ -16,9 +16,11 @@ sets), because the column-expression form steps an interpreted lambda per
 shingle (that form, ``shingles_col``, is the reference twin the tests compare
 the passes against, in ``tests/twins.py``). Everything downstream is
 built-in DataFrame ops (explode / groupBy / join): shuffles land on
-shingle/band/bucket keys and partial aggregation is map-side. All hashes are the portable md5-derived construction
-(functions/text.py) so every operator has an exact DuckDB oracle twin in
-__spark_entry__.oracle_sql.
+shingle/band/bucket keys and partial aggregation is map-side. The three
+pair operators (MinHash candidates, refined Jaccard, SimHash Hamming) share
+one banding body, :func:`_band_pairs`. All hashes are the portable
+md5-derived construction (functions/text.py) so every operator has an exact
+DuckDB oracle twin in __spark_entry__.oracle_sql.
 
 Ids are byte, short, int or long; any other id type raises ``TypeError``.
 
@@ -33,7 +35,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
@@ -207,26 +209,59 @@ def minhash_sig_and_arrays(df: DataFrame, id_col: str, text_col: str, k: int = 3
     return _doc_text(df, id_col, text_col).mapInArrow(run, f"doc long, hs array<long>, {_SIG_DDL}")
 
 
-def minhash_lsh_pairs(sig: DataFrame, *, cache_registry: list) -> DataFrame:
-    """MinHash+LSH candidate pairs from a (doc, m0..m15) signature table
-    (:func:`minhash_signature_cols`): band keys → bucket equi-join.
+def _band_pairs(sig: DataFrame, keys: list[Column], carry: list[str], cache_registry: list) -> DataFrame:
+    """Candidate pairs of docs whose band keys agree in at least one band:
+    ``(id_a, id_b, <c>_a, <c>_b for c in carry)``, each pair once, id_a < id_b.
 
-    The scale path: per doc only NUM_HASHES values survive; candidate
-    generation shuffles on small (band, band_key) keys. Pairs are distinct
-    (id_a < id_b); refinement (true Jaccard on candidates) is
-    :func:`lsh_refined_pairs`.
-
-    Band rows come from ONE signature table + an explode of the 4 per-band
-    key structs — NOT a 4-way union of projections, which (with the 2
-    self-join sides) re-ran the whole scan→shingle→md5→16-min pipeline 8x
-    (measured: 24 parquet scans, 0 reused exchanges in the executed plan).
-    The tiny banded table (4 rows x 20 bytes per doc) is persisted into
-    ``cache_registry`` so the self-join reads it twice from memory —
-    signature work runs exactly once. The caller releases the registry
-    after the result is consumed.
+    ``keys`` holds one band-key expression per band over ``sig``'s columns.
+    The banded table ``(doc, *carry, keys, band, band_key)`` is one
+    ``posexplode`` of the key array, persisted into ``cache_registry`` so
+    the self-join reads it twice from memory and the signature work upstream
+    runs once. One self-join on ``(band, band_key)`` forms the bucket pairs;
+    a pair that agrees in several bands meets once per agreeing band, and
+    only its first agreeing band keeps it (``band == array_position(
+    zip_with(keys_a, keys_b, =), true) - 1``, written as a CASE chain so it
+    compiles to JVM code). Each pair is therefore produced exactly once, in
+    one join partition, with no global ``distinct`` over the pair list — the
+    partition-then-verify-locally pattern of distributed set-similarity
+    joins — and each side's carried columns arrive with the pair, so no join
+    brings them back. The caller releases the registry after the result is
+    consumed.
     """
     from pyspark import StorageLevel
 
+    # posexplode of the array constructor, not of the ``keys`` attribute:
+    # over an attribute the optimizer infers a non-empty-array filter and
+    # pushes it below the corpus exchange, where it evaluates the whole
+    # signature expression a second time (measured at sf0.1 on 4 cores: the
+    # simhash bit-vote ran twice, +20 s of CPU)
+    banded = sig.select(
+        "doc",
+        *carry,
+        F.array(*keys).alias("keys"),
+        F.posexplode(F.array(*keys)).alias("band", "band_key"),
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    cache_registry.append(banded)
+    a, b = banded.alias("a"), banded.alias("b")
+    first_agreeing = F.coalesce(*[
+        F.when(F.col("a.keys")[i] == F.col("b.keys")[i], F.lit(i)) for i in range(len(keys))
+    ])
+    return a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.band_key") == F.col("b.band_key"))
+        & (F.col("a.doc") < F.col("b.doc"))
+        & (F.col("a.band") == first_agreeing),
+    ).select(
+        F.col("a.doc").alias("id_a"),
+        F.col("b.doc").alias("id_b"),
+        *[F.col(f"{side}.{c}").alias(f"{c}_{side}") for c in carry for side in "ab"],
+    )
+
+
+def _minhash_band_keys() -> list[Column]:
+    """The NUM_BANDS band keys of a (m0..m15) signature, one per band of
+    NUM_HASHES // NUM_BANDS consecutive minima."""
     rows_per_band = NUM_HASHES // NUM_BANDS
 
     def band_key(band: int):
@@ -235,28 +270,21 @@ def minhash_lsh_pairs(sig: DataFrame, *, cache_registry: list) -> DataFrame:
             key = (key * 31 + F.col(f"m{band * rows_per_band + r}")) % MINHASH_P
         return key
 
-    banded = sig.select(
-        "doc",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(band).alias("band"), band_key(band).alias("band_key"))
-                for band in range(NUM_BANDS)
-            ])
-        ).alias("bk"),
-    ).select("doc", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    cache_registry.append(banded)
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-        .distinct()
-    )
+    return [band_key(band) for band in range(NUM_BANDS)]
+
+
+def minhash_lsh_pairs(sig: DataFrame, *, cache_registry: list) -> DataFrame:
+    """MinHash+LSH candidate pairs from a (doc, m0..m15) signature table
+    (:func:`minhash_signature_cols`): band keys → bucket equi-join
+    (:func:`_band_pairs`).
+
+    The scale path: per doc only NUM_HASHES values survive; candidate
+    generation shuffles on small (band, band_key) keys. Pairs are distinct
+    (id_a < id_b); refinement (true Jaccard on candidates) is
+    :func:`lsh_refined_pairs`. The caller releases ``cache_registry`` (the
+    banded table) after the result is consumed.
+    """
+    return _band_pairs(sig, _minhash_band_keys(), [], cache_registry)
 
 
 def lsh_refined_pairs(
@@ -267,54 +295,33 @@ def lsh_refined_pairs(
     Jaccard refinement computed ONLY on the candidate pairs.
 
     The full-corpus shingle self-join is quadratic in hot shingles; here the
-    expensive exact step touches only |candidates| pairs —
-    the intersection count joins shingles through the candidate pair list
-    instead of shingle-vs-shingle — and size-ratio pruning drops candidate
-    pairs that provably cannot reach the threshold (J <= min_sz/max_sz)
-    before the intersection join runs.
+    expensive exact step touches only |candidates| pairs, and size-ratio
+    pruning drops candidate pairs that provably cannot reach the threshold
+    (J <= min_sz/max_sz) before the intersection runs.
 
     One Arrow-batched Python pass over the corpus
     (:func:`minhash_sig_and_arrays`) yields both the signature (candidate
-    generation) and each doc's DISTINCT shingle-hash set as one array cell
-    (semi-joined to candidate endpoints). The refinement is then two
-    equi-joins of the pair list against the array table plus
-    ``size(array_intersect)`` per surviving pair — the former shape
-    (explode the hash sets, join pairs through (doc, H) rows, re-aggregate)
-    shuffled every exploded (pair, H) row; this one shuffles each candidate
-    doc's set exactly once as one array cell, and the intersection runs as a
-    codegen'd JVM set-op per pair. Set sizes fall out as ``size(hs)``, so
-    the separate size aggregate is gone too. Jaccard on 60-bit shingle
-    hashes equals Jaccard on the shingle sets themselves absent a 60-bit
-    collision inside a candidate pair (~|set|^2 / 2^60) — and the DuckDB
-    oracle hashes identically, so parity is exact by construction either
-    way.
+    generation) and each doc's DISTINCT shingle-hash set as one array cell.
+    The set rides the banded table as a carried column (:func:`_band_pairs`),
+    so each candidate pair meets both sets in the join partition of its
+    first agreeing band and is verified there: ``size(array_intersect)`` per
+    surviving pair, a codegen'd JVM set-op, with set sizes as ``size(hs)``.
+    The cost: every doc's set crosses the band join once per band, not only
+    the candidate docs' sets once. Jaccard on 60-bit shingle hashes equals
+    Jaccard on the shingle sets themselves absent a 60-bit collision inside
+    a candidate pair (~|set|^2 / 2^60) — and the DuckDB oracle hashes
+    identically, so parity is exact by construction either way.
 
     ``threshold`` must lie in (0, 1]: at ``threshold <= 0`` the Jaccard
     filter would keep zero-intersection candidate pairs, so it raises
-    ``ValueError`` instead.
+    ``ValueError`` instead. The caller releases ``cache_registry`` (the
+    banded table, the only persist) once the result is fully consumed.
     """
-    from pyspark import StorageLevel
-
     if not 0 < threshold <= 1:
         raise ValueError(f"lsh_refined_pairs: threshold must be in (0, 1], got {threshold!r}")
-    # ONE Python pass over the corpus computes BOTH the signature (candidate
-    # generation) and the shingle-hash sets (exact refinement) —
-    # minhash_sig_and_arrays — persisted because the banded build, the
-    # endpoint unions, and both refinement join sides all read it; the
-    # caller releases ``cache_registry`` once the result is fully consumed.
-    both = minhash_sig_and_arrays(df, id_col, text_col, k).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
     # size(hs) > 0 recovers exactly the row set of minhash_signature_cols
-    sig = both.where(F.size("hs") > 0).select("doc", *_SIG_COLS)
-    cand = minhash_lsh_pairs(sig, cache_registry=cache_registry).persist(StorageLevel.MEMORY_AND_DISK)
-    cand_docs = cand.select(F.col("id_a").alias("doc")).unionByName(
-        cand.select(F.col("id_b").alias("doc"))
-    ).distinct()
-    arrs = both.select("doc", "hs").join(cand_docs, "doc", "left_semi")
-    cache_registry.extend((both, cand))
-    a = arrs.select(F.col("doc").alias("id_a"), F.col("hs").alias("hs_a"))
-    b = arrs.select(F.col("doc").alias("id_b"), F.col("hs").alias("hs_b"))
+    sig = minhash_sig_and_arrays(df, id_col, text_col, k).where(F.size("hs") > 0)
+    pairs = _band_pairs(sig, _minhash_band_keys(), ["hs"], cache_registry)
     # Size-ratio candidate pruning: J(A,B) = |∩|/|∪| <= min(|A|,|B|)/max(|A|,|B|),
     # so a pair whose set-size ratio cannot reach the threshold cannot pass the
     # Jaccard filter either — drop it BEFORE the per-pair intersection runs.
@@ -323,9 +330,7 @@ def lsh_refined_pairs(
     # so pruning can never change the result set.
     prune_t = threshold - 0.000051
     return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
+        pairs.select(
             "id_a",
             "id_b",
             "hs_a",
@@ -384,59 +389,24 @@ def simhash_near_pairs(
 
     Pigeonhole: two signatures within Hamming distance d < ``bands`` agree
     exactly on at least one of the ``bands`` bit-bands, so candidate
-    generation is an equi-join on (band, band_bits) — never an all-pairs
-    XOR scan — and the exact ``bit_count(xor) <= max_hamming`` check runs
-    only on candidates. Requires max_hamming < bands for completeness within
-    the candidate set.
-
-    Band rows are ONE simhash computation + an explode of the per-band key
-    structs (not a per-band union of projections, which re-ran the bit-vote
-    aggregate bands x 2-join-sides times); the banded table is persisted
-    into ``cache_registry`` so the self-join reads it twice from memory.
+    generation is an equi-join on (band, band_bits) (:func:`_band_pairs`,
+    carrying each side's simhash) — never an all-pairs XOR scan — and the
+    exact ``bit_count(xor) <= max_hamming`` check runs only on candidates.
+    Requires max_hamming < bands for completeness within the candidate set.
+    The caller releases ``cache_registry`` (the banded table) after the
+    result is consumed.
     """
-    from pyspark import StorageLevel
-
     assert max_hamming < bands, "pigeonhole completeness needs max_hamming < bands"
     band_bits = bits // bands
     mask = (1 << band_bits) - 1
     sig = df.select(
         F.col(id_col).alias("doc"), simhash_col(F.col(text_col), bits).alias("simhash")
     )
-    banded = sig.select(
-        "doc",
-        "simhash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftright("simhash", b * band_bits).bitwiseAND(F.lit(mask)).alias("band_key"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("bk"),
-    ).select("doc", "simhash", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    cache_registry.append(banded)
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("id_a"),
-            F.col("b.doc").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    return cand.select(
+    keys = [F.shiftright("simhash", b * band_bits).bitwiseAND(F.lit(mask)) for b in range(bands)]
+    return _band_pairs(sig, keys, ["simhash"], cache_registry).select(
         "id_a",
         "id_b",
-        F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("int").alias("hamming"),
+        F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).cast("int").alias("hamming"),
     ).where(F.col("hamming") <= max_hamming)
 
 

@@ -25,9 +25,10 @@ from pyspark.sql import functions as F
 from bravewebcrawler_spark.plans.policy import CrawlPolicy
 
 
-def refilled_tokens(policy: CrawlPolicy, refill: bool, tokens_col: Column | None = None) -> Column:
-    """Tokens at round start: missing hosts are full; refill clamps at capacity."""
-    t = F.coalesce(tokens_col if tokens_col is not None else F.col("tokens"), F.lit(policy.capacity))
+def refilled_tokens(policy: CrawlPolicy, refill: bool) -> Column:
+    """Tokens at round start from the ``tokens`` column: missing hosts are
+    full; refill clamps at capacity."""
+    t = F.coalesce(F.col("tokens"), F.lit(policy.capacity))
     if refill:
         t = F.least(F.lit(policy.capacity), t + F.lit(policy.rate))
     return t
@@ -50,12 +51,12 @@ def spend_tokens(host_state: DataFrame, spends: DataFrame, policy: CrawlPolicy, 
     )
 
 
-def robots_allowed(candidates: DataFrame, robots: DataFrame, path_col: str = "path") -> DataFrame:
-    """Drop candidates whose path matches a disallowed prefix for their host.
+def robots_allowed(candidates: DataFrame, robots: DataFrame) -> DataFrame:
+    """Drop candidates whose ``path`` matches a disallowed prefix for their host.
 
     ``robots``: (host, disallow_prefixes array<string>) — small; broadcast.
     """
     return candidates.join(F.broadcast(robots), "host", "left").where(
         F.col("disallow_prefixes").isNull()
-        | ~F.exists(F.col("disallow_prefixes"), lambda p: F.col(path_col).startswith(p))
+        | ~F.exists(F.col("disallow_prefixes"), lambda p: F.col("path").startswith(p))
     ).drop("disallow_prefixes")

@@ -95,10 +95,9 @@ def bloom_insert_delta(
     return updated, updated.unionByName(untouched)
 
 
-def bloom_hits(
-    hashes: DataFrame, bloom: DataFrame, n_buckets: int, m_bits: int, hash_col: str = "url_hash"
-) -> DataFrame:
-    """The hashes (ONLY) that the bloom flags maybe-seen.
+def bloom_hits(hashes: DataFrame, bloom: DataFrame, n_buckets: int, m_bits: int) -> DataFrame:
+    """The ``url_hash`` values (ONLY) of ``hashes`` that the bloom flags
+    maybe-seen.
 
     Rather than round-tripping every candidate COLUMN through Arrow, this
     passes just (bucket, hash) — 12 bytes/row — and returns the hit hashes;
@@ -107,24 +106,24 @@ def bloom_hits(
     exact anti-join.
     """
     cand = hashes.select(
-        F.pmod(F.col(hash_col), F.lit(n_buckets)).cast("int").alias("__bucket"),
-        F.col(hash_col).alias("h"),
+        F.pmod(F.col("url_hash"), F.lit(n_buckets)).cast("int").alias("__bucket"),
+        F.col("url_hash").alias("h"),
     )
     blm = bloom.withColumnRenamed("bucket", "__bucket")
 
     def test(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if left.empty:
-            return pd.DataFrame({hash_col: pd.Series([], dtype="int64")})
+            return pd.DataFrame({"url_hash": pd.Series([], dtype="int64")})
         hs = left["h"].to_numpy(dtype=np.int64)
         if right.empty or right["filter"].dropna().empty:
-            return pd.DataFrame({hash_col: pd.Series([], dtype="int64")})
+            return pd.DataFrame({"url_hash": pd.Series([], dtype="int64")})
         filt = np.frombuffer(bytes(right["filter"].dropna().iloc[0]), dtype=np.uint8)
         maybe = _test_bits(filt, _bit_positions(hs, m_bits))
-        return pd.DataFrame({hash_col: hs[maybe]})
+        return pd.DataFrame({"url_hash": hs[maybe]})
 
     return (
         cand.groupBy("__bucket")
         .cogroup(blm.groupBy("__bucket"))
-        .applyInPandas(test, f"{hash_col} long")
+        .applyInPandas(test, "url_hash long")
     )
 

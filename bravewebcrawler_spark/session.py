@@ -16,6 +16,12 @@ from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import SparkSession
 
 
+def host_cpus() -> int:
+    """Task slots for a local session: ``SPARK_GRAFT_CPUS`` when set, else
+    the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def default_driver_mem(phys_bytes: int, cap_gb: int = 32) -> str:
     """Driver heap when ``SPARK_DRIVER_MEM`` is unset: ~60 % of the host's
     physical RAM, at most ``cap_gb``. The heap is pre-committed (``-Xms``
@@ -32,11 +38,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) so the
-    same entry points serve tests, bench at two parallelism levels, and a real
-    spark-submit deployment (where master is injected externally).
+    ``master`` defaults to ``local[host_cpus()]`` so the same entry points
+    serve tests, bench at two parallelism levels, and a real spark-submit
+    deployment (where master is injected externally).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cpus()
     n_exec = int(os.environ.get("SPARK_GRAFT_EXECUTORS", "0"))
     if master is None:
         if n_exec > 0:

@@ -3,9 +3,12 @@ the plan (catching perf regressions that correctness tests can't see)."""
 
 from __future__ import annotations
 
+import re
+
 import __spark_entry__ as E
 from pyspark.sql import functions as F
 
+from bravewebcrawler_spark.operators import dedup as DD
 from bravewebcrawler_spark.plans.policy import CrawlPolicy
 from bravewebcrawler_spark.plans.round import FRONTIER_SCHEMA, HOST_STATE_SCHEMA, dequeue
 
@@ -40,6 +43,27 @@ def test_dequeue_no_global_window_for_large_caps(spark):
         assert "TakeOrderedAndProject" not in plan
         assert "rangepartitioning" in plan.lower()
         assert "SinglePartition" not in plan
+    for cached in registry:
+        cached.unpersist()
+
+
+def test_band_pairs_join_once_with_no_pair_aggregate(spark):
+    # each candidate pair is formed once, in its first agreeing band: one
+    # self-join on (band, band_key) and no aggregate keyed on the pair (a
+    # pair distinct, or the endpoint/array joins that need a persisted pair
+    # list, would print the band join again under each of its scans)
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f g"), (2, "a b c d e f h")], "doc_id long, text string"
+    )
+    registry: list = []
+    for df in (
+        DD.lsh_refined_pairs(docs, "doc_id", "text", cache_registry=registry),
+        DD.simhash_near_pairs(docs, "doc_id", "text", cache_registry=registry),
+    ):
+        plan = _plan(df)
+        band_joins = re.findall(r"Join \[band#\d+, band_key#\d+L?\], \[band#\d+, band_key#\d+L?\]", plan)
+        assert len(band_joins) == 1, plan
+        assert not re.search(r"HashAggregate\(keys=\[id_a#\d+L?, id_b#\d+L?", plan), plan
     for cached in registry:
         cached.unpersist()
 

@@ -43,8 +43,8 @@ def test_entry_smoke(spark):
 def test_no_residual_caches_after_cache_managed_queries(spark, sf_dir):
     """Deterministic cache lifecycle (VERDICT r2 #6): the seven queries that
     persist intermediates and release them in _materialize_and_release
-    (banded signatures, lsh_refined_pairs' shared pass and candidates, the
-    clustered corpus and components, corpus_prep's uniq, corpus_pack's
+    (the banded tables of the three band-pair operators, the clustered
+    corpus, the CC edge list and components, corpus_prep's uniq, corpus_pack's
     range-partitioned rows) must leave the storage tab exactly as they
     found it — no ContextCleaner reliance."""
     import __spark_entry__ as E

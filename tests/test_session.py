@@ -1,13 +1,15 @@
-"""The default driver heap fits the host, and a JVM that fails to start
-names it (no JVM is started here)."""
+"""The default session fits the host: its heap and its task slots, and a
+JVM that fails to start names the heap (no JVM is started here)."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import SparkSession
 
-from bravewebcrawler_spark.session import default_driver_mem, get_spark
+from bravewebcrawler_spark.session import default_driver_mem, get_spark, host_cpus
 
 GIB = 1 << 30
 
@@ -28,3 +30,24 @@ def test_jvm_start_failure_names_the_heap(monkeypatch):
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", exited)
     with pytest.raises(RuntimeError, match="123g.*SPARK_DRIVER_MEM"):
         get_spark("no-jvm", master="local[1]")
+
+
+def test_default_master_uses_the_host_cores(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_EXECUTORS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_MULT", raising=False)
+    built = {}
+
+    def record(self):
+        built.update(self._options)
+        raise PySparkRuntimeError(errorClass="JAVA_GATEWAY_EXITED", messageParameters={})
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", record)
+    with pytest.raises(RuntimeError):
+        get_spark("no-jvm")
+    n = len(os.sched_getaffinity(0))
+    assert host_cpus() == n
+    assert built["spark.master"] == f"local[{n}]"
+    assert built["spark.sql.shuffle.partitions"] == str(max(n, 8))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert host_cpus() == 3
