@@ -443,25 +443,25 @@ def _materialize_and_release(df: DataFrame, caches: list, row_cap: int = 0) -> D
     ContextCleaner reliance — executor storage is empty the moment the query
     function returns (pytest-asserted in test_queries_vs_duckdb).
 
-    SIZE-GUARDED: the driver collect is probed with limit(cap+1) — one pass,
-    no extra count job — and a result above ``row_cap`` rows (default
-    _MATERIALIZE_ROW_CAP) is instead written to scratch parquet while the
-    caches are hot and read back, so an unexpectedly large result (e.g. a
-    full (doc_id, component) table at production scale) can never OOM the
-    driver. The spill goes to a ``DD._scratch_ckpt`` dir that is deleted at
-    interpreter exit: the returned plan reads the files lazily, so nothing
-    earlier may remove them. A 100-TB pipeline would give this a real output
-    table."""
-    cap = row_cap or _MATERIALIZE_ROW_CAP
-    rows = df.limit(cap + 1).collect()
-    if len(rows) <= cap:
-        for c in caches:
-            c.unpersist()
-        return df.sparkSession.createDataFrame(rows, df.schema)
-    ckpt, cleanup = DD._scratch_ckpt(df.sparkSession, "bwc-result-")
-    atexit.register(cleanup)
-    out = ckpt(df, 0)
-    for c in caches:
+    SIZE-GUARDED: the result itself is persisted for the span of this call
+    and counted, so the plan runs once whichever way the count goes. A
+    result above ``row_cap`` rows (default _MATERIALIZE_ROW_CAP) is written
+    from that cache to scratch parquet and read back, never collected, so an
+    unexpectedly large result (e.g. a full (doc_id, component) table at
+    production scale) can never OOM the driver. The spill goes to a
+    ``DD._scratch_ckpt`` dir that is deleted at interpreter exit: the
+    returned plan reads the files lazily, so nothing earlier may remove them.
+    A 100-TB pipeline would give this a real output table."""
+    from pyspark import StorageLevel
+
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    if df.count() <= (row_cap or _MATERIALIZE_ROW_CAP):
+        out = df.sparkSession.createDataFrame(df.collect(), df.schema)
+    else:
+        ckpt, cleanup = DD._scratch_ckpt(df.sparkSession, "bwc-result-")
+        atexit.register(cleanup)
+        out = ckpt(df, 0)
+    for c in [df, *caches]:
         c.unpersist()
     return out
 
@@ -672,19 +672,16 @@ def corpus_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing: concatenate-and-chunk documents into 512-token
     training sequences via a distributed weighted prefix sum — no
     global-order window (operators/packing.py). The packing result is
-    partitioning-independent by construction (offsets are computed from
-    actual partition contents over a deterministic global (u, id) order), so
-    the spread only parallelizes the token-count scan + the range-partition
-    sampling pass."""
+    partitioning-independent by construction (offsets are computed from the
+    actual rows of each pid over a deterministic global (u, id) order), so
+    the spread only parallelizes the token-count scan and the count, sample
+    and pid-size passes. Nothing is persisted: the result is a plain plan."""
     docs = spread(_t(spark, sf_dir, "documents"))
     d = docs.select(
         "doc_id", TX.ws_token_count_col(F.col("text")).cast("long").alias("n_tokens")
     )
-    caches: list = []
-    out = PK.pack_sequences(d, "doc_id", "n_tokens", budget=_PACK_BUDGET, cache_registry=caches)
-    return _materialize_and_release(
-        out.select("doc_id", "n_tokens", "pack_id", "pack_offset"), caches
-    )
+    out = PK.pack_sequences(d, "doc_id", "n_tokens", budget=_PACK_BUDGET)
+    return out.select("doc_id", "n_tokens", "pack_id", "pack_offset")
 
 
 def _emb_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:

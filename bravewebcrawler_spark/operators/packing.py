@@ -12,8 +12,9 @@ deterministic shuffle that decorrelates document length/topic from pack
 position (standard practice before chunking), and reproducible across runs.
 
 Scale shape: the prefix sum is ``operators/ranking.global_prefix`` over the
-``n_tokens`` weight — range partitions plus per-partition offsets, no
-global-order window (which would be a single partition).
+``n_tokens`` weight — rows placed by sampled bound keys plus per-pid offsets,
+one hash exchange, nothing persisted, and no global-order window (which
+would be a single partition).
 
 All arithmetic is exact bigint (``div``/``%``, never double division —
 offsets exceed 2^53 long before 100 TB).
@@ -33,8 +34,6 @@ def pack_sequences(
     id_col: str,
     n_tokens_col: str,
     budget: int,
-    *,
-    cache_registry: list,
 ) -> DataFrame:
     """Assign each row a ``pack_id`` / ``pack_offset`` under the
     concatenate-and-chunk contract described in the module docstring.
@@ -43,13 +42,9 @@ def pack_sequences(
     the document's start offset within its starting pack). A document longer
     than ``budget`` keeps the pack it starts in (it spans into the next
     ones), exactly like the flat token-stream view.
-
-    The range-partitioned table is persisted into ``cache_registry``; the
-    caller releases it once the result is consumed.
     """
     u = df.withColumn("__u", portable_hash64(F.col(id_col).cast("string")))
-    order = [F.col("__u"), F.col(id_col)]
-    out = global_prefix(u, order, F.col(n_tokens_col), cache_registry=cache_registry)
+    out = global_prefix(u, [F.col("__u"), F.col(id_col)], F.col(n_tokens_col))
     return (
         out.withColumn("pack_id", F.expr(f"prefix div {int(budget)}"))
         .withColumn("pack_offset", F.col("prefix") % F.lit(int(budget)))

@@ -9,16 +9,17 @@ per-key re-rank over the ≤ salt_n * k survivors. Salting changes placement,
 never rank (SURVEY.md risk R2).
 
 ``global_prefix`` is the exact global total order (W2) without a
-single-partition window: a weighted exclusive prefix sum from range
-partitions plus per-partition offsets. The crawl round cap (weight 1: the
-prefix is the global rank) and sequence packing (weight = tokens) both use it.
+single-partition window: a weighted exclusive prefix sum from a pid that
+sampled bound keys fix, plus per-pid offsets. The crawl round cap (weight 1:
+the prefix is the global rank) and sequence packing (weight = tokens) use it.
 """
 
 from __future__ import annotations
 
+from itertools import accumulate
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 
 def top_k_per_key(df: DataFrame, keys: list[str], order: list[Column], k: int, rank_name: str = "rn") -> DataFrame:
@@ -55,55 +56,58 @@ def salted_top_k(
     )
 
 
-def global_prefix(
-    df: DataFrame,
-    order: list[Column],
-    weight: Column,
-    *,
-    cache_registry: list,
-) -> DataFrame:
+_MAX_PIDS = 64  # global_prefix pids; 1024 bounds overflow the generated code
+
+
+def global_prefix(df: DataFrame, key: list[Column], weight: Column) -> DataFrame:
     """``df`` plus ``prefix`` (bigint): each row's exclusive running sum of
-    ``weight`` over ``order``, which must be a total order (ties would make
-    the sum depend on placement). Weight 1 makes the prefix the 0-based
-    global rank.
+    ``weight`` over ``key`` sorted ascending, which must be a total order
+    (ties would make the sum depend on placement). Weight 1 makes the prefix
+    the 0-based global rank.
 
-    1. range partitions on ``order``, sorted within each partition;
-    2. one tiny job: Σ weight per partition to the driver → exclusive
-       partition offsets as a literal map;
-    3. prefix = offset[partition] + the within-partition exclusive running
-       sum (a window partitioned by partition id — parallel, not global).
+    1. count, then a seeded Bernoulli sample of about
+       ``spark.sql.execution.rangeExchange.sampleSizePerPartition`` keys per
+       pid; up to ``_MAX_PIDS - 1`` evenly spaced ones become literal bounds;
+    2. ``__pid`` = the number of bounds ≤ ``struct(key)`` (a binary search;
+       struct comparison is lexicographic) — deterministic, and it never
+       decreases as the key grows, so the prefix is exact whatever the
+       sample holds (the sample only sets the balance, risk R2);
+    3. one tiny job: Σ weight per pid → exclusive offsets, a literal array;
+    4. prefix = offset[pid] + the within-pid exclusive running sum, after the
+       one hash exchange the ``partitionBy("__pid")`` window needs.
 
-    The persist between (1) and (2)/(3) is correctness, not perf: the range
-    partitioner re-samples its boundaries on every execution, so the
-    sizes job and the final consumer could otherwise see rows in different
-    partitions. MEMORY_AND_DISK spills instead of evicting; an evicted and
-    recomputed table would re-sample, and ANSI ``element_at`` below then
-    fails with MAP_KEY_DOES_NOT_EXIST (a dropped cache, never bad input).
-    Offsets come from actual partition contents, so the prefix does not
-    depend on where the boundaries fall (risk R2). The range-partitioned
-    table goes into ``cache_registry``; the caller releases it once the
-    result is consumed. The range-sample pass reads ``df`` once more, so an
+    Nothing is persisted; the three small jobs each read ``df`` again, so an
     expensive ``df`` should be persisted by the caller.
     """
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    s = (
-        df.repartitionByRange(n_part, *order)
-        .sortWithinPartitions(*order)
-        .withColumn("__pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    cache_registry.append(s)
+    spark = df.sparkSession
+    n_pids = min(int(spark.conf.get("spark.sql.shuffle.partitions")), _MAX_PIDS)
+    per_pid = int(spark.conf.get("spark.sql.execution.rangeExchange.sampleSizePerPartition"))
+    keys = df.select(*key)
+    n = keys.count()
+    sampled = keys.sample(fraction=min(1.0, per_pid * n_pids / n), seed=0).collect() if n else []
+    # Python orders null and NaN unlike Spark, so keys holding one are never
+    # bounds; their rows still get a pid from Spark's own comparison
+    sample = sorted(tuple(r) for r in sampled if all(v is not None and v == v for v in r))
+    picked = sorted({sample[i * len(sample) // n_pids] for i in range(1, n_pids)}) if sample else []
+    bounds = [
+        F.struct(*[F.lit(v).cast(f.dataType).alias(f"k{i}") for i, (v, f) in enumerate(zip(b, keys.schema))])
+        for b in picked
+    ]
+    s = df.withColumn("__k", F.struct(*[c.alias(f"k{i}") for i, c in enumerate(key)]))
+    s = s.withColumn("__pid", _count_le(F.col("__k"), bounds, 0, len(bounds))).drop("__k")
     sizes = dict(s.groupBy("__pid").agg(F.sum(weight)).collect())
-    offsets, acc = [], 0
-    for pid in sorted(sizes):
-        offsets.append((pid, acc))
-        acc += int(sizes[pid])
-    # literal map, not a broadcast join: a broadcast build is driver-serial
-    # time, while this ~n_part-entry map evaluates inside the codegen stage
-    off_map = F.create_map(*[F.lit(v) for pair in (offsets or [(0, 0)]) for v in pair])
-    w = Window.partitionBy("__pid").orderBy(*order).rowsBetween(Window.unboundedPreceding, -1)
+    offsets = F.lit([0, *accumulate(int(sizes.get(p) or 0) for p in range(len(bounds)))])
+    w = Window.partitionBy("__pid").orderBy(*key).rowsBetween(Window.unboundedPreceding, -1)
     local = F.coalesce(F.sum(weight).over(w), F.lit(0).cast("long"))
-    return s.withColumn("prefix", F.element_at(off_map, F.col("__pid")) + local).drop("__pid")
+    return s.withColumn("prefix", offsets.cast("array<bigint>")[F.col("__pid")] + local).drop("__pid")
+
+
+def _count_le(k: Column, bounds: list[Column], lo: int, hi: int) -> Column:
+    """``lo`` + the number of ``bounds[lo:hi]`` (ascending) that are ≤ ``k``."""
+    if lo == hi:
+        return F.lit(lo)
+    mid = (lo + hi) // 2
+    return F.when(k < bounds[mid], _count_le(k, bounds, lo, mid)).otherwise(_count_le(k, bounds, mid + 1, hi))
 
 
 def top1_cascade(df: DataFrame, keys: list[str], tiers: list[tuple[str, Column]], order: list[Column]) -> DataFrame:

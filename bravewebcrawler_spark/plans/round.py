@@ -18,9 +18,9 @@ plan with .explain):
     1/SALT_N of a hot host before the exact per-host re-rank — salting
     changes placement, never rank (risk R2);
   * the global round cap is the exact global rank from
-    ``operators/ranking.global_prefix`` (W2): range partitions on the total
-    order plus per-partition offsets, seq = rank, kept while seq < cap —
-    never a single-partition window or a driver-merged top-K;
+    ``operators/ranking.global_prefix`` (W2): a pid from sampled bound keys
+    plus per-pid offsets, one hash exchange, seq = rank, kept while seq < cap
+    — never a single-partition window or a driver-merged top-K;
   * dedup is an exact ``left_anti`` join on url_hash (J2); the bloom
     pre-filter (operators/seen.py) cheapens it but never decides membership
     (risk R3);
@@ -274,23 +274,24 @@ def dequeue(
     (``salted_top_k``, W1); the survivors are then ranked globally
     (``global_prefix`` with weight 1, W2) and the first
     ``max_urls_per_round`` kept. Returns frontier columns + ``seq`` (the
-    0-based dequeue position within the round). Builds eagerly (one tiny
-    partition-size job) and persists two caches into ``cache_registry``;
-    the caller unpersists them once the result is fully consumed.
+    0-based dequeue position within the round). Builds eagerly (three small
+    jobs) and persists the survivors into ``cache_registry``; the caller
+    unpersists them once the result is fully consumed.
     """
     from bravewebcrawler_spark.operators.politeness import host_budget
 
-    order = [F.col("priority").desc(), F.col("depth").asc(), F.col("url_hash").asc(), F.col("url_canon").asc()]
+    # ascending: highest priority first
+    key = [-F.col("priority"), F.col("depth"), F.col("url_hash"), F.col("url_canon")]
     budgeted = frontier.join(host_state, "host", "left").withColumn(
         "budget", host_budget(policy, refill)
     )
-    # the range partitioning samples its input in a separate job to pick
-    # boundaries; this persist keeps the host windows from running twice
+    # global_prefix reads its input in three small jobs before the final
+    # one; this persist keeps the host windows from running four times
     survivors = salted_top_k(
-        budgeted, ["host"], order, F.col("budget"), F.col("url_hash"), SALT_N
+        budgeted, ["host"], key, F.col("budget"), F.col("url_hash"), SALT_N
     ).persist(StorageLevel.MEMORY_AND_DISK)
     cache_registry.append(survivors)
-    ranked = global_prefix(survivors, order, F.lit(1), cache_registry=cache_registry)
+    ranked = global_prefix(survivors, key, F.lit(1))
     return ranked.where(F.col("prefix") < policy.max_urls_per_round).select(
         *[f.name for f in FRONTIER_SCHEMA.fields], F.col("prefix").cast("int").alias("seq")
     )
@@ -337,8 +338,8 @@ def run_round(
     # windows and the mapInPandas fetch run ONCE per round instead of once
     # per state-table write. The caller unpersists after the round commit.
     #
-    # CRITICAL for scaling: the cap keeps only the lowest range partitions of
-    # the global order (all of a round's URLs can sit in one of them) — without
+    # CRITICAL for scaling: the cap keeps only the lowest pids of the global
+    # order (all of a round's URLs can sit in one of them) — without
     # the repartition below, the fetch+parse of a round could run in a few
     # tasks and adding executors could not help. seq is already assigned, so
     # spreading by url_hash is free.
@@ -409,10 +410,10 @@ def run_round(
     # same row COUNT a canonical-first merge pays, but ~60-byte rows instead
     # of fully-shaped frontier entries.
     discovered_uniq = discovered_raw.groupBy("url").agg(F.min("link_depth").alias("link_depth"))
+    # Raw forms that differ but canonicalize equal stay separate rows until
+    # fdelta_tagged's merge below; a duplicate url_hash is harmless in the
+    # bloom probe and the semi/anti joins.
     discovered = admit_candidates(discovered_uniq, "link_depth", round_no + 1, robots, policy)
-    # Canonical-alias dedup (tiny: only raw forms that differ but canonicalize
-    # equal remain) — also what keeps the bloom/anti-join input at |unique|.
-    discovered = merge_frontier(discovered)
     # J2 dedup: the exact anti-join is always the authority; with use_bloom
     # the bucketed bloom splits candidates so only bloom HITS pay the join
     # against the (large) seen table (operators/seen.py, risk R3).

@@ -9,6 +9,7 @@ import __spark_entry__ as E
 from pyspark.sql import functions as F
 
 from bravewebcrawler_spark.operators import dedup as DD
+from bravewebcrawler_spark.operators.packing import pack_sequences
 from bravewebcrawler_spark.plans.policy import CrawlPolicy
 from bravewebcrawler_spark.plans.round import FRONTIER_SCHEMA, HOST_STATE_SCHEMA, dequeue
 
@@ -33,18 +34,47 @@ def test_q5_broadcasts_all_dimensions(spark, sf_dir):
 
 
 def test_dequeue_no_global_window_for_large_caps(spark):
-    frontier = spark.createDataFrame([], FRONTIER_SCHEMA)
+    # a non-empty frontier: with no rows there are no bound keys, the pid is
+    # a constant, and Spark plans that window over a single partition
+    frontier = spark.createDataFrame(
+        [
+            (f"https://host{i % 13}.example.ch/p{i}", i * 7919, f"host{i % 13}.example.ch",
+             f"/p{i}", float(i % 5), i % 3, 0, "seed", 0)
+            for i in range(60)
+        ],
+        FRONTIER_SCHEMA,
+    )
     hs = spark.createDataFrame([], HOST_STATE_SCHEMA)
     registry: list = []
-    # range-partitioned global rank at every cap (the default 200 included):
+    # the distributed global rank at every cap (the default 200 included):
+    # one hash exchange on the pid feeds the prefix window, global_prefix
+    # caches nothing (the one InMemoryRelation is the dequeue's survivors),
     # no driver-merge TakeOrdered, no single-partition window
     for policy in (CrawlPolicy(), CrawlPolicy(max_urls_per_round=100_000)):
         plan = _plan(dequeue(frontier, hs, policy, refill=True, cache_registry=registry))
+        assert len(re.findall(r"Exchange hashpartitioning\(__pid#", plan)) == 1, plan
+        assert plan.count("InMemoryRelation") == 1, plan
         assert "TakeOrderedAndProject" not in plan
-        assert "rangepartitioning" in plan.lower()
         assert "SinglePartition" not in plan
+    assert len(registry) == 2  # one survivors cache per dequeue call
     for cached in registry:
         cached.unpersist()
+
+
+def test_pack_sequences_shuffles_each_row_once(spark):
+    docs = spark.range(500).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 37 + 1).alias("n_tokens")
+    )
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = _plan(pack_sequences(docs, "doc_id", "n_tokens", 512))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old)
+    assert len(re.findall(r"\bExchange hashpartitioning\(__pid#", plan)) == 1, plan
+    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
+    assert len(re.findall(r"\bSort \[", plan)) == 1, plan
+    assert "InMemoryRelation" not in plan
 
 
 def test_band_pairs_join_once_with_no_pair_aggregate(spark):

@@ -41,12 +41,12 @@ def test_entry_smoke(spark):
 
 
 def test_no_residual_caches_after_cache_managed_queries(spark, sf_dir):
-    """Deterministic cache lifecycle (VERDICT r2 #6): the seven queries that
+    """Deterministic cache lifecycle (VERDICT r2 #6): the six queries that
     persist intermediates and release them in _materialize_and_release
     (the banded tables of the three band-pair operators, the clustered
-    corpus, the CC edge list and components, corpus_prep's uniq, corpus_pack's
-    range-partitioned rows) must leave the storage tab exactly as they
-    found it — no ContextCleaner reliance."""
+    corpus, the CC edge list and components, corpus_prep's uniq), and
+    corpus_pack, which persists nothing, must leave the storage tab exactly
+    as they found it — no ContextCleaner reliance."""
     import __spark_entry__ as E
 
     jsc = spark.sparkContext._jsc.sc()
@@ -104,3 +104,29 @@ def test_materialize_and_release_size_guard(spark, monkeypatch):
     assert out2.count() == 5
     assert "Scan parquet" not in out2._jdf.queryExecution().executedPlan().toString()
     assert len(exit_hooks) == 1  # no scratch dir, no hook
+
+
+def test_materialize_and_release_runs_the_plan_once(spark, monkeypatch):
+    """Each row of the result is computed once, whether it is collected or
+    spilled; a spilled result is never collected to the driver first."""
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as E
+
+    exit_hooks: list = []
+    monkeypatch.setattr(E.atexit, "register", exit_hooks.append)
+    for row_cap in (10, 1000):  # 100 rows: spill, then collect
+        evaluated = spark.sparkContext.accumulator(0)
+
+        @F.udf("long")
+        def touch(x):
+            evaluated.add(1)
+            return x
+
+        # the shuffle makes any pass over the result evaluate every row
+        df = spark.range(0, 100, 1, 4).select(touch("id").alias("id")).repartition(3)
+        out = E._materialize_and_release(df, [], row_cap=row_cap)
+        assert sorted(r["id"] for r in out.collect()) == list(range(100))
+        assert evaluated.value == 100, (row_cap, evaluated.value)
+    for hook in exit_hooks:
+        hook()

@@ -1,7 +1,8 @@
 """Ranking operators: salted == plain top-k (constant and per-key Column
 ``k``); the distributed global prefix sum (the dequeue's round cap and
-sequence packing, whose placement-freezing cache the caller owns through
-``cache_registry``) == the naive single-window running sum."""
+sequence packing; rows placed by sampled bound keys, nothing cached) == the
+naive single-window running sum, at any partition count and across a
+dropped cache."""
 
 from __future__ import annotations
 
@@ -52,21 +53,58 @@ def test_salted_equals_plain_topk_column_k(spark):
     assert not {key for key, _, _ in plain if key % 7 == 0}
 
 
-@pytest.mark.parametrize(
-    "n, weight",
-    [(30000, "1"), (30000, "h % 512"), (0, "1")],
-    ids=["rank", "tokens", "empty"],
-)
-def test_global_prefix_equals_naive_window(spark, n, weight):
-    df, weight = _df(spark, n), F.expr(weight)
-    order = [F.col("prio").desc(), F.col("h").asc(), F.col("id").asc()]
-    registry: list = []
-    got = {(r["id"], r["prefix"]) for r in global_prefix(df, order, weight, cache_registry=registry).collect()}
-    for cached in registry:
-        cached.unpersist()
-    w = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, -1)
-    expect = {
+_KEYS = {
+    "prio": lambda: [-F.col("prio"), F.col("h"), F.col("id")],
+    # 97 leading values: bounds share k0 and differ only in the string
+    "string": lambda: [F.col("key"), F.concat(F.lit("u"), F.col("id").cast("string"))],
+}
+
+
+def _naive_prefix(df, key, weight) -> set:
+    w = Window.orderBy(*key).rowsBetween(Window.unboundedPreceding, -1)
+    return {
         (r["id"], r["prefix"])
         for r in df.withColumn("prefix", F.coalesce(F.sum(weight).over(w), F.lit(0))).collect()
     }
-    assert got == expect and len(got) == n
+
+
+@pytest.mark.parametrize(
+    "n, weight, key, partitions",
+    [
+        (30000, "1", "prio", None),
+        (30000, "h % 512", "prio", None),
+        (0, "1", "prio", None),
+        (1, "h % 512", "prio", None),
+        (30000, "h % 512", "string", None),
+        (30000, "1", "prio", "1024"),
+    ],
+    ids=["rank", "tokens", "empty", "one_row", "string_tiebreak", "1024_partitions"],
+)
+def test_global_prefix_equals_naive_window(spark, n, weight, key, partitions):
+    df, weight, key = _df(spark, n), F.expr(weight), _KEYS[key]()
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        if partitions:
+            spark.conf.set("spark.sql.shuffle.partitions", partitions)
+        got = {(r["id"], r["prefix"]) for r in global_prefix(df, key, weight).collect()}
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert got == _naive_prefix(df, key, weight) and len(got) == n
+
+
+def test_global_prefix_is_placement_free(spark):
+    # nothing freezes the placement: collecting again after the caches are
+    # dropped and the partition count changed gives the same prefixes
+    df, key, weight = _df(spark, 20000), _KEYS["prio"](), F.expr("h % 512")
+    out = global_prefix(df, key, weight).select("id", "prefix")
+    first = sorted(out.collect())
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.catalog.clearCache()
+        spark.conf.set("spark.sql.shuffle.partitions", "5")
+        again = sorted(out.collect())
+        rebuilt = sorted(global_prefix(df, key, weight).select("id", "prefix").collect())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert first == again == rebuilt
+    assert {tuple(r) for r in first} == _naive_prefix(df, key, weight)

@@ -65,13 +65,10 @@ def test_pack_matches_sequential_prefix_sum(spark, sf_dir):
         "doc_id",
         F.size(F.filter(F.split("text", " "), lambda t: t != "")).cast("long").alias("n_tokens"),
     )
-    caches: list = []
     got = {
         r["doc_id"]: (r["pack_id"], r["pack_offset"])
-        for r in pack_sequences(docs, "doc_id", "n_tokens", budget, cache_registry=caches).collect()
+        for r in pack_sequences(docs, "doc_id", "n_tokens", budget).collect()
     }
-    for c in caches:
-        c.unpersist()
     rows = sorted(
         ((r["doc_id"], r["n_tokens"]) for r in docs.collect()),
         key=lambda t: (_u(t[0]), t[0]),
@@ -85,8 +82,7 @@ def test_pack_matches_sequential_prefix_sum(spark, sf_dir):
 
 def test_pack_invariant_to_partition_count(spark, sf_dir):
     """Pack assignment is a pure function of the data, not of where the
-    sampled range boundaries fall (the ``global_prefix`` determinism
-    argument)."""
+    sampled bound keys fall (the ``global_prefix`` determinism argument)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id",
         F.size(F.filter(F.split("text", " "), lambda t: t != "")).cast("long").alias("n_tokens"),
@@ -96,17 +92,9 @@ def test_pack_invariant_to_partition_count(spark, sf_dir):
     try:
         for n_part in ("3", "17"):
             spark.conf.set("spark.sql.shuffle.partitions", n_part)
-            caches: list = []
             results.append(
-                sorted(
-                    tuple(r)
-                    for r in pack_sequences(
-                        docs, "doc_id", "n_tokens", 512, cache_registry=caches
-                    ).collect()
-                )
+                sorted(tuple(r) for r in pack_sequences(docs, "doc_id", "n_tokens", 512).collect())
             )
-            for c in caches:
-                c.unpersist()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     assert results[0] == results[1]

@@ -7,8 +7,8 @@ Usage: python tools/capture_plans.py <out_dir> [query ...]
   (a plan present on one side only counts); exits 0 when all are identical
 
 For queries whose registry function EXECUTES during construction (the dedup
-family, corpus_prep, corpus_pack), the returned DataFrame is a materialized
-stub whose plan says nothing. For those the tool records the plan of every
+family, corpus_prep), the returned DataFrame is a materialized stub whose
+plan says nothing. For those the tool records the plan of every
 DataFrame the registry body hands to ``_materialize_and_release`` while it
 runs — the registry's own plans, caches included — one section per call.
 Iterative internals (connected-components rounds) have no single static plan;
@@ -19,10 +19,10 @@ re-plans from runtime statistics and stage completion order, and a cache
 filled before the capture prints its executed plan, so two captures of the
 same code could differ. The static plan is what a code change moves. The text
 is normalised (:func:`normalize`): expression ids, ``plan_id``s (the
-exchange ids), RDD ids and the random part of ``bwc-*`` scratch dirs become
-fixed tokens, so two captures of the same plans are identical — capture on
-two checkouts, then ``diff`` the two directories to check that a change
-leaves plans alone.
+exchange ids), RDD ids, lambda variable names (numbered per session) and
+the random part of ``bwc-*`` scratch dirs become fixed tokens, so two
+captures of the same plans are identical — capture on two checkouts, then
+``diff`` the two directories to check that a change leaves plans alone.
 """
 
 from __future__ import annotations
@@ -45,6 +45,7 @@ _VOLATILE = [
     (re.compile(r"#\d+"), "#N"),  # expression ids
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"\bx_\d+\b"), "x_N"),  # lambda variables
     (re.compile(r"(bwc-[a-z]+-)\w+"), r"\1*"),  # mkdtemp suffix
 ]
 
