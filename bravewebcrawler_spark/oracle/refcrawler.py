@@ -117,7 +117,7 @@ def crawl_oracle(web: SynthWeb, seeds: list[str], policy: CrawlPolicy) -> Oracle
             res.crawl_log.append((rnd, seq, canon, status, err[:30] if err else None))
             if status == "TIMEOUT":
                 # T2: transient — back into the frontier, retried later;
-                # NOT added to seen (the engine excludes it from seen_delta)
+                # NOT added to seen (the engine's round.seen_view excludes it)
                 frontier[canon] = (prio, depth, attempts + 1)
                 continue
             res.seen.add(canon)

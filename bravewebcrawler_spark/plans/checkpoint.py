@@ -3,10 +3,13 @@
 The reference flushes its buffered CSV sink every 5 items and can lose up to 4
 rows on a kill (brave_processor.py:316-323). The engine upgrades this to
 lose-nothing semantics with LSM-style commits whose size is bounded by the
-ROUND, not by total state:
+ROUND, not by total state. A committed round directory holds four tables:
+``crawl_log`` and ``host_state``, plus ``frontier`` and ``bloom`` on a
+compaction round or ``frontier_delta`` and ``bloom_delta`` on any other.
 
-  * ``seen``           — append-only: each round dir holds only that round's
-                         selected keys; the seen set is the union of dirs.
+  * ``crawl_log``      — append-only: one row per dequeued URL, ``(round,
+                         seq, url_canon, url_hash, status, error, spans)``;
+                         seen and documents are views of the union of dirs.
   * ``frontier``       — base + delta: a full snapshot every
                          ``policy.compact_every`` rounds (the "base"), and a
                          ``frontier_delta`` dir (only rediscovered/new rows,
@@ -19,8 +22,6 @@ ROUND, not by total state:
                          snapshot, overlaid with the newest delta row per
                          bucket since.
   * ``host_state``     — tiny (one row per host), full write each round.
-  * ``documents`` / ``crawl_log`` — per-round outputs (append-only by
-                         construction).
 
 A manifest file is committed LAST via an atomic rename — a round either
 fully exists or doesn't; the manifest records ``base_round`` so resume knows
@@ -43,6 +44,8 @@ from dataclasses import dataclass
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from bravewebcrawler_spark.plans.round import seen_view
 
 
 @dataclass(frozen=True)
@@ -88,8 +91,8 @@ def start_writes(
     state_dir: str, round_no: int, tables: dict[str, DataFrame], pool
 ) -> list:
     """Kick off table writes on ``pool`` and return their futures — lets the
-    caller overlap fetch-derived output writes with the discovery pipeline
-    (the two only share WARM caches, so concurrency is pure overlap). The
+    caller overlap a write over WARM caches (the round's ``host_state``) with
+    the discovery pipeline, so concurrency is pure overlap. The
     caller must ``result()`` every future before publishing the manifest.
     Each write runs with the caller's Spark local properties (job group, job
     tags), captured here, so its jobs are attributed like the caller's."""
@@ -133,10 +136,16 @@ def _manifest(state_dir: str, round_no: int) -> dict:
         return json.load(f)
 
 
-def load_seen(spark: SparkSession, state_dir: str, round_no: int) -> DataFrame:
-    """Union of all per-round seen deltas (append-only log)."""
-    paths = [os.path.join(round_dir(state_dir, r), "seen") for r in range(round_no + 1)]
+def load_log(spark: SparkSession, state_dir: str, round_no: int) -> DataFrame:
+    """Union of the ``crawl_log`` round tables of rounds ``0..round_no``."""
+    paths = [os.path.join(round_dir(state_dir, r), "crawl_log") for r in range(round_no + 1)]
     return spark.read.parquet(*paths)
+
+
+def load_seen(spark: SparkSession, state_dir: str, round_no: int) -> DataFrame:
+    """The seen view of every round table so far (column pruning reads only
+    the columns it needs)."""
+    return seen_view(load_log(spark, state_dir, round_no))
 
 
 def load_bloom(
@@ -160,8 +169,8 @@ def load_frontier(
 ) -> DataFrame:
     """The base round's snapshot folded over rounds ``base_round+1..round_no``.
 
-    Each round's rows leave by two anti-joins — its seen delta (the keys it
-    selected) and its frontier delta's keys — and the frontier delta, whose
+    Each round's rows leave by two anti-joins — the seen view of its
+    ``crawl_log`` and its frontier delta's keys — and the frontier delta, whose
     rows run_round already merged against their previous version, is
     appended. No broadcast hints: AQE picks broadcast only when a delta is
     genuinely small (see the matching note in plans/round.py)."""
@@ -169,7 +178,7 @@ def load_frontier(
     for r in range(base_round + 1, round_no + 1):
         rd = round_dir(state_dir, r)
         fdelta = spark.read.parquet(os.path.join(rd, "frontier_delta"))
-        removed = spark.read.parquet(os.path.join(rd, "seen")).select("url_hash")
+        removed = seen_view(spark.read.parquet(os.path.join(rd, "crawl_log"))).select("url_hash")
         frontier = (
             frontier.join(removed, "url_hash", "left_anti")
             .join(fdelta.select("url_hash"), "url_hash", "left_anti")

@@ -16,6 +16,7 @@ from __future__ import annotations
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -23,10 +24,10 @@ from pyspark.sql import functions as F
 from bravewebcrawler_spark.plans import checkpoint as ckpt
 from bravewebcrawler_spark.plans.policy import CrawlPolicy
 from bravewebcrawler_spark.plans.round import (
-    FRONTIER_SCHEMA,
     HOST_STATE_SCHEMA,
     SEEN_SCHEMA,
     admit_candidates,
+    documents_view,
     robots_df,
     run_round,
 )
@@ -117,9 +118,6 @@ def crawl(
         state["dead_letter"].write.mode("overwrite").parquet(os.path.join(state_dir, "dead_letter"))
 
     total_fetched = 0
-    from concurrent.futures import ThreadPoolExecutor
-
-    write_pool = ThreadPoolExecutor(max_workers=4, thread_name_prefix="bwc-write")
     for rnd in range(start_round, policy.max_rounds):
         if rnd > 0:
             # Round state from COMMITTED parquet (bounded lineage, O(delta)
@@ -128,105 +126,89 @@ def crawl(
             # full snapshot. Read only when a round will run on it.
             state = ckpt.load_state(spark, state_dir, rnd - 1)
         t0 = time.time()
-        out = run_round(
-            spark, web, state["frontier"], state["seen"], state["host_state"], robots, policy, rnd,
-            state["bloom"],
-        )
-        # Bookkeeping rides on the writes (zero extra jobs): the crawl_log
-        # write IS the warm+count job — an Observation on it yields
-        # (dequeued, fetched_ok, seen) while materializing the
-        # selected+fetched caches — and the frontier or frontier_delta write
-        # carries the frontier-size counts the same way. Ordering is still
-        # serial on purpose where caches are cold: Spark does not dedupe
-        # in-flight computation of a persisted partition, so parallel jobs
-        # over a cold cache would each recompute the dequeue+fetch chain
-        # (measured: 3x CPU + GC storm at local[32]).
-        obs_a = Observation()
-        log_obs = out["crawl_log"].observe(
-            obs_a,
-            F.count(F.lit(1)).alias("n"),
-            F.count_if(F.col("status") == "FETCHED_OK").alias("ok"),
-            # a TIMEOUT returns to the frontier, not to seen (plans/round.py)
-            F.count_if(F.col("status") != "TIMEOUT").alias("seen"),
-        )
-        ckpt.write_tables(state_dir, rnd, {"crawl_log": log_obs})
-        counts = obs_a.get
-        dequeued, fetched_ok = counts["n"], counts["ok"]
-        # remaining fetched-derived outputs need only warm caches — write
-        # them WHILE the discover→dedup→merge chain computes; pure overlap
-        early_futs = ckpt.start_writes(
-            state_dir, rnd,
-            {
-                "seen": out["seen_delta"],
-                "host_state": out["host_state"],
-                "documents": out["documents"],
-            },
-            write_pool,
-        )
-        # Commit O(delta): seen/bloom/frontier deltas every round; a full
-        # frontier+bloom snapshot every compact_every rounds bounds both the
-        # reconstruction read fan-in and the lazy cross-round plan depth.
-        is_compaction = rnd % max(policy.compact_every, 1) == 0
-        obs_b = Observation()
-        if is_compaction:
-            base_round = rnd
-            # The snapshot write materializes the whole discovery chain
-            # (additions, fdelta_tagged, bloom probe incl. bloom_delta) in
-            # dependency order; the bloom write after it is a warm scan.
-            # Written one at a time — concurrent writes over these COLD
-            # caches would duplicate the chain in flight.
-            snapshot = out["frontier"].observe(obs_b, F.count(F.lit(1)).alias("n"))
-            ckpt.write_tables(state_dir, rnd, {"frontier": snapshot})
-            ckpt.write_tables(
-                state_dir, rnd, {"bloom": out["bloom"].withColumn("round", F.lit(rnd))}
-            )
-            frontier_size = obs_b.get["n"]
-        else:
-            fdelta = (
-                out["fdelta_tagged"]
-                .observe(
-                    obs_b,
-                    F.count(F.lit(1)).alias("n"),
-                    F.count_if(F.col("__touched") == 1).alias("touched"),
+        # the round's caches and its input frontier (persisted on round 0
+        # only; a no-op on a frontier read from parquet) are released, and its
+        # side write joined, whether the round commits or raises
+        cached = [state["frontier"]]
+        try:
+            with ThreadPoolExecutor(max_workers=1, thread_name_prefix="bwc-write") as pool:
+                out = run_round(
+                    spark, web, state["frontier"], state["seen"], state["host_state"], robots,
+                    policy, rnd, state["bloom"], cache_registry=cached,
                 )
-                .drop("__touched")
-            )
-            # frontier_delta first and alone (cold chain — see above), then
-            # the bloom delta as a warm scan of its persisted buckets.
-            ckpt.write_tables(state_dir, rnd, {"frontier_delta": fdelta})
-            ckpt.write_tables(
-                state_dir, rnd, {"bloom_delta": out["bloom_delta"].withColumn("round", F.lit(rnd))}
-            )
-            # Exact new-frontier size WITHOUT scanning the frontier: selected
-            # rows leave (dequeued), touched rows move into the delta, the
-            # delta contributes all its rows.
-            b = obs_b.get
-            frontier_size += b["n"] - dequeued - b["touched"]
-        for f in early_futs:  # all tables durable before the manifest commit
-            f.result()
+                # Bookkeeping rides on the writes (zero extra jobs): an
+                # Observation on the crawl_log write — the job that warms the
+                # selected+fetched caches — yields (dequeued, fetched_ok, seen),
+                # and one on the frontier or frontier_delta write the
+                # frontier-size counts. Writes over COLD caches run one at a
+                # time on this thread: Spark does not dedupe in-flight
+                # computation of a persisted partition, so parallel jobs over a
+                # cold cache would each recompute the chain (measured: 3x CPU +
+                # GC storm at local[32]).
+                obs_a, obs_b = Observation(), Observation()
+                log = out["crawl_log"].observe(
+                    obs_a,
+                    F.count(F.lit(1)).alias("n"),
+                    F.count_if(F.col("status") == "FETCHED_OK").alias("ok"),
+                    F.count_if(F.col("status") != "TIMEOUT").alias("seen"),  # round.seen_view
+                )
+                ckpt.write_tables(state_dir, rnd, {"crawl_log": log})
+                # host_state, the one side write, reads only the warm selected
+                # cache: it runs WHILE the discover→dedup→merge chain computes
+                side = ckpt.start_writes(state_dir, rnd, {"host_state": out["host_state"]}, pool)
+                # Commit O(delta): frontier and bloom deltas every round; full
+                # snapshots every compact_every rounds bound both the
+                # reconstruction read fan-in and the lazy cross-round plan
+                # depth. The frontier (or delta) write materializes the whole
+                # discovery chain in dependency order; the bloom write after it
+                # is a warm scan of the persisted buckets.
+                is_compaction = rnd % max(policy.compact_every, 1) == 0
+                if is_compaction:
+                    base_round = rnd
+                    tables = {
+                        "frontier": out["frontier"].observe(obs_b, F.count(F.lit(1)).alias("n")),
+                        "bloom": out["bloom"].withColumn("round", F.lit(rnd)),
+                    }
+                else:
+                    tables = {
+                        "frontier_delta": out["fdelta_tagged"].observe(
+                            obs_b,
+                            F.count(F.lit(1)).alias("n"),
+                            F.count_if(F.col("__touched") == 1).alias("touched"),
+                        ).drop("__touched"),
+                        "bloom_delta": out["bloom_delta"].withColumn("round", F.lit(rnd)),
+                    }
+                for name, df in tables.items():  # one call each: traced apart
+                    ckpt.write_tables(state_dir, rnd, {name: df})
+                for f in side:  # all tables durable before the manifest commit
+                    f.result()
+        finally:
+            for df in cached:
+                df.unpersist()
 
+        counts, b = obs_a.get, obs_b.get
+        dequeued = counts["n"]
+        # A delta round's size comes WITHOUT scanning the frontier: selected
+        # rows leave (dequeued), touched rows move into the delta, the delta
+        # contributes all its rows.
+        frontier_size = b["n"] if is_compaction else frontier_size + b["n"] - dequeued - b["touched"]
         seen_size += counts["seen"]
         metrics = ckpt.RoundMetrics(
             round_no=rnd,
             dequeued=dequeued,
-            fetched_ok=fetched_ok,
+            fetched_ok=counts["ok"],
             frontier_size=frontier_size,
             seen_size=seen_size,
             wall_s=time.time() - t0,
         )
         # tables already written: publish manifest atomically (commit point)
         ckpt.publish_manifest(state_dir, rnd, metrics, base_round)
-        # the round's caches and its input frontier (persisted on round 0
-        # only; a no-op on a frontier read from parquet)
-        for df in (*out["_cached"], state["frontier"]):
-            df.unpersist()
         total_fetched += dequeued
         if dequeued == 0:
             break
         if stop_after_round is not None and rnd >= stop_after_round:
             break
 
-    write_pool.shutdown(wait=True)
     return {
         "last_round": ckpt.latest_round(state_dir),
         "total_dequeued": total_fetched,
@@ -235,12 +217,10 @@ def crawl(
 
 
 def read_outputs(spark: SparkSession, state_dir: str) -> dict[str, DataFrame]:
-    """Union of per-round outputs + final state of the newest committed round."""
+    """Every committed round's ``crawl_log`` and its documents view, plus the
+    state of the newest committed round (its ``seen`` is the log's seen view)."""
     last = ckpt.latest_round(state_dir)
     assert last is not None, "no committed rounds"
-    doc_paths = [os.path.join(ckpt.round_dir(state_dir, r), "documents") for r in range(last + 1)]
-    log_paths = [os.path.join(ckpt.round_dir(state_dir, r), "crawl_log") for r in range(last + 1)]
-    docs = spark.read.parquet(*doc_paths)
-    log = spark.read.parquet(*log_paths)
+    log = ckpt.load_log(spark, state_dir, last)
     st = ckpt.load_state(spark, state_dir, last)
-    return {"documents": docs, "crawl_log": log, **st}
+    return {"documents": documents_view(log), "crawl_log": log, **st}

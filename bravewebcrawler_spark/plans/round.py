@@ -7,7 +7,8 @@ the engine lifts it to sets: every round is one DataFrame job —
     frontier ──rank──► dequeue (politeness-budgeted, salted host windows)
         │                   │ mapInPandas fetch+parse (Arrow batches)
         │                   ▼
-        │              documents(spans) + crawl_log + seen'
+        │              crawl_log: one row per URL, status beside url_hash
+        │                   │ and spans; seen' and documents are views of it
         │                   │ explode outlinks → canonicalize → admit
         └──anti-join──► frontier'  (min-depth merge, dedup vs seen')
 
@@ -112,6 +113,21 @@ FETCHED_SCHEMA = T.StructType(
         T.StructField("outlinks", T.ArrayType(T.StringType()), True),
     ]
 )
+
+
+def seen_view(log: DataFrame) -> DataFrame:
+    """The URLs a ``crawl_log`` marks seen, as SEEN_SCHEMA columns. T2: a
+    TIMEOUT is transient — the URL returns to the frontier, not to seen."""
+    return log.where(F.col("status") != "TIMEOUT").select(
+        "url_canon", "url_hash", F.col("round").alias("round_seen")
+    )
+
+
+def documents_view(log: DataFrame) -> DataFrame:
+    """The pages a ``crawl_log`` fetched, as ``(doc_id, round, spans)``."""
+    return log.where(F.col("status") == "FETCHED_OK").select(
+        F.col("url_canon").alias("doc_id"), "round", "spans"
+    )
 
 
 def robots_df(spark: SparkSession, web: SynthWeb) -> DataFrame:
@@ -307,13 +323,15 @@ def run_round(
     policy: CrawlPolicy,
     round_no: int,
     bloom: DataFrame,
+    *,
+    cache_registry: list,
 ) -> dict[str, DataFrame]:
-    """Execute one round; returns O(delta) state updates + round outputs.
+    """Execute one round; returns O(delta) state updates + the round table.
 
     Commit-size contract (the 10^10-frontier design): everything a round
     WRITES is bounded by the round, not by total state —
-      * ``seen_delta``      — this round's selected keys only (TIMEOUTs
-        excluded: they return to the frontier),
+      * ``crawl_log``       — one row per dequeued URL; the round's seen
+        delta and documents are ``seen_view`` / ``documents_view`` of it,
       * ``bloom_delta``     — only buckets that received hashes,
       * ``fdelta_tagged``   — only rows whose key was (re)discovered this
         round, min-depth-merged against their current frontier version (the
@@ -323,7 +341,8 @@ def run_round(
     in-round consumers and the periodic compaction write; the caller
     (plans/crawl.py) reads next-round state from the committed parquet
     through ``checkpoint.load_state``, so lineage never chains through a
-    round's cached internals.
+    round's cached internals. Every frame the round persists goes into
+    ``cache_registry``; the caller unpersists them.
 
     The frontier split is two BROADCAST joins (selected keys <= round cap;
     discovered keys <= round fan-out), i.e. map-side filters — the frontier
@@ -333,10 +352,9 @@ def run_round(
     """
     from bravewebcrawler_spark.operators.seen import bloom_hits, bloom_insert_delta
 
-    # selected and fetched fan out into every downstream branch (seen, log,
-    # documents, host_state, frontier); persisting them makes the dequeue
-    # windows and the mapInPandas fetch run ONCE per round instead of once
-    # per state-table write. The caller unpersists after the round commit.
+    # selected and fetched fan out into every downstream branch (log,
+    # host_state, frontier); persisting them makes the dequeue windows and the
+    # mapInPandas fetch run ONCE per round instead of once per table write.
     #
     # CRITICAL for scaling: the cap keeps only the lowest pids of the global
     # order (all of a round's URLs can sit in one of them) — without
@@ -344,9 +362,8 @@ def run_round(
     # tasks and adding executors could not help. seq is already assigned, so
     # spreading by url_hash is free.
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cached: list[DataFrame] = []
     selected = (
-        dequeue(frontier, host_state, policy, refill=round_no > 0, cache_registry=cached)
+        dequeue(frontier, host_state, policy, refill=round_no > 0, cache_registry=cache_registry)
         .repartition(n_part, F.col("url_hash"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -356,6 +373,7 @@ def run_round(
         .mapInPandas(_fetch_parse_factory(web), schema=FETCHED_SCHEMA)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    cache_registry += [selected, fetched]
 
     # F18: error messages truncated to 30 chars in the log, never dropped
     # (brave_processor.py:179,198)
@@ -363,19 +381,12 @@ def run_round(
         F.lit(round_no).alias("round"),
         "seq",
         "url_canon",
+        "url_hash",
         "status",
         F.substring("error", 1, 30).alias("error"),
+        "spans",
     )
-    documents = fetched.where(F.col("status") == "FETCHED_OK").select(
-        F.col("url_canon").alias("doc_id"), F.lit(round_no).alias("round"), "spans"
-    )
-
-    # T2: a TIMEOUT is transient — the URL is NOT marked seen; it returns to
-    # the frontier below with attempts+1 and is retried on a later round.
-    seen_delta = fetched.where(F.col("status") != "TIMEOUT").select(
-        "url_canon", "url_hash", F.lit(round_no).alias("round_seen")
-    )
-    new_seen = seen.unionByName(seen_delta)
+    new_seen = seen.unionByName(seen_view(crawl_log))
 
     # token accounting: refill (rounds>0), then subtract this round's spend
     from bravewebcrawler_spark.operators.politeness import spend_tokens
@@ -423,7 +434,7 @@ def run_round(
         bloom, selected.select("url_hash"), policy.bloom_buckets, policy.bloom_m_bits
     )
     bloom_delta = bloom_delta.persist(StorageLevel.MEMORY_AND_DISK)
-    cached += [selected, fetched, bloom_delta]
+    cache_registry.append(bloom_delta)
     if policy.use_bloom:
         # hash-only membership probe: 12 bytes/candidate through Arrow, hit
         # hashes back. A bloom MISS is authoritative (no false negatives), so
@@ -435,7 +446,7 @@ def run_round(
         # scanned discovered twice more and built three broadcast relations,
         # a per-round serial cost no parallelism removes.
         discovered = discovered.persist(StorageLevel.MEMORY_AND_DISK)
-        cached.append(discovered)
+        cache_registry.append(discovered)
         hits = bloom_hits(
             discovered.select("url_hash"), new_bloom, policy.bloom_buckets, policy.bloom_m_bits
         )
@@ -470,7 +481,7 @@ def run_round(
     # frontier_delta, and the warm/metrics count) — persist it so the
     # explode→canonicalize→dedup chain runs once per round.
     additions = additions.persist(StorageLevel.MEMORY_AND_DISK)
-    cached.append(additions)
+    cache_registry.append(additions)
 
     # O(delta) frontier update: rows selected this round leave; rows whose
     # key was rediscovered (or timed out and re-enqueued) are merged against
@@ -500,18 +511,15 @@ def run_round(
         ),
         tag_col="__touched",
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    cached.append(fdelta_tagged)
+    cache_registry.append(fdelta_tagged)
     frontier_delta = fdelta_tagged.drop("__touched")
     new_frontier = untouched.unionByName(frontier_delta)
 
     return {
         "frontier": new_frontier,
         "fdelta_tagged": fdelta_tagged,
-        "seen_delta": seen_delta,
         "host_state": new_host_state,
         "bloom": new_bloom,
         "bloom_delta": bloom_delta,
-        "documents": documents,
         "crawl_log": crawl_log,
-        "_cached": cached,  # caller unpersists after commit
     }

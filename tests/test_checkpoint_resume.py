@@ -3,7 +3,12 @@ killed after round k and resumed equals the uninterrupted crawl bit-for-bit."""
 
 from __future__ import annotations
 
+import os
+import threading
 from dataclasses import replace
+
+import pytest
+from pyspark.sql import functions as F
 
 from bravewebcrawler_spark.plans import checkpoint as ckpt
 from bravewebcrawler_spark.plans.crawl import crawl, read_outputs
@@ -14,12 +19,23 @@ POLICY = CrawlPolicy(capacity=4.0, rate=2.0, max_urls_per_round=50, max_rounds=3
 WEB = SynthWeb(seed=99, n_hosts=15, pages_per_host=10, hot_hosts=2)
 
 
-def _log(spark, state_dir):
+def _views(spark, state_dir):
+    """The crawl log, the sorted seen URLs and one span digest per document,
+    in the form perfbench/run.py:engine_digests compares them."""
     out = read_outputs(spark, state_dir)
-    return sorted(
-        (r["round"], r["seq"], r["url_canon"], r["status"], r["error"])
-        for r in out["crawl_log"].collect()
+    nul = F.lit("\x00")
+    span_str = F.transform(
+        "spans",
+        lambda s: F.concat_ws("\x1f", s["kind"], F.coalesce(s["text"], nul),
+                              F.coalesce(s["media_ref"], nul), s["offset"].cast("string")),
     )
+    log = out["crawl_log"].select("round", "seq", "url_canon", "status", "error")
+    docs = out["documents"].select("doc_id", F.sha2(F.concat_ws("\x1e", span_str), 256))
+    return {
+        "log": sorted(tuple(r) for r in log.collect()),
+        "seen": sorted(r["url_canon"] for r in out["seen"].select("url_canon").collect()),
+        "docs": sorted(tuple(r) for r in docs.collect()),
+    }
 
 
 def _frontier(spark, state_dir):
@@ -33,13 +49,14 @@ def test_kill_resume_equals_uninterrupted(spark, tmp_path_factory):
     seeds = spark.createDataFrame(WEB.seed_urls(8), "seed_id string, url string")
     full_dir = str(tmp_path_factory.mktemp("full"))
     crawl(spark, WEB, seeds, POLICY, full_dir)
-    full = _log(spark, full_dir)
+    full = _views(spark, full_dir)
+    assert full["seen"] and full["docs"]
 
     kill_dir = str(tmp_path_factory.mktemp("killed"))
     crawl(spark, WEB, seeds, POLICY, kill_dir, stop_after_round=0)
     assert ckpt.latest_round(kill_dir) == 0  # committed exactly one round
     crawl(spark, WEB, seeds, POLICY, kill_dir, resume=True)
-    assert _log(spark, kill_dir) == full
+    assert _views(spark, kill_dir) == full
     assert _frontier(spark, kill_dir) == _frontier(spark, full_dir)
 
 
@@ -49,7 +66,8 @@ def test_frontier_size_arithmetic_matches_reconstruction(spark, tmp_path_factory
     the number must equal the actual reconstructed frontier's cardinality,
     and seen_size the committed seen set's. With compact_every=2 the rounds
     are compaction, delta, compaction, delta: a second base and a delta on
-    top of it are checked too."""
+    top of it are checked too, and each round directory holds exactly the
+    four tables of its kind."""
     seeds = spark.createDataFrame(WEB.seed_urls(8), "seed_id string, url string")
     d = str(tmp_path_factory.mktemp("fsize"))
     crawl(spark, WEB, seeds, replace(POLICY, compact_every=2, max_rounds=4), d)
@@ -62,12 +80,12 @@ def test_frontier_size_arithmetic_matches_reconstruction(spark, tmp_path_factory
         assert m["frontier_size"] == actual, (r, m["frontier_size"], actual)
         seen = ckpt.load_seen(spark, d, r).count()
         assert m["seen_size"] == seen, (r, m["seen_size"], seen)
+        kind = {"frontier", "bloom"} if base == r else {"frontier_delta", "bloom_delta"}
+        assert set(os.listdir(ckpt.round_dir(d, r))) == {"crawl_log", "host_state"} | kind
 
 
 def test_manifest_is_the_commit_point(spark, tmp_path_factory):
     """A round directory without a manifest is invisible to resume."""
-    import os
-
     seeds = spark.createDataFrame(WEB.seed_urls(8), "seed_id string, url string")
     d = str(tmp_path_factory.mktemp("manifesto"))
     crawl(spark, WEB, seeds, POLICY, d, stop_after_round=1)
@@ -79,7 +97,7 @@ def test_manifest_is_the_commit_point(spark, tmp_path_factory):
     crawl(spark, WEB, seeds, POLICY, d, resume=True)
     full_dir = str(tmp_path_factory.mktemp("full2"))
     crawl(spark, WEB, seeds, POLICY, full_dir)
-    assert _log(spark, d) == _log(spark, full_dir)
+    assert _views(spark, d) == _views(spark, full_dir)
     assert _frontier(spark, d) == _frontier(spark, full_dir)
 
 
@@ -120,3 +138,47 @@ def test_side_writes_carry_the_callers_job_group(spark, tmp_path_factory):
         spark.sparkContext._jsc.clearJobGroup()
     assert tracker.getJobIdsForGroup("bwc-crawl-group")
     assert set(tracker.getJobIdsForGroup(None)) - before == set()
+
+
+# Crash matrix: round 0 is a compaction round, round 1 a delta round.
+MATRIX_POLICY = replace(POLICY, max_rounds=2)
+CELLS = [(0, "frontier"), (0, "bloom"), (1, "crawl_log"), (1, "host_state"),
+         (1, "frontier_delta"), (1, "bloom_delta")]
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, tmp_path_factory):
+    seeds = spark.createDataFrame(WEB.seed_urls(8), "seed_id string, url string")
+    d = str(tmp_path_factory.mktemp("matrix_full"))
+    crawl(spark, WEB, seeds, MATRIX_POLICY, d)
+    return _views(spark, d), _frontier(spark, d)
+
+
+@pytest.mark.parametrize("rnd, table", CELLS)
+def test_resume_after_a_failed_table_write(spark, tmp_path_factory, monkeypatch, uninterrupted, rnd, table):
+    """Each table the loop writes fails once, in the round kind that writes
+    it. The failed round unpersists every frame it persisted and joins its
+    side-write pool before the error reaches the caller; the resumed
+    crawl's log, seen, documents and frontier equal the uninterrupted
+    crawl's."""
+    jsc = spark.sparkContext._jsc.sc()
+    before = {i.id() for i in jsc.getRDDStorageInfo()}
+    seeds = spark.createDataFrame(WEB.seed_urls(8), "seed_id string, url string")
+    d = str(tmp_path_factory.mktemp(f"cell_{table}"))
+    write = ckpt._write
+
+    def failing(rd, name, df):
+        if name == table and rd == ckpt.round_dir(d, rnd):
+            raise OSError(f"injected {name} write failure")
+        write(rd, name, df)
+
+    monkeypatch.setattr(ckpt, "_write", failing)
+    with pytest.raises(OSError, match=f"injected {table}"):
+        crawl(spark, WEB, seeds, MATRIX_POLICY, d)
+    assert ckpt.latest_round(d) == (rnd - 1 if rnd else None)
+    assert [t.name for t in threading.enumerate() if t.name.startswith("bwc-write")] == []
+    assert {i.id() for i in jsc.getRDDStorageInfo()} == before
+    monkeypatch.undo()
+    crawl(spark, WEB, seeds, MATRIX_POLICY, d, resume=True)
+    assert ckpt.latest_round(d) == MATRIX_POLICY.max_rounds - 1
+    assert (_views(spark, d), _frontier(spark, d)) == uninterrupted
