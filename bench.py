@@ -85,9 +85,7 @@ def bench_crawl(spark) -> dict:
     # Politeness budget: capacity 50 x 20k hosts = 1M > cap, so the cap
     # (not the budget) bounds the round. Bloom sized to the workload (~1.3M
     # keys over 2 rounds): 128 buckets x 2^18 bits = 4 MB at ~25 bits/key
-    # (k=7 -> FPR well under 1%; the bloom never decides membership). (At
-    # 10^10 keys: scale bloom_buckets, keep ~32 KB/bucket — one Arrow batch
-    # per task.)
+    # (k=7 -> FPR well under 1%; the bloom never decides membership).
     # SPARK_GRAFT_BENCH_SCALE multiplies the round size (seeds, cap,
     # politeness budget, bloom capacity) for the serial-floor amortization
     # datapoint: per-round fixed costs are level-independent, so efficiency

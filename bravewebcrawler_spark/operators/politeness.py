@@ -43,11 +43,16 @@ def spend_tokens(host_state: DataFrame, spends: DataFrame, policy: CrawlPolicy, 
     """New host_state after the round: refill then subtract per-host spends.
 
     ``spends``: (host, spent double). Full outer join keeps never-spending
-    tracked hosts and newly-seen hosts alike.
+    tracked hosts and newly-seen hosts alike. Only hosts with ``tokens <
+    capacity - rate`` are kept: every later round refills first, and a host
+    at or above that refills to ``capacity`` — the value
+    ``refilled_tokens`` gives a missing host.
     """
-    return host_state.join(spends, "host", "full").select(
-        "host",
-        (refilled_tokens(policy, refill) - F.coalesce(F.col("spent"), F.lit(0.0))).alias("tokens"),
+    tokens = refilled_tokens(policy, refill) - F.coalesce(F.col("spent"), F.lit(0.0))
+    return (
+        host_state.join(spends, "host", "full")
+        .select("host", tokens.alias("tokens"))
+        .where(F.col("tokens") < policy.capacity - policy.rate)
     )
 
 

@@ -2,9 +2,8 @@
 
 At a 10^10-entry frontier the exact seen table is ~80 GB of hashes; joining
 every discovered candidate against it each round is the dominant shuffle. The
-bloom layer cuts that: the filter is partitioned into ``n_buckets`` buckets
-co-partitioned with candidates on ``pmod(url_hash, n_buckets)``; membership
-testing is a per-bucket vectorized numpy pass inside ``applyInPandas``.
+bloom layer cuts that: a candidate's k bit positions are probed in a filter
+partitioned into ``n_buckets`` buckets on ``pmod(url_hash, n_buckets)``.
 
 CONTRACT (north rule / risk R3): the bloom NEVER decides membership. It
 splits candidates into
@@ -13,117 +12,87 @@ splits candidates into
 Seen-set equality with the oracle therefore holds bit-for-bit regardless of
 the false-positive rate; FPR only moves work between the two branches.
 
-Sizing (documented for the 10^10 case, BENCH/BASELINE.md): k=7 hashes at
-~9.6 bits/key → 1% FPR; 10^10 keys ⇒ ~12 GB of filter split over 1024
-buckets ≈ 12 MB/bucket — one Arrow batch per task, far under executor memory.
-Local tests use small m_bits to force false positives and prove the exact
-join still protects membership.
+Layout: the filter is append-only ``(bucket, word, bits)`` rows — bit ``p``
+of a bucket's ``m_bits`` lives in word ``p >> 6`` at bit ``p & 63``. OR is
+idempotent and commutative, so the current filter is any union of rows whose
+OR holds every inserted position: duplicate words are allowed, an insert
+never reads the filter (re-adding a hash is a no-op, which is what makes
+resume replays safe), and only a compaction collapses words with
+``bit_or``. Every step is a column expression; no Python runs.
 
-The per-bucket update is the partial/final UDAF pattern: new hashes are
-grouped with the bucket's current filter bytes, each task ORs its bits
-locally, and the updated bytes are the new state row (idempotent — re-adding
-a hash is a no-op, which is what makes resume replays safe).
+Sizing (documented for the 10^10 case, BENCH/BASELINE.md): k=7 hashes at
+~9.6 bits/key → 1% FPR. Local tests use small m_bits to force false
+positives and prove the exact join still protects membership.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-BLOOM_SCHEMA = "bucket int, filter binary"
+BLOOM_SCHEMA = "bucket int, word int, bits long"
 K_HASHES = 7
-
-
-def _bit_positions(hashes: np.ndarray, m_bits: int, k: int = K_HASHES) -> np.ndarray:
-    """(n, k) bit positions via double hashing of the 60-bit portable hash."""
-    h1 = hashes % np.int64(m_bits)
-    h2 = (hashes >> np.int64(17)) % np.int64(m_bits - 1) + 1  # never 0 mod m
-    i = np.arange(k, dtype=np.int64)
-    return (h1[:, None] + i[None, :] * h2[:, None]) % np.int64(m_bits)
-
-
-def _set_bits(filt: np.ndarray, pos: np.ndarray) -> None:
-    flat = pos.reshape(-1)
-    np.bitwise_or.at(filt, flat >> 3, (1 << (flat & 7)).astype(np.uint8))
-
-
-def _test_bits(filt: np.ndarray, pos: np.ndarray) -> np.ndarray:
-    """True where ALL k bits are set (bloom 'maybe seen')."""
-    bits = (filt[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
-    return bits.all(axis=1)
 
 
 def empty_bloom(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], BLOOM_SCHEMA)
 
 
-def bloom_insert_delta(
-    bloom: DataFrame, hashes: DataFrame, n_buckets: int, m_bits: int
-) -> tuple[DataFrame, DataFrame]:
-    """Dirty-bucket-only bloom update: ``(updated, full)``.
-
-    ``updated`` holds ONLY the buckets that received hashes this round — the
-    O(delta) rows a round commit writes; ``full`` is ``updated`` unioned with
-    the untouched buckets passing through JVM-side (no Arrow round-trip, no
-    rewrite). Funnelling every existing bucket through applyInPandas each
-    call would be O(total filter bytes) per round — at a 10^10 frontier a
-    per-round full-state rewrite.
-    """
-    tagged_new = hashes.select(
-        F.pmod(F.col("url_hash"), F.lit(n_buckets)).cast("int").alias("bucket"),
-        F.col("url_hash").alias("h"),
-        F.lit(None).cast("binary").alias("filter"),
+def _positions(hashes: DataFrame, n_buckets: int, m_bits: int) -> DataFrame:
+    """``(url_hash, i, bucket, word, mask)``: one row per hash and probe
+    ``i`` in ``0..K_HASHES-1``, by double hashing of the 60-bit portable
+    hash (``h2`` is never 0 mod ``m_bits``)."""
+    h = F.col("url_hash")
+    h1 = F.pmod(h, F.lit(m_bits))
+    h2 = F.pmod(F.shiftright(h, 17), F.lit(m_bits - 1)) + 1
+    p = F.pmod(h1 + F.col("i") * h2, F.lit(m_bits))
+    return hashes.select(
+        "url_hash", F.explode(F.sequence(F.lit(0), F.lit(K_HASHES - 1))).alias("i")
+    ).select(
+        "url_hash",
+        "i",
+        F.pmod(h, F.lit(n_buckets)).cast("int").alias("bucket"),
+        F.shiftright(p, 6).cast("int").alias("word"),
+        # F.shiftleft takes a literal shift only
+        F.call_function("shiftleft", F.lit(1).cast("long"), p.bitwiseAND(63).cast("int")).alias("mask"),
     )
-    dirty = tagged_new.select("bucket").distinct()
-    existing = bloom.select("bucket", F.lit(-1).cast("long").alias("h"), "filter")
-    existing_dirty = existing.join(F.broadcast(dirty), "bucket", "left_semi")
 
-    def update(pdf: pd.DataFrame) -> pd.DataFrame:
-        bucket = int(pdf["bucket"].iloc[0])
-        filt = np.zeros(m_bits // 8, dtype=np.uint8)
-        for b in pdf["filter"].dropna():
-            filt |= np.frombuffer(bytes(b), dtype=np.uint8)
-        hs = pdf.loc[pdf["h"] >= 0, "h"].to_numpy(dtype=np.int64)
-        if len(hs):
-            _set_bits(filt, _bit_positions(hs, m_bits))
-        return pd.DataFrame({"bucket": [bucket], "filter": [filt.tobytes()]})
 
-    updated = existing_dirty.unionByName(tagged_new).groupBy("bucket").applyInPandas(update, BLOOM_SCHEMA)
-    untouched = bloom.join(F.broadcast(dirty), "bucket", "left_anti")
-    return updated, updated.unionByName(untouched)
+def bloom_insert_delta(hashes: DataFrame, n_buckets: int, m_bits: int) -> DataFrame:
+    """The filter rows that set every position of ``hashes``: one row per
+    ``(bucket, word)`` they touch. Never reads the filter, so the delta is
+    bounded by the round's hashes."""
+    return (
+        _positions(hashes, n_buckets, m_bits)
+        .groupBy("bucket", "word")
+        .agg(F.bit_or("mask").alias("bits"))
+    )
+
+
+def collapse_bloom(bloom: DataFrame) -> DataFrame:
+    """One row per ``(bucket, word)``: the compaction snapshot."""
+    return bloom.groupBy("bucket", "word").agg(F.bit_or("bits").alias("bits"))
 
 
 def bloom_hits(hashes: DataFrame, bloom: DataFrame, n_buckets: int, m_bits: int) -> DataFrame:
-    """The ``url_hash`` values (ONLY) of ``hashes`` that the bloom flags
-    maybe-seen.
-
-    Rather than round-tripping every candidate COLUMN through Arrow, this
-    passes just (bucket, hash) — 12 bytes/row — and returns the hit hashes;
-    the caller splits the full candidate rows with JVM joins against this
-    (small) hit set. A miss is authoritative, a hit must be confirmed by the
-    exact anti-join.
-    """
-    cand = hashes.select(
-        F.pmod(F.col("url_hash"), F.lit(n_buckets)).cast("int").alias("__bucket"),
-        F.col("url_hash").alias("h"),
+    """The distinct ``url_hash`` values of ``hashes`` that the bloom flags
+    maybe-seen: those whose k positions all find a set bit. A miss is
+    authoritative, a hit must be confirmed by the exact anti-join. No
+    broadcast hint: AQE picks the join from the runtime sizes."""
+    pos = _positions(hashes, n_buckets, m_bits)
+    filt = bloom.select(
+        F.col("bucket").alias("__bucket"), F.col("word").alias("__word"), "bits"
     )
-    blm = bloom.withColumnRenamed("bucket", "__bucket")
-
-    def test(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return pd.DataFrame({"url_hash": pd.Series([], dtype="int64")})
-        hs = left["h"].to_numpy(dtype=np.int64)
-        if right.empty or right["filter"].dropna().empty:
-            return pd.DataFrame({"url_hash": pd.Series([], dtype="int64")})
-        filt = np.frombuffer(bytes(right["filter"].dropna().iloc[0]), dtype=np.uint8)
-        maybe = _test_bits(filt, _bit_positions(hs, m_bits))
-        return pd.DataFrame({"url_hash": hs[maybe]})
-
+    found = pos.join(
+        filt,
+        (pos["bucket"] == filt["__bucket"])
+        & (pos["word"] == filt["__word"])
+        & (filt["bits"].bitwiseAND(pos["mask"]) != 0),
+        "left_semi",
+    )
     return (
-        cand.groupBy("__bucket")
-        .cogroup(blm.groupBy("__bucket"))
-        .applyInPandas(test, "url_hash long")
+        found.groupBy("url_hash")
+        .agg(F.count_distinct("i").alias("__n"))
+        .where(F.col("__n") == K_HASHES)
+        .select("url_hash")
     )
-

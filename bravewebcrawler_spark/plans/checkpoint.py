@@ -17,11 +17,14 @@ compaction round or ``frontier_delta`` and ``bloom_delta`` on any other.
                          between. Current frontier = the base folded over
                          each later round r: drop r's seen keys and r's
                          delta keys, then union r's delta.
-  * ``bloom``          — dirty buckets only per round (with a ``round``
-                         column); current filter = the base round's full
-                         snapshot, overlaid with the newest delta row per
-                         bucket since.
-  * ``host_state``     — tiny (one row per host), full write each round.
+  * ``bloom``          — append-only ``(bucket, word, bits)`` rows: a
+                         ``bloom_delta`` holds the words a round's hashes
+                         set; current filter = the base round's collapsed
+                         snapshot unioned with the deltas since (a word may
+                         repeat; the probe ORs them).
+  * ``host_state``     — one row per host whose bucket a refill would not
+                         fill (a missing host is full), full write each
+                         round.
 
 A manifest file is committed LAST via an atomic rename — a round either
 fully exists or doesn't; the manifest records ``base_round`` so resume knows
@@ -43,7 +46,6 @@ from dataclasses import dataclass
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from bravewebcrawler_spark.plans.round import seen_view
 
@@ -151,17 +153,13 @@ def load_seen(spark: SparkSession, state_dir: str, round_no: int) -> DataFrame:
 def load_bloom(
     spark: SparkSession, state_dir: str, base_round: int, round_no: int
 ) -> DataFrame:
-    """Newest filter bytes per bucket: the base round's full snapshot
-    overlaid with the dirty-bucket deltas committed since; on the base
-    round itself, the snapshot as it is."""
+    """The filter rows: the base round's snapshot unioned with the deltas
+    committed since."""
     paths = [os.path.join(round_dir(state_dir, base_round), "bloom")] + [
         os.path.join(round_dir(state_dir, r), "bloom_delta")
         for r in range(base_round + 1, round_no + 1)
     ]
-    rows = spark.read.parquet(*paths)
-    if round_no == base_round:
-        return rows.select("bucket", "filter")
-    return rows.groupBy("bucket").agg(F.max_by("filter", "round").alias("filter"))
+    return spark.read.parquet(*paths)
 
 
 def load_frontier(

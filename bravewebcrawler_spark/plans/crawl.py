@@ -55,9 +55,7 @@ def initial_state(
 ) -> dict[str, DataFrame]:
     robots = robots_df(spark, web)
     valid, dead = validate_seeds(seeds)
-    frontier = admit_candidates(
-        valid.select("url", F.lit(0).alias("d0")), "d0", 0, robots, policy
-    )
+    frontier = admit_candidates(valid.select("url", F.lit(0).alias("d0")), "d0", 0, robots)
     # distinct canonical seeds (messy duplicates collapse); min-depth merge is
     # a no-op at depth 0 but reuses the shared rule
     from bravewebcrawler_spark.plans.round import merge_frontier
@@ -160,14 +158,14 @@ def crawl(
                 # snapshots every compact_every rounds bound both the
                 # reconstruction read fan-in and the lazy cross-round plan
                 # depth. The frontier (or delta) write materializes the whole
-                # discovery chain in dependency order; the bloom write after it
-                # is a warm scan of the persisted buckets.
+                # discovery chain in dependency order; the bloom write after
+                # it aggregates the warm selected cache.
                 is_compaction = rnd % max(policy.compact_every, 1) == 0
                 if is_compaction:
                     base_round = rnd
                     tables = {
                         "frontier": out["frontier"].observe(obs_b, F.count(F.lit(1)).alias("n")),
-                        "bloom": out["bloom"].withColumn("round", F.lit(rnd)),
+                        "bloom": out["bloom"],
                     }
                 else:
                     tables = {
@@ -176,7 +174,7 @@ def crawl(
                             F.count(F.lit(1)).alias("n"),
                             F.count_if(F.col("__touched") == 1).alias("touched"),
                         ).drop("__touched"),
-                        "bloom_delta": out["bloom_delta"].withColumn("round", F.lit(rnd)),
+                        "bloom_delta": out["bloom_delta"],
                     }
                 for name, df in tables.items():  # one call each: traced apart
                     ckpt.write_tables(state_dir, rnd, {name: df})

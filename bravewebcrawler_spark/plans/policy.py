@@ -52,6 +52,12 @@ class CrawlPolicy:
     # pre-check (brave_processor.py:94-102)
     use_relevance_gate: bool = False
 
+    def __post_init__(self) -> None:
+        # the engine caps depth where a page expands; seeds (depth 0) are
+        # admitted unchecked, which matches the oracle only for max_depth >= 0
+        if self.max_depth < 0:
+            raise ValueError(f"max_depth must be >= 0, got {self.max_depth}")
+
 
 def priority_py(host: str, path: str, depth: int) -> float:
     base = 2.0 if host.endswith(".ch") else 1.0

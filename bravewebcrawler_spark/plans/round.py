@@ -173,15 +173,16 @@ def robots_df(spark: SparkSession, web: SynthWeb) -> DataFrame:
     )
 
 
-def admit_candidates(raw_urls: DataFrame, depth_col: str, round_no: int, robots: DataFrame, policy: CrawlPolicy) -> DataFrame:
-    """Discovery-time shaping + filtering (blacklist P1, robots, depth cap).
+def admit_candidates(raw_urls: DataFrame, depth_col: str, round_no: int, robots: DataFrame) -> DataFrame:
+    """Discovery-time shaping + filtering (blacklist P1, robots).
 
-    ``raw_urls``: columns (url string, <depth_col> int). Returns FRONTIER_SCHEMA
-    rows. Everything is column expressions; robots is a broadcast left join.
+    ``raw_urls``: columns (url string, <depth_col> int), already within the
+    policy's ``max_depth`` (seeds sit at depth 0; run_round expands only
+    pages below the cap). Returns FRONTIER_SCHEMA rows. Everything is column
+    expressions; robots is a broadcast left join.
     """
     c = (
-        raw_urls.where(F.col(depth_col) <= policy.max_depth)
-        .withColumn("url_canon", canonicalize_url_col(F.col("url")))
+        raw_urls.withColumn("url_canon", canonicalize_url_col(F.col("url")))
         .withColumn("host", host_of_col(F.col("url")))
         .where((F.col("host") != "") & ~is_blacklisted_col(F.col("host")))
         .withColumn("path", path_of_col(F.col("url_canon")))
@@ -332,16 +333,17 @@ def run_round(
     WRITES is bounded by the round, not by total state —
       * ``crawl_log``       — one row per dequeued URL; the round's seen
         delta and documents are ``seen_view`` / ``documents_view`` of it,
-      * ``bloom_delta``     — only buckets that received hashes,
+      * ``bloom_delta``     — only the filter words the round's hashes set,
       * ``fdelta_tagged``   — only rows whose key was (re)discovered this
         round, min-depth-merged against their current frontier version (the
         ``frontier_delta`` table, plus a ``__touched`` tag for the caller's
         frontier-size arithmetic).
-    The full-state views (``frontier``/``bloom``) are lazy unions for
-    in-round consumers and the periodic compaction write; the caller
-    (plans/crawl.py) reads next-round state from the committed parquet
-    through ``checkpoint.load_state``, so lineage never chains through a
-    round's cached internals. Every frame the round persists goes into
+    The full-state views are lazy: ``frontier`` is a union for in-round
+    consumers and the periodic compaction write, ``bloom`` the collapsed
+    filter only that write reads. The caller (plans/crawl.py) reads
+    next-round state from the committed parquet through
+    ``checkpoint.load_state``, so lineage never chains through a round's
+    cached internals. Every frame the round persists goes into
     ``cache_registry``; the caller unpersists them.
 
     The frontier split is two BROADCAST joins (selected keys <= round cap;
@@ -350,7 +352,7 @@ def run_round(
     outgrows a broadcast (~100M+ keys/round), flip to a plain shuffle join
     for that round (AQE) — the commit stays O(delta) either way.
     """
-    from bravewebcrawler_spark.operators.seen import bloom_hits, bloom_insert_delta
+    from bravewebcrawler_spark.operators.seen import bloom_hits, bloom_insert_delta, collapse_bloom
 
     # selected and fetched fan out into every downstream branch (log,
     # host_state, frontier); persisting them makes the dequeue windows and the
@@ -399,7 +401,9 @@ def run_round(
     # contribute outlinks (the reference gates its expensive stage on the
     # relevance pre-check, brave_processor.py:94-102). The page itself is
     # still fetched, logged and kept as a document; only expansion is gated.
-    expanding = fetched.where(F.col("status") == "FETCHED_OK")
+    # the depth cap before the explode: a link sits one below its page, so a
+    # page at max_depth contributes no admissible link
+    expanding = fetched.where((F.col("status") == "FETCHED_OK") & (F.col("depth") < policy.max_depth))
     if policy.use_relevance_gate:
         from bravewebcrawler_spark.functions.relevance import is_generic_title_col
 
@@ -424,27 +428,21 @@ def run_round(
     # Raw forms that differ but canonicalize equal stay separate rows until
     # fdelta_tagged's merge below; a duplicate url_hash is harmless in the
     # bloom probe and the semi/anti joins.
-    discovered = admit_candidates(discovered_uniq, "link_depth", round_no + 1, robots, policy)
+    discovered = admit_candidates(discovered_uniq, "link_depth", round_no + 1, robots)
     # J2 dedup: the exact anti-join is always the authority; with use_bloom
     # the bucketed bloom splits candidates so only bloom HITS pay the join
     # against the (large) seen table (operators/seen.py, risk R3).
-    # bloom_delta holds ONLY the dirty buckets (the O(delta) write); the
-    # untouched buckets pass through JVM-side inside new_bloom.
-    bloom_delta, new_bloom = bloom_insert_delta(
-        bloom, selected.select("url_hash"), policy.bloom_buckets, policy.bloom_m_bits
-    )
-    bloom_delta = bloom_delta.persist(StorageLevel.MEMORY_AND_DISK)
-    cache_registry.append(bloom_delta)
+    # bloom_delta is the round's words only (the O(delta) write), an
+    # aggregate of the warm selected cache that the probe and the write each
+    # run; the current filter is the committed rows plus it, duplicates and all.
+    bloom_delta = bloom_insert_delta(selected.select("url_hash"), policy.bloom_buckets, policy.bloom_m_bits)
+    new_bloom = bloom.unionByName(bloom_delta)
     if policy.use_bloom:
-        # hash-only membership probe: 12 bytes/candidate through Arrow, hit
-        # hashes back. A bloom MISS is authoritative (no false negatives), so
-        # only hits need exact confirmation:
+        # A bloom MISS is authoritative (no false negatives), so only hits
+        # need exact confirmation:
         #   confirmed = hits ∩ seen        (two small sides)
-        #   new       = discovered ⟂ confirmed  (ONE broadcast anti-join)
-        # One anti-join scan of discovered plus the probe's hash-only scan,
-        # and ONE broadcast (≤ |hits|) — the earlier fresh/suspect split
-        # scanned discovered twice more and built three broadcast relations,
-        # a per-round serial cost no parallelism removes.
+        #   new       = discovered ⟂ confirmed  (ONE anti-join)
+        # One anti-join scan of discovered plus the probe's hash-only scan.
         discovered = discovered.persist(StorageLevel.MEMORY_AND_DISK)
         cache_registry.append(discovered)
         hits = bloom_hits(
@@ -519,7 +517,7 @@ def run_round(
         "frontier": new_frontier,
         "fdelta_tagged": fdelta_tagged,
         "host_state": new_host_state,
-        "bloom": new_bloom,
+        "bloom": collapse_bloom(new_bloom),
         "bloom_delta": bloom_delta,
         "crawl_log": crawl_log,
     }

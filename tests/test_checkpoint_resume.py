@@ -10,6 +10,7 @@ from dataclasses import replace
 import pytest
 from pyspark.sql import functions as F
 
+from bravewebcrawler_spark.functions.canon import host_of_col
 from bravewebcrawler_spark.plans import checkpoint as ckpt
 from bravewebcrawler_spark.plans.crawl import crawl, read_outputs
 from bravewebcrawler_spark.plans.policy import CrawlPolicy
@@ -46,18 +47,24 @@ def _frontier(spark, state_dir):
 
 
 def test_kill_resume_equals_uninterrupted(spark, tmp_path_factory):
+    """Two inputs: the default policy killed after round 0, and a bloom-on
+    crawl with compact_every=2 killed after its delta round 1, so the
+    resumed round 2 probes the loaded snapshot plus delta, then collapses
+    them into its compaction."""
     seeds = spark.createDataFrame(WEB.seed_urls(8), "seed_id string, url string")
-    full_dir = str(tmp_path_factory.mktemp("full"))
-    crawl(spark, WEB, seeds, POLICY, full_dir)
-    full = _views(spark, full_dir)
-    assert full["seen"] and full["docs"]
+    bloom_policy = replace(POLICY, use_bloom=True, bloom_buckets=8, bloom_m_bits=1 << 12, compact_every=2)
+    for policy, stop in ((POLICY, 0), (bloom_policy, 1)):
+        full_dir = str(tmp_path_factory.mktemp("full"))
+        crawl(spark, WEB, seeds, policy, full_dir)
+        full = _views(spark, full_dir)
+        assert full["seen"] and full["docs"]
 
-    kill_dir = str(tmp_path_factory.mktemp("killed"))
-    crawl(spark, WEB, seeds, POLICY, kill_dir, stop_after_round=0)
-    assert ckpt.latest_round(kill_dir) == 0  # committed exactly one round
-    crawl(spark, WEB, seeds, POLICY, kill_dir, resume=True)
-    assert _views(spark, kill_dir) == full
-    assert _frontier(spark, kill_dir) == _frontier(spark, full_dir)
+        kill_dir = str(tmp_path_factory.mktemp("killed"))
+        crawl(spark, WEB, seeds, policy, kill_dir, stop_after_round=stop)
+        assert ckpt.latest_round(kill_dir) == stop  # committed exactly stop + 1 rounds
+        crawl(spark, WEB, seeds, policy, kill_dir, resume=True)
+        assert _views(spark, kill_dir) == full
+        assert _frontier(spark, kill_dir) == _frontier(spark, full_dir)
 
 
 def test_frontier_size_arithmetic_matches_reconstruction(spark, tmp_path_factory):
@@ -82,6 +89,33 @@ def test_frontier_size_arithmetic_matches_reconstruction(spark, tmp_path_factory
         assert m["seen_size"] == seen, (r, m["seen_size"], seen)
         kind = {"frontier", "bloom"} if base == r else {"frontier_delta", "bloom_delta"}
         assert set(os.listdir(ckpt.round_dir(d, r))) == {"crawl_log", "host_state"} | kind
+
+
+def test_host_state_keeps_only_hosts_a_refill_would_not_fill(spark, tmp_path_factory):
+    """Each round's committed host_state holds exactly the hosts whose
+    tokens end below capacity - rate, with those tokens, replayed from the
+    committed crawl log; any other host refills to capacity, as a missing
+    one does."""
+    seeds = spark.createDataFrame(WEB.seed_urls(8), "seed_id string, url string")
+    d = str(tmp_path_factory.mktemp("hosts"))
+    crawl(spark, WEB, seeds, POLICY, d)
+    log = read_outputs(spark, d)["crawl_log"]
+    spent: dict[int, dict[str, int]] = {}
+    for r in log.groupBy("round", host_of_col(F.col("url_canon")).alias("host")).count().collect():
+        spent.setdefault(r["round"], {})[r["host"]] = r["count"]
+    tokens: dict[str, float] = {}
+    kept = left_out = 0
+    for rnd in range(ckpt.latest_round(d) + 1):
+        spends = spent.get(rnd, {})
+        start = {h: min(POLICY.capacity, tokens.get(h, POLICY.capacity) + POLICY.rate * (rnd > 0))
+                 for h in set(tokens) | set(spends)}
+        ended = {h: t - spends.get(h, 0) for h, t in start.items()}
+        tokens = {h: t for h, t in ended.items() if t < POLICY.capacity - POLICY.rate}
+        written = spark.read.parquet(os.path.join(ckpt.round_dir(d, rnd), "host_state")).collect()
+        assert len(written) == len(tokens)
+        assert {r["host"]: r["tokens"] for r in written} == tokens, rnd
+        kept, left_out = kept + len(tokens), left_out + len(ended) - len(tokens)
+    assert kept and left_out, (kept, left_out)
 
 
 def test_manifest_is_the_commit_point(spark, tmp_path_factory):

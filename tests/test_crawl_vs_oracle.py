@@ -77,11 +77,13 @@ def test_frontier_rest_matches(runs):
 
 def test_bloom_crawl_matches_oracle(spark, tmp_path_factory, runs):
     """use_bloom=True must be invisible to semantics (tiny filter → real
-    false positives → the exact-join authority is actually exercised)."""
+    false positives → the exact-join authority is actually exercised). With
+    compact_every=2, round 2 collapses the round-0 snapshot and two deltas
+    and round 3 probes the collapsed filter plus its own delta."""
     from dataclasses import replace
 
     oracle, _ = runs
-    policy = replace(POLICY, use_bloom=True, bloom_buckets=8, bloom_m_bits=1 << 12)
+    policy = replace(POLICY, use_bloom=True, bloom_buckets=8, bloom_m_bits=1 << 12, compact_every=2)
     state_dir = str(tmp_path_factory.mktemp("crawlstate_bloom"))
     seeds_df = spark.createDataFrame(WEB.seed_urls(12), "seed_id string, url string")
     crawl(spark, WEB, seeds_df, policy, state_dir)
@@ -92,6 +94,30 @@ def test_bloom_crawl_matches_oracle(spark, tmp_path_factory, runs):
     )
     assert got == sorted(oracle.crawl_log)
     assert {r["url_canon"] for r in eng["seen"].collect()} == oracle.seen
+
+
+def test_depth_cap_crawl_matches_oracle(spark, tmp_path_factory, runs):
+    """max_depth=1: seeds expand, their links do not. The engine caps depth
+    on the page before the outlink explode, the oracle on the link; seeds
+    pass unchecked, so a negative cap is refused."""
+    from dataclasses import replace
+
+    with pytest.raises(ValueError, match="max_depth"):
+        replace(POLICY, max_depth=-1)
+    policy = replace(POLICY, max_depth=1)
+    seeds = WEB.seed_urls(12)
+    oracle = crawl_oracle(WEB, [u for _, u in seeds], policy)
+    assert sorted(oracle.crawl_log) != sorted(runs[0].crawl_log), "cap did not bind"
+    state_dir = str(tmp_path_factory.mktemp("crawlstate_depth1"))
+    crawl(spark, WEB, spark.createDataFrame(seeds, "seed_id string, url string"), policy, state_dir)
+    eng = read_outputs(spark, state_dir)
+    got = sorted(
+        (r["round"], r["seq"], r["url_canon"], r["status"], r["error"])
+        for r in eng["crawl_log"].collect()
+    )
+    assert got == sorted(oracle.crawl_log)
+    assert {r["url_canon"] for r in eng["seen"].collect()} == oracle.seen
+    assert sorted(r["url_canon"] for r in eng["frontier"].collect()) == oracle.frontier_rest
 
 
 def test_some_real_crawling_happened(runs):

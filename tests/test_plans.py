@@ -11,7 +11,10 @@ from pyspark.sql import functions as F
 from bravewebcrawler_spark.operators import dedup as DD
 from bravewebcrawler_spark.operators.packing import pack_sequences
 from bravewebcrawler_spark.plans.policy import CrawlPolicy
-from bravewebcrawler_spark.plans.round import FRONTIER_SCHEMA, HOST_STATE_SCHEMA, dequeue
+from bravewebcrawler_spark.operators.seen import empty_bloom
+from bravewebcrawler_spark.plans.crawl import initial_state
+from bravewebcrawler_spark.plans.round import FRONTIER_SCHEMA, HOST_STATE_SCHEMA, dequeue, robots_df, run_round
+from bravewebcrawler_spark.sources.synthweb import SynthWeb
 
 
 def _plan(df) -> str:
@@ -127,3 +130,29 @@ def test_search_api_fetch_is_arrow_batched(spark):
     plan = _plan(search_candidates(df, "brave", "k", base_url="http://127.0.0.1:9/x"))
     assert "MapInPandas" in plan
     assert "BatchEvalPython" not in plan
+
+
+def test_round_runs_python_only_in_the_fetch(spark):
+    # the bloom insert and probe are column expressions: across every frame
+    # run_round returns, the one Python node is the fetch mapInPandas (no
+    # FlatMapGroupsInPandas / FlatMapCoGroupsInPandas), and the depth cap
+    # filters pages before the outlink explode, not links after it
+    web = SynthWeb(seed=42, n_hosts=20, pages_per_host=12, hot_hosts=2)
+    policy = CrawlPolicy(max_depth=3, use_bloom=True, bloom_buckets=8, bloom_m_bits=1 << 12)
+    seeds = spark.createDataFrame(web.seed_urls(12), "seed_id string, url string")
+    st = initial_state(spark, web, seeds, policy)
+    registry: list = []
+    out = run_round(spark, web, st["frontier"], st["seen"], st["host_state"], robots_df(spark, web),
+                    policy, 0, empty_bloom(spark), cache_registry=registry)
+    plans = {name: _plan(df) for name, df in out.items()}
+    for cached in registry:
+        cached.unpersist()
+    text = "\n".join(plans.values())
+    py_kinds = set(re.findall(r"\+- (?:\*\(\d+\) )?(\w*(?:Python|Pandas|InArrow)\w*)", text))
+    assert py_kinds == {"MapInPandas"}, py_kinds
+    assert len(set(re.findall(r"MapInPandas fetch_parse\(.*?\)#(\d+)", text))) == 1
+    lines = plans["fdelta_tagged"].splitlines()
+    explode = next(i for i, line in enumerate(lines) if "Generate explode(outlinks" in line)
+    below = next(line for line in lines[explode + 1 :] if "Filter" in line)
+    assert re.search(r"\(depth#\d+ < 3\)", below), below
+    assert not re.search(r"link_depth#\d+ <=", text)

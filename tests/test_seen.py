@@ -1,5 +1,6 @@
 """Bloom seen-set on the crawl's path (``bloom_insert_delta`` + ``bloom_hits``):
-no false negatives, exact-join authority, idempotent and O(delta) updates."""
+no false negatives, exact-join authority, idempotent and O(delta) updates,
+and words and hits equal to the NumPy byte-array twin (``tests/twins.py``)."""
 
 from __future__ import annotations
 
@@ -7,7 +8,14 @@ import random
 
 from pyspark.sql import functions as F
 
-from bravewebcrawler_spark.operators.seen import bloom_hits, bloom_insert_delta, empty_bloom
+from bravewebcrawler_spark.operators.seen import (
+    K_HASHES,
+    bloom_hits,
+    bloom_insert_delta,
+    collapse_bloom,
+    empty_bloom,
+)
+from tests import twins
 
 N_BUCKETS = 8
 M_BITS = 1 << 10  # deliberately tiny → forces false positives
@@ -18,25 +26,34 @@ def _hashes_df(spark, values):
 
 
 def _insert(spark, bloom, values):
-    """The full filter after folding ``values`` in (the crawl's ``new_bloom``)."""
-    return bloom_insert_delta(bloom, _hashes_df(spark, values), N_BUCKETS, M_BITS)[1]
+    """The filter after folding ``values`` in (the crawl's ``new_bloom``)."""
+    return bloom.unionByName(bloom_insert_delta(_hashes_df(spark, values), N_BUCKETS, M_BITS))
 
 
-def _filters(bloom):
-    return {r["bucket"]: bytes(r["filter"]) for r in bloom.collect()}
+def _words(bloom):
+    return {(r["bucket"], r["word"]): r["bits"] for r in collapse_bloom(bloom).collect()}
+
+
+def _twin_words(values):
+    return twins.bloom_words(twins.bloom_filters(values, N_BUCKETS, M_BITS, K_HASHES))
 
 
 def test_bloom_no_false_negatives(spark):
     rng = random.Random(42)
     inserted = [rng.randrange(0, 1 << 60) for _ in range(400)]
     other = [rng.randrange(0, 1 << 60) for _ in range(400)]
-    bloom = _insert(spark, empty_bloom(spark), inserted)
+    # two inserts: the probe reads a filter whose words repeat across rows
+    bloom = _insert(spark, _insert(spark, empty_bloom(spark), inserted[:250]), inserted[250:])
     hits = {r["url_hash"] for r in bloom_hits(_hashes_df(spark, inserted + other), bloom, N_BUCKETS, M_BITS).collect()}
     # every inserted hash MUST be flagged (no false negatives)
     assert set(inserted) <= hits
     # tiny filter → some false positives exist (so the exact join matters)
     fps = len(hits & set(other))
     assert 0 < fps < len(other)
+    # the same hits and the same bits as the byte-array filter
+    filters = twins.bloom_filters(inserted, N_BUCKETS, M_BITS, K_HASHES)
+    assert hits == twins.bloom_probe(filters, inserted + other, N_BUCKETS, M_BITS, K_HASHES)
+    assert _words(bloom) == twins.bloom_words(filters)
 
 
 def test_dedup_with_bloom_equals_exact_antijoin(spark):
@@ -58,27 +75,26 @@ def test_bloom_insert_idempotent(spark):
     vals = list(range(1000, 1100))
     b1 = _insert(spark, empty_bloom(spark), vals)
     b2 = _insert(spark, b1, vals)
-    assert _filters(b1) == _filters(b2)
+    assert _words(b1) == _words(b2)
 
 
 def test_bloom_insert_delta_touches_only_dirty_buckets(spark):
+    """The delta holds exactly the words the round's hashes set — one row
+    per word, none from the filter it is added to — and its plan reads the
+    hashes and nothing else."""
     rng = random.Random(3)
     # round 1 fills buckets 0-5; round 2 lands only in bucket 1 (existing)
-    # and bucket 7 (new), so buckets 0 and 2-5 must pass through untouched
+    # and bucket 7 (new)
     first = [rng.randrange(0, 1 << 56) * N_BUCKETS + b for b in range(6) for _ in range(20)]
     second = [rng.randrange(0, 1 << 56) * N_BUCKETS + b for b in (1, 7) for _ in range(20)]
     bloom = _insert(spark, empty_bloom(spark), first)
-    before = _filters(bloom)
-    assert set(before) == set(range(6))
 
-    updated, full = bloom_insert_delta(bloom, _hashes_df(spark, second), N_BUCKETS, M_BITS)
-    upd, after = _filters(updated), _filters(full)
-    assert set(upd) == {1, 7}
-    assert set(after) == set(before) | {7}
-    assert len(full.collect()) == len(after)  # one row per bucket
-    for b in after:
-        assert after[b] == (upd[b] if b in upd else before[b])
-    # the dirty bucket keeps every old bit and gains the new ones
-    old1, new1 = int.from_bytes(before[1], "little"), int.from_bytes(upd[1], "little")
-    assert old1 & new1 == old1 and new1 != old1
-    assert _filters(_insert(spark, empty_bloom(spark), first + second)) == after
+    delta = bloom_insert_delta(_hashes_df(spark, second), N_BUCKETS, M_BITS)
+    rows = {(r["bucket"], r["word"]): r["bits"] for r in delta.collect()}
+    assert len(rows) == delta.count()  # one row per word
+    assert rows == _twin_words(second)
+    assert {b for b, _ in rows} == {1, 7}
+    assert _words(bloom.unionByName(delta)) == _twin_words(first + second)
+
+    leaves = delta._jdf.queryExecution().optimizedPlan().collectLeaves()
+    assert leaves.size() == 1 and "url_hash" in leaves.apply(0).toString()

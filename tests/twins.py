@@ -1,17 +1,20 @@
-"""Column-expression reference twins of the engine's Arrow-batched passes.
+"""Reference twins of engine passes the tests compare against, value for value.
 
 The engine runs these computations as Arrow-batched Python passes
 (``functions/text.text_metrics_arrow``, the shingle kernels in
-``operators/dedup.py``) or as scale paths (LSH, bucketed near-dup). The column
-forms below are the references the tests compare them against, value for
-value: ``test_arrow_twins.py`` pins the text battery and the shingle passes to
+``operators/dedup.py``), as scale paths (LSH, bucketed near-dup) or as column
+expressions over a row layout (the bloom filter of ``operators/seen.py``).
+The column forms below are the references of the first two:
+``test_arrow_twins.py`` pins the text battery and the shingle passes to
 them, ``test_allpairs_oracles.py`` checks the all-pairs baselines against
 DuckDB and uses them as the exactness and recall oracles of the scale paths.
-None of them runs in the engine.
+The NumPy bloom kernels are the byte-array filter ``test_seen.py`` pins the
+engine's words and hits to. None of them runs in the engine.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -151,3 +154,46 @@ def dot_col(u: Column, v: Column) -> Column:
 
 def norm_col(u: Column) -> Column:
     return F.sqrt(dot_col(u, u))
+
+
+# ------------------------------------------------------------ bloom filter
+def bloom_bit_positions(hashes: np.ndarray, m_bits: int, k: int) -> np.ndarray:
+    """(n, k) bit positions via double hashing of the 60-bit portable hash."""
+    h1 = hashes % np.int64(m_bits)
+    h2 = (hashes >> np.int64(17)) % np.int64(m_bits - 1) + 1  # never 0 mod m
+    i = np.arange(k, dtype=np.int64)
+    return (h1[:, None] + i[None, :] * h2[:, None]) % np.int64(m_bits)
+
+
+def bloom_filters(hashes: list[int], n_buckets: int, m_bits: int, k: int) -> dict[int, np.ndarray]:
+    """One ``m_bits // 8``-byte filter per bucket ``hashes`` reach, bit ``p``
+    in byte ``p >> 3`` at bit ``p & 7``."""
+    hs = np.asarray(hashes, dtype=np.int64)
+    out = {}
+    for b in np.unique(hs % n_buckets):
+        filt = np.zeros(m_bits // 8, dtype=np.uint8)
+        flat = bloom_bit_positions(hs[hs % n_buckets == b], m_bits, k).reshape(-1)
+        np.bitwise_or.at(filt, flat >> 3, (1 << (flat & 7)).astype(np.uint8))
+        out[int(b)] = filt
+    return out
+
+
+def bloom_words(filters: dict[int, np.ndarray]) -> dict[tuple[int, int], int]:
+    """The non-zero 64-bit words of ``filters``, read as little-endian int64."""
+    return {
+        (b, int(w)): int(v)
+        for b, filt in filters.items()
+        for w, v in enumerate(filt.view("<i8"))
+        if v
+    }
+
+
+def bloom_probe(filters: dict[int, np.ndarray], hashes: list[int], n_buckets: int, m_bits: int, k: int) -> set[int]:
+    """The hashes whose k bits are ALL set in their bucket's filter."""
+    hs = np.asarray(hashes, dtype=np.int64)
+    hits = set()
+    for b, filt in filters.items():
+        mine = hs[hs % n_buckets == b]
+        pos = bloom_bit_positions(mine, m_bits, k)
+        hits |= {int(h) for h in mine[((filt[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1).all(axis=1)]}
+    return hits
